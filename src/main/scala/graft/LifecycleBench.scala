@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Lifecycle benchmark main — the measured cost basis the fold-cadence
@@ -37,14 +37,8 @@ object LifecycleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.localBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     // warmup (JVM/codegen startup off the first timed step)
     try Tables.nation(spark, sfDir).groupBy("n_regionkey").count().count()

@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 // scratch audit main (not part of the driver contract): list registered
 // queries whose physical plan contains a cartesian product
 object PlanSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Sessions.localBuilder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.registry.foreach { q =>
       try {

@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's recommended local session configuration —
-  * Bench, Verify, Profile and PlanDump all build from here so an engine-level
-  * conf decision (r21's AQE cached-plan sizing) exists exactly once instead
-  * of drifting per main. A production deployment sets the same confs on its
-  * own builder; nothing here is local[.]-specific.
+  * every main and the test suite build from here so an engine-level conf
+  * decision (r21's AQE cached-plan sizing) exists exactly once instead of
+  * drifting per main. A production deployment sets the same confs on its
+  * own builder; nothing here is local[.]-specific. The native functions and
+  * the as-of planner need no conf: `graft.plans.GraftExtensions` is service-
+  * loaded into every session.
   */
 object Sessions {
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -69,14 +68,14 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-level registration so `expr("graft_dot(a, b)")` resolves like a
-  * built-in (stays inside whole-stage codegen, unlike a Scala UDF).
+/** The library's native functions, resolvable by name like built-ins so
+  * `expr("graft_dot(a, b)")` stays inside whole-stage codegen (unlike a
+  * Scala UDF).
   */
 object GraftFunctions {
 
-  /** The library's native functions as SparkSessionExtensions function
-    * descriptions — one list feeding both [[register]] (runtime) and
-    * `graft.plans.GraftExtensions` (conf-time).
+  /** The native functions as SparkSessionExtensions function descriptions,
+    * which `graft.plans.GraftExtensions` injects into every session.
     */
   val descriptions: Seq[(org.apache.spark.sql.catalyst.FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
@@ -117,10 +116,4 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"graft gram functions need a literal int size argument, got $other")
   }
-
-  def register(spark: SparkSession): Unit =
-    descriptions.foreach { case (ident, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
-    }
 }

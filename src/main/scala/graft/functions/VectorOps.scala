@@ -18,12 +18,11 @@ import graft.Tables
   */
 object VectorOps {
 
-  /** Spark-side: embeddings with the vector as Array[Double] plus its norm.
-    * Registers [[DotProduct]] first — every vector query chains from here, so
-    * downstream `expr("graft_dot(...)")` always resolves.
+  /** Spark-side: embeddings with the vector as Array[Double] plus its norm
+    * (`graft_dot`, [[DotProduct]], which every session resolves through
+    * `graft.plans.GraftExtensions`).
     */
   def normalized(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .select(
         col("vec_id"),
@@ -36,7 +35,6 @@ object VectorOps {
     * next to the vector so it can push to the scan / live in the index.
     */
   def normalizedMeta(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .select(
         col("vec_id"), col("label"),

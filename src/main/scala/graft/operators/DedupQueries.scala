@@ -45,7 +45,6 @@ object DedupQueries {
     * before the shingle compute.
     */
   private def shingled(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), expr(shingleExpr).as("sh"))
@@ -100,7 +99,6 @@ object DedupQueries {
     * the hamming-block pair search.
     */
   private def simhashVotes(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // compute-bound map stage (one md5 per shingle + 8 nibble decodes):
     // spread rows across cores first — a small hot file is one byte-split,
     // which would leave the whole hash pass on a single task. Sub-3-token
@@ -152,7 +150,6 @@ object DedupQueries {
     * surviving into a candidate pair.
     */
   private[graft] def minhashPairs(docsIn: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsIn.sparkSession)
     // docs under 3 tokens have no shingles: per-document banding can never
     // pair them (and DuckDB's empty shingle list agrees), so the collapse
     // must not emit intra-group jac-1.0 pairs for short exact dups either —
@@ -341,7 +338,6 @@ object DedupQueries {
     * would otherwise run on one task (one byte-split).
     */
   private[graft] def signaturesOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .filter(size(split(col("text"), " ")) >= 3)
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
@@ -1458,7 +1454,6 @@ object DedupQueries {
     GQuery(
       "dedup_incremental",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val thr = broadcast(d.agg(
           expr("CAST((max(doc_id) + 1) * 4 div 5 AS BIGINT)").as("thr")))
@@ -1786,7 +1781,6 @@ object DedupQueries {
     GQuery(
       "dedup_edit_distance",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, dir)
           .filter(length(col("text")) >= 5)
           .repartition(s.sparkContext.defaultParallelism)
@@ -1877,7 +1871,6 @@ object DedupQueries {
     GQuery(
       "dedup_substring",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val MinShared = 3
         // one digest pass total: frequency filter, both join sides, and the
         // per-doc gram counts all read the same 2-col (doc, digest) table.

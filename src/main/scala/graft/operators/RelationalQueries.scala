@@ -760,7 +760,7 @@ object RelationalQueries {
 
     // ---- the SAME as-of join through the native operator --------------------
     // graft.plans.AsofJoin: custom LogicalPlan + SparkStrategy + SparkPlan
-    // (registered via SparkSessionExtensions / Asof.register). Children are
+    // (installed in every session by GraftExtensions). Children are
     // hash-clustered by key and sorted (key, time) — EnsureRequirements
     // plans one exchange + sort per side — then each partition merges in a
     // single forward pass holding ONE buffered snapshot row: no null-padded

@@ -615,7 +615,7 @@ object SimilarityQueries {
     */
   private def rpProjected(s: SparkSession, dir: String): DataFrame = {
     val signs = rpSigns(s)
-    val e = VectorOps.normalized(s, dir) // registers graft_dot
+    val e = VectorOps.normalized(s, dir)
     val comps = (0 until RP_DIM).map(r => call_function("graft_dot", col("v"), typedlit(signs(r))))
     e.select(col("vec_id"), array(comps: _*).as("pv"))
       .withColumn("pn", expr(s"sqrt(${VectorOps.dotExpr("pv", "pv")})"))
@@ -1313,7 +1313,6 @@ object SimilarityQueries {
   def appendIvfIndex(
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
       nSeeds: Int = N_SEEDS, trained: Boolean = false): Unit = {
-    graft.functions.GraftFunctions.register(s)
     // an empty batch is a clean no-op — committing it would land an
     // EMPTY cell-partitioned delta dir (a dynamic-partition write with
     // zero rows produces no schema-bearing file), which every later
@@ -1638,7 +1637,6 @@ object SimilarityQueries {
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
       hwm: Option[(String, Long)],
       nSeeds: Int = N_SEEDS, trained: Boolean = false): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val ids = graft.sources.Tombstones.requireUniqueBatchIds(
       newRows, "vec_id", "bufferIvfUpdate")
     // every IVF batch row is a replacement row, so the batch id list IS
@@ -1940,7 +1938,6 @@ object SimilarityQueries {
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
       hwm: Option[(String, Long)], nBuckets: Long = KNN_BUCKETS): Unit = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // empty batch = clean no-op: an empty bucket-partitioned delta dir
     // has no schema-bearing file and would brick every later delta read
     if (newRows.isEmpty) return
@@ -2881,10 +2878,6 @@ object SimilarityQueries {
     if (!graft.sources.Tombstones.fenceAdmits(
         s, path, batchId, streamId, "ingestPqBatch")) false
     else {
-      // the encode pass below plans graft_dot (pqDistExpr) — a fresh
-      // session ingesting against an already-built index must not depend
-      // on some earlier probe having registered it
-      graft.functions.GraftFunctions.register(s)
       val ids = graft.sources.Tombstones.requireUniqueBatchIds(
         newRows, "vec_id", "ingestPqBatch")
       // a deleted id may not re-enter before a fold (review-found: PQ/SQ

@@ -970,14 +970,12 @@ object TextQueries {
     * lambda it replaced, minus the interpreted higher-order function.
     */
   private def gram8Rows(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 8)
       .select(col("doc_id"), explode(expr("graft_gram_md5(toks, 8)")).as("g"))
   }
 
   private[graft] def winnowSelected(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = Window.partitionBy("doc_id").orderBy("p").rowsBetween(0, WINNOW_W - 1)
     docs
       .select(col("doc_id"), expr(toksCol).as("toks"))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftInternalAccess, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftInternalAccess, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -31,8 +31,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *
   * Null semantics match SQL join conditions: a null key or null time on
   * either side never matches (left rows still emit, null-padded).
-  * Registration: [[GraftExtensions]] for `spark.sql.extensions` deployments,
-  * [[Asof.register]] for runtime injection; [[Asof.join]] is the user API.
+  * Installed in every session by [[GraftExtensions]]; [[Asof.join]] is the
+  * user API.
   */
 case class AsofJoin(
     left: LogicalPlan,
@@ -232,14 +232,15 @@ object AsofFilterPushdown extends org.apache.spark.sql.catalyst.rules.Rule[Logic
   }
 }
 
-/** `spark.sql.extensions` entry point: configure
-  * `spark.sql.extensions=graft.plans.GraftExtensions` and every session in
-  * the deployment plans as-of joins natively AND resolves the library's
-  * native functions (graft_dot, graft_minhash) without any per-session
-  * register call. (The test suite's shared session is built through this
-  * path; `GraftFunctions.register` remains the runtime alternative.)
+/** The engine's one installation path: the strategy and rule above plus the
+  * native functions of `graft.functions.GraftFunctions`. Listed under
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` applies it to every session built with these
+  * classes on the classpath — a bare `SparkSession.builder()`, a spark-shell
+  * session and `newSession()` children alike — with no conf and no call.
+  * Do not also name it in `spark.sql.extensions`: that installs it twice.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
     ext.injectOptimizerRule(_ => AsofFilterPushdown)
@@ -249,17 +250,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 /** User API for the native as-of join. */
 object Asof {
-
-  /** Idempotently add the planner strategy to an already-running session —
-    * the runtime alternative to the `spark.sql.extensions` conf.
-    */
-  def register(spark: SparkSession): Unit = synchronized {
-    val em = spark.experimental
-    if (!em.extraStrategies.contains(AsofJoinStrategy))
-      em.extraStrategies = em.extraStrategies :+ AsofJoinStrategy
-    if (!em.extraOptimizations.contains(AsofFilterPushdown))
-      em.extraOptimizations = em.extraOptimizations :+ AsofFilterPushdown
-  }
 
   /** As-of backward join: for each left row, the right row with the
     * greatest `rightTimeCol` at-or-before `leftTimeCol` within the same
@@ -277,7 +267,6 @@ object Asof {
       rightTimeCol: String,
       inner: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(plan: LogicalPlan, name: String): Attribute =

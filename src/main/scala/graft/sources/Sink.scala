@@ -158,51 +158,15 @@ object Sink {
     }
   }
 
-  /** Small-file compaction: rewrite a parquet directory into
-    * ceil(bytes / targetMb) files, optionally sorted so min/max row-group
-    * stats tighten for later predicate pushdown. The standard maintenance
-    * pass after high-frequency incremental appends — at 100 TB, scan cost is
-    * dominated by file count and stats quality, not raw bytes.
+  /** O11: DEFLATE the sink output, streamed file-by-file (app.py:54-65).
+    * `dir` must be an existing local directory: anything else (a missing
+    * path, a file, a non-local URI) throws instead of writing an empty zip.
     */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      targetMb: Int = 128,
-      sortCols: Seq[String] = Nil): Long = {
-    val bytes = dirSizeBytes(spark, path)
-    val nFiles = math.max(1L, (bytes + (targetMb.toLong << 20) - 1) / (targetMb.toLong << 20))
-    val df = spark.read.parquet(path)
-    val arranged =
-      if (sortCols.nonEmpty)
-        df.repartition(nFiles.toInt)
-          .sortWithinPartitions(sortCols.map(org.apache.spark.sql.functions.col): _*)
-      else df.repartition(nFiles.toInt)
-    val tmp = s"$path.compact-tmp"
-    arranged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    // guard before the destructive swap: the rewrite must carry every row
-    val before = df.count()
-    val after = spark.read.parquet(tmp).count()
-    if (after != before) {
-      val fs0 = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs0.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      throw new IllegalStateException(s"compact row mismatch: $before -> $after")
-    }
-    // swap via rename (same filesystem); tmp still holds the data if the
-    // delete succeeds but the rename doesn't
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path)))
-      throw new IllegalStateException(s"compact swap failed; data preserved at $tmp")
-    nFiles
-  }
-
-  /** O11: DEFLATE the sink output, streamed file-by-file (app.py:54-65). */
   def zipDirectory(dir: String, zipPath: String): String = {
+    val base = new File(dir)
+    require(base.isDirectory, s"zip source is not an existing local directory: $dir")
     val zos = new ZipOutputStream(new FileOutputStream(zipPath))
     try {
-      val base = new File(dir)
       def add(f: File, prefix: String): Unit =
         if (f.isFile) {
           zos.putNextEntry(new ZipEntry(prefix + f.getName))
@@ -215,7 +179,7 @@ object Sink {
           zos.closeEntry()
         } else Option(f.listFiles()).getOrElse(Array.empty)
           .foreach(c => add(c, prefix + f.getName + "/"))
-      Option(base.listFiles()).getOrElse(Array.empty).foreach(add(_, ""))
+      base.listFiles().foreach(add(_, ""))
       zipPath
     } finally zos.close()
   }

@@ -44,7 +44,6 @@ object EmbeddingsStream {
   def runAnnProbe(
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
       outPath: String, checkpoint: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val q = readVectors(spark, inPath)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -82,7 +81,6 @@ object EmbeddingsStream {
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
       checkpoint: String, foldEvery: Int = 0,
       leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val q = readVectors(spark, inPath)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -119,7 +117,6 @@ object EmbeddingsStream {
       spark: SparkSession, dir: String, inPath: String, graphPath: String,
       checkpoint: String, foldEvery: Int = 0,
       leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val q = readVectors(spark, inPath)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -152,7 +149,6 @@ object EmbeddingsStream {
   def runCrossmodalProbe(
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
       outPath: String, checkpoint: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val q = readVectors(spark, inPath)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -184,7 +180,6 @@ object EmbeddingsStream {
   def runGraphBeamProbe(
       spark: SparkSession, dir: String, inPath: String, graphPath: String,
       outPath: String, checkpoint: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val q = readVectors(spark, inPath)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -214,7 +209,6 @@ object EmbeddingsStream {
   def runSemanticDedup(
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
       outPath: String, checkpoint: String, tau: Double): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val q = readVectors(spark, inPath)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -247,7 +241,6 @@ object EmbeddingsStream {
   def runSemanticDecontam(
       spark: SparkSession, dir: String, inPath: String,
       outPath: String, checkpoint: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val eval = SimilarityQueries.decontamEvalSet(spark, dir)
     val q = readVectors(spark, inPath)
       .writeStream

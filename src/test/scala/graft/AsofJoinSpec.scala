@@ -197,8 +197,8 @@ class AsofJoinSpec extends SparkSpec {
 
   test("SparkSessionExtensions path plans the node without runtime registration") {
     // a fresh child session gets a FRESH (empty) experimental-strategies
-    // list but keeps the extensions the suite's builder injected — so
-    // planning a hand-built AsofJoin node here proves the extensions path
+    // list but keeps the service-loaded extensions — so planning a
+    // hand-built AsofJoin node here proves the extensions path
     val s2 = spark.newSession()
     assert(!s2.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
     import s2.implicits._

@@ -11,7 +11,6 @@ class MinhashWindowsSpec extends SparkSpec {
 
   test("graft_minhash equals the composable array_min form") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val docs = (1 to 50).map { i =>
       (i.toLong, (1 to (i % 7) + 1).map(j => s"token$i-$j word").mkString(" "))
     }.toDF("id", "text")
@@ -27,7 +26,6 @@ class MinhashWindowsSpec extends SparkSpec {
 
   test("graft_minhash edge shapes: empty array, nulls, short digests") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq(
       (1L, Seq.empty[String]),           // → 8 nulls (like array_min of empty)
       (2L, Seq(null.asInstanceOf[String], "0123456789abcdef0123456789abcdef")),
@@ -41,7 +39,6 @@ class MinhashWindowsSpec extends SparkSpec {
   }
 
   test("graft_minhash codegens when not collapsed into a lambda projection") {
-    graft.functions.GraftFunctions.register(spark)
     // CollapseProject merges it with the digest transform in the dedup
     // pipeline, and higher-order lambdas force that merged projection to
     // interpreted mode — the fusion win there is the single array pass.
@@ -71,7 +68,6 @@ class DotProductSpec extends SparkSpec {
     "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, p) -> acc + p)"
 
   test("graft_dot equals the zip_with/aggregate fold bit-for-bit") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val rows = Seq.fill(200)((
@@ -87,7 +83,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot handles length mismatch and nulls") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0, 3.0), Array(10.0, 20.0)))
       .toDF("a", "b")
@@ -97,10 +92,13 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("native functions resolve in SQL via the extensions path alone") {
-    // newSession() keeps the GraftExtensions wiring but drops any temp
-    // functions earlier tests registered — SQL resolution here proves the
-    // spark.sql.extensions deployment path, not a register() side effect
+    // a newSession() child has its own function registry, seeded only by
+    // the service-loaded GraftExtensions — every native function must
+    // resolve there, and the two below must also run through SQL
     val fresh = spark.newSession()
+    val missing = GraftFunctions.descriptions.map(_._1.funcName)
+      .filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"unresolved in a child session: $missing")
     val row = fresh.sql(
       "SELECT graft_dot(array(1d, 2d), array(3d, 4d)) AS d, " +
         "graft_minhash(array(md5('hello world'), md5('world hello'))) AS mh")

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions.{col, expr, length, size, split}
 class GramDigestsSpec extends SparkSpec {
 
   private def docs = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"), col("text"))
   }
@@ -85,7 +84,6 @@ class GramDigestsSpec extends SparkSpec {
 
   test("edge shapes: fewer tokens than k is empty, short text is null") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val r = Seq((1L, Seq("a", "b"), "abcd")).toDF("id", "toks", "text")
       .selectExpr("graft_gram_md5(toks, 3) AS g", "graft_gram_md5_long(toks, 3) AS gl",
         "graft_min_gram_md5(text, 5) AS m")

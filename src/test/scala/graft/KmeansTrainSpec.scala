@@ -26,7 +26,6 @@ class KmeansTrainSpec extends SparkSpec {
     */
   private def clusteredCorpus: DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val centers = Array.fill(N_CLUSTERS, DIM)(rnd.nextDouble() * 2 - 1)
     val rows = (0 until N_VECS).map { i =>
@@ -137,7 +136,6 @@ class KmeansTrainSpec extends SparkSpec {
     // same loop exhausts its budget without converging (movement plateaus
     // ~46M nano — the measured note at ann_pq_trained_conv).
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     // [subspace][cluster][dim] centers; point i's subspace ss ~ cluster i%8
     val centers = Array.fill(8, 8, 8)(rnd.nextDouble() * 2 - 1)
@@ -161,7 +159,6 @@ class KmeansTrainSpec extends SparkSpec {
 
   test("PQ convergence trainer fails loudly on an empty corpus") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val empty = Seq.empty[(Long, Int, Seq[Double])].toDF("vec_id", "ss", "sv")
     val e = intercept[IllegalArgumentException] {
       SimilarityQueries.trainedCentsConv(empty)

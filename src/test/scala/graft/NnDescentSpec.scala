@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GraftFunctions, VectorOps}
+import graft.functions.VectorOps
 import graft.operators.SimilarityQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -29,7 +29,6 @@ class NnDescentSpec extends SparkSpec {
     */
   private def clusteredCorpus: DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(5)
     val centers = Array.fill(N_CLUSTERS, DIM)(rnd.nextDouble() * 2 - 1)
     val rows = (0 until N_VECS).map { i =>

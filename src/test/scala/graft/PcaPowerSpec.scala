@@ -22,7 +22,6 @@ class PcaPowerSpec extends SparkSpec {
     */
   private def plantedCorpus: (DataFrame, Array[Double]) = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(23)
     val raw = Array.fill(DIM)(rnd.nextDouble() * 2 - 1)
     val un = math.sqrt(raw.map(x => x * x).sum)

@@ -29,6 +29,15 @@ class SinkSpec extends SparkSpec {
     finally zf.close()
   }
 
+  test("zipDirectory on a missing directory throws instead of writing an empty zip") {
+    val tmp = Files.createTempDirectory("graft-zip-missing").toString
+    val zip = s"$tmp/out.zip"
+    intercept[IllegalArgumentException] {
+      Sink.zipDirectory(s"$tmp/no-such-dir", zip)
+    }
+    assert(!new java.io.File(zip).exists())
+  }
+
   test("input size guard rejects oversized input") {
     intercept[Sink.InputTooLargeException] {
       Sink.convertParquet(spark, s"$sfDir/lineitem.parquet", "/tmp/unused",
@@ -240,19 +249,5 @@ class SinkSpec extends SparkSpec {
       src.schema.fields.length)
     assert(GraftMemorySink.rows("v2schema").length == src.count())
     GraftMemorySink.clear("v2schema")
-  }
-
-  test("compact rewrites many small files into the target count, data intact") {
-    val dir = s"${Files.createTempDirectory("graft-compact").toString}/li"
-    val li = Tables.lineitem(spark, sfDir)
-    li.repartition(16).write.parquet(dir)
-    def files(d: String) = Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
-      .count(_.getName.endsWith(".parquet"))
-    assert(files(dir) == 16)
-    Sink.compact(spark, dir, targetMb = 512, sortCols = Seq("l_shipdate"))
-    assert(files(dir) == 1) // sf0.001 lineitem << 512 MB
-    val re = spark.read.parquet(dir)
-    assert(re.count() == li.count())
-    assert(re.columns.toSeq == li.columns.toSeq)
   }
 }

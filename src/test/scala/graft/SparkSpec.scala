@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all specs (UTC, small shuffle partitions). */
+/** Shared local SparkSession for all specs: the engine's own builder at 4
+  * cores, so tests run under the confs the engine ships and get
+  * `GraftExtensions` the way every session does (service loading).
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -12,14 +15,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the whole suite runs through the library's SparkSessionExtensions
-    // entry point — the same wiring a spark.sql.extensions deployment gets
-    .withExtensions(new graft.plans.GraftExtensions)
-    .getOrCreate()
+  lazy val session: SparkSession =
+    Sessions.localBuilder("4").appName("graft-test").getOrCreate()
 }
