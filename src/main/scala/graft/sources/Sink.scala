@@ -1,9 +1,15 @@
 package graft.sources
 
 import graft.operators.Convert
+import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.io.{BufferedInputStream, File, FileInputStream, FileOutputStream}
-import java.util.zip.{ZipEntry, ZipOutputStream}
+import java.io.{ByteArrayOutputStream, EOFException, File}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future}
+import java.util.zip.{CRC32, Deflater, ZipEntry}
+import scala.util.Using
 
 /** The converter surface: the reference app's contract re-expressed as a
   * library call (SURVEY.md §7 Phase 2).
@@ -34,8 +40,8 @@ object Sink {
 
   class InputTooLargeException(mb: Long, limit: Long)
       extends IllegalArgumentException(s"input is $mb MB, limit $limit MB")
-  class ConversionTimeoutException(s: Long)
-      extends RuntimeException(s"conversion exceeded $s s")
+  class ConversionTimeoutException(s: Long, cause: Throwable = null)
+      extends RuntimeException(s"conversion exceeded $s s", cause)
 
   /** O13 parity (app.py:163-174): the reference buckets failures into
     * memory / timeout / schema / other with user-facing messages. Same
@@ -107,7 +113,7 @@ object Sink {
       val zip = if (opts.zipArtifact) Some(zipDirectory(out, s"$out.zip")) else None
       ConvertResult(out, rows, zip)
     } catch {
-      case e: Throwable if timedOut => throw new ConversionTimeoutException(opts.timeoutSeconds)
+      case e: Throwable if timedOut => throw new ConversionTimeoutException(opts.timeoutSeconds, e)
       case e: Throwable             => throw e
     } finally {
       timer.cancel()
@@ -118,10 +124,14 @@ object Sink {
   /** The same converted frame aimed at a JDBC sink (BASELINE.json
     * spark_approach: "write via JDBC/connector"): every column nullable
     * (app.py:122), inserts chunked by `batchsize` exactly like the
-    * reference's 10k-row Inserter batches (app.py:23,128-131). Caller
-    * supplies url/credentials and, when the driver doesn't self-register
-    * through DriverManager, its class name. Executed end-to-end against
-    * embedded Derby (the JDBC driver shipped with Spark) in SinkSpec.
+    * reference's 10k-row Inserter batches (app.py:23,128-131). Each write
+    * partition is one transaction (Spark's default isolation level): a
+    * failed or retried task rolls its batches back instead of leaving them
+    * committed, and Spark falls back to autocommit on a target without
+    * transactions. Caller supplies url/credentials and, when the driver
+    * doesn't self-register through DriverManager, its class name. Executed
+    * end-to-end against embedded Derby (the JDBC driver shipped with Spark)
+    * in SinkSpec.
     */
   def jdbcShaped(
       df: DataFrame,
@@ -134,7 +144,6 @@ object Sink {
       .option("url", url)
       .option("dbtable", table)
       .option("batchsize", batchSize)
-      .option("isolationLevel", "NONE")
     driver.fold(w)(d => w.option("driver", d))
   }
 
@@ -158,29 +167,126 @@ object Sink {
     }
   }
 
-  /** O11: DEFLATE the sink output, streamed file-by-file (app.py:54-65).
+  /** O11: the sink output as one zip of DEFLATEd entries (app.py:54-65),
+    * compressed on every driver core. Entry names are paths relative to
+    * `dir`, one per file (hidden `.crc` files included, no directory
+    * entries), at the default DEFLATE level.
+    *
+    * Each file is cut into 256 KiB blocks that a process-wide daemon pool
+    * deflates in parallel, the scheme of pigz: every block is raw DEFLATE
+    * primed with the 32 KiB of input before it as its dictionary and ends in
+    * a sync flush, except the last, which finishes the stream; so the blocks
+    * concatenated in order are one valid DEFLATE stream. The CRC-32 runs over
+    * the input in order. At most 4 × cores blocks are in flight, and an
+    * entry's compressed bytes spool to a scratch file beside `zipPath`, so
+    * the heap holds about 0.6 MB per block in flight whatever the file sizes.
+    *
     * `dir` must be an existing local directory: anything else (a missing
     * path, a file, a non-local URI) throws instead of writing an empty zip.
+    * A `zipPath` inside `dir` throws, since the zip would read itself. Any
+    * failure rethrows and leaves neither a partial zip nor the spool file.
     */
   def zipDirectory(dir: String, zipPath: String): String = {
     val base = new File(dir)
     require(base.isDirectory, s"zip source is not an existing local directory: $dir")
-    val zos = new ZipOutputStream(new FileOutputStream(zipPath))
+    val zip = new File(zipPath).getAbsoluteFile
+    require(!zip.getCanonicalFile.toPath.startsWith(base.getCanonicalFile.toPath),
+      s"zip $zipPath lies inside the directory it zips: $dir")
+    def files(f: File, prefix: String): Seq[(File, String)] =
+      if (f.isFile) Seq(f -> (prefix + f.getName))
+      else Option(f.listFiles()).toSeq.flatten.flatMap(files(_, prefix + f.getName + "/"))
+    val spool = Files.createTempFile(zip.getParentFile.toPath, s".${zip.getName}.", ".spool")
+    var written = false
     try {
-      def add(f: File, prefix: String): Unit =
-        if (f.isFile) {
-          zos.putNextEntry(new ZipEntry(prefix + f.getName))
-          val in = new BufferedInputStream(new FileInputStream(f))
-          try {
-            val buf = new Array[Byte](1 << 16)
-            Iterator.continually(in.read(buf)).takeWhile(_ >= 0)
-              .foreach(n => if (n > 0) zos.write(buf, 0, n))
-          } finally in.close()
-          zos.closeEntry()
-        } else Option(f.listFiles()).getOrElse(Array.empty)
-          .foreach(c => add(c, prefix + f.getName + "/"))
-      base.listFiles().foreach(add(_, ""))
+      Using.resource(new ZipArchiveOutputStream(zip)) { zos =>
+        base.listFiles().toSeq.flatMap(files(_, "")).foreach { case (f, name) =>
+          // ZipArchiveEntry(File, name) would add NTFS and extended-timestamp
+          // extra fields: 72 bytes per entry that no reader here uses
+          val entry = new ZipArchiveEntry(name)
+          entry.setSize(f.length)
+          entry.setTime(f.lastModified)
+          entry.setMethod(ZipEntry.DEFLATED)
+          deflateTo(f, entry, spool)
+          Using.resource(Files.newInputStream(spool))(zos.addRawArchiveEntry(entry, _))
+        }
+      }
+      written = true
       zipPath
-    } finally zos.close()
+    } finally {
+      Files.deleteIfExists(spool)
+      if (!written) Files.deleteIfExists(zip.toPath)
+    }
+  }
+
+  private val BlockSize = 256 << 10
+  private val DictSize = 32 << 10
+  private val Window = 4 * Runtime.getRuntime.availableProcessors
+
+  private lazy val deflatePool: ExecutorService =
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, { r =>
+      val t = new Thread(r, "graft-zip-deflate")
+      t.setDaemon(true)
+      t
+    })
+
+  /** One block's input (its dictionary first) and its deflated bytes. */
+  private final class Block(val input: Array[Byte], val dictLen: Int, val deflated: Array[Byte])
+
+  /** Deflates `f` block-parallel into `spool` (truncated first) and sets the
+    * entry's CRC and compressed size; the entry's size is `f`'s length.
+    */
+  private def deflateTo(f: File, entry: ZipArchiveEntry, spool: Path): Unit = {
+    val size = entry.getSize
+    val blocks = math.max(1L, (size + BlockSize - 1) / BlockSize)
+    val crc = new CRC32
+    var compressed = 0L
+    Using.resources(FileChannel.open(f.toPath), Files.newOutputStream(spool)) { (in, out) =>
+      val inFlight = new java.util.ArrayDeque[Future[Block]]
+      var next = 0L
+      try for (i <- 0L until blocks) {
+        while (next < blocks && next < i + Window) {
+          val b = next
+          inFlight.add(deflatePool.submit(new Callable[Block] {
+            def call(): Block = deflateBlock(in, size, b, b == blocks - 1)
+          }))
+          next += 1
+        }
+        val block = try inFlight.poll().get() catch { case e: ExecutionException => throw e.getCause }
+        crc.update(block.input, block.dictLen, block.input.length - block.dictLen)
+        out.write(block.deflated)
+        compressed += block.deflated.length
+      } finally inFlight.forEach(_.cancel(false))
+    }
+    entry.setCrc(crc.getValue)
+    entry.setCompressedSize(compressed)
+  }
+
+  /** Block `i` of a `size`-byte file as raw DEFLATE: primed with the 32 KiB
+    * before it, ended by a sync flush, or by `finish` when it is the last.
+    */
+  private def deflateBlock(in: FileChannel, size: Long, i: Long, last: Boolean): Block = {
+    val start = i * BlockSize
+    val dictLen = math.min(start, DictSize.toLong).toInt
+    val input = new Array[Byte](dictLen + math.min(BlockSize.toLong, size - start).toInt)
+    val buf = ByteBuffer.wrap(input)
+    while (buf.hasRemaining)
+      if (in.read(buf, start - dictLen + buf.position()) < 0)
+        throw new EOFException(s"file shrank below $size bytes while being zipped")
+    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    try {
+      if (dictLen > 0) d.setDictionary(input, 0, dictLen)
+      d.setInput(input, dictLen, input.length - dictLen)
+      if (last) d.finish()
+      val out = new ByteArrayOutputStream(input.length / 2 + 64)
+      val chunk = new Array[Byte](64 << 10)
+      // A chunk left short means the input is consumed and flushed (after
+      // `finish`: the stream is ended); a full one means more output waits.
+      var n = chunk.length
+      while (n == chunk.length) {
+        n = d.deflate(chunk, 0, chunk.length, Deflater.SYNC_FLUSH)
+        out.write(chunk, 0, n)
+      }
+      new Block(input, dictLen, out.toByteArray)
+    } finally d.end()
   }
 }

@@ -2,12 +2,52 @@ package graft
 
 import graft.sources.Sink
 import org.apache.spark.sql.types._
-import java.nio.file.Files
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
+import java.nio.file.{Files, Path}
+import java.util.zip.{CRC32, ZipFile, ZipInputStream}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Converter surface: guards, conversion write, zip artifact (reference
   * parity O6/O7/O9/O10/O11 — see Sink's Scaladoc for citations).
   */
 class SinkSpec extends SparkSpec {
+
+  /** Every difference between the regular files under `dir`, named by their
+    * path relative to `dir`, and the entries of `zip`. The zip is read back
+    * twice through java.util.zip's inflater, independent of the writer:
+    * through the central directory (names, bytes, recorded CRC-32 against
+    * the file's own) and sequentially from the local headers, which checks
+    * each entry's CRC and both sizes.
+    */
+  private def zipMismatches(dir: Path, zip: String): Seq[String] = {
+    val files = Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p)).toMap
+    val zf = new ZipFile(zip)
+    val central = try zf.entries().asScala.map { e =>
+      val bytes = Using.resource(zf.getInputStream(e))(_.readAllBytes())
+      val crc = new CRC32
+      crc.update(bytes)
+      (e.getName, bytes, e.getCrc == crc.getValue)
+    }.toSeq finally zf.close()
+    val sequential = Using.resource(new ZipInputStream(Files.newInputStream(Path.of(zip)))) { in =>
+      Iterator.continually(in.getNextEntry).takeWhile(_ != null)
+        .map(e => e.getName -> in.readAllBytes()).toMap
+    }
+    val names = central.map(_._1)
+    Seq(
+      Option.when(names.toSet != files.keySet || names.size != files.size)(
+        s"entries ${names.sorted} != files ${files.keys.toSeq.sorted}"),
+      Option.when(sequential.keySet != files.keySet)(s"local headers list ${sequential.keys}")
+    ).flatten ++ central.collect {
+      case (n, b, crcOk) if !files.get(n).exists(java.util.Arrays.equals(_, b)) || !crcOk =>
+        s"$n: bytes or CRC differ from the file"
+    } ++ sequential.collect {
+      case (n, b) if !files.get(n).exists(java.util.Arrays.equals(_, b)) =>
+        s"$n: local-header read differs from the file"
+    }
+  }
 
   test("convertParquet writes widened output and reports rows") {
     val out = Files.createTempDirectory("graft-sink").toString
@@ -24,9 +64,59 @@ class SinkSpec extends SparkSpec {
     val res = Sink.convertParquet(spark, s"$sfDir/region.parquet", out,
       Sink.ConvertOptions(zipArtifact = true))
     assert(res.zipPath.isDefined)
-    val zf = new java.util.zip.ZipFile(res.zipPath.get)
-    try assert(zf.entries().asIterator().hasNext)
-    finally zf.close()
+    // every part file, _SUCCESS and the hidden .crc files, byte for byte
+    assert(new java.io.File(res.outputPath).list().exists(_.endsWith(".crc")))
+    assert(zipMismatches(Path.of(res.outputPath), res.zipPath.get).isEmpty)
+  }
+
+  test("zipDirectory round-trips generated trees through an independent inflater") {
+    // sizes around the 256 KiB block edges and past one in-flight window of
+    // 4 × cores blocks; random bytes (stored-size blocks) and a repeating
+    // pattern (long matches reaching back into the previous block)
+    val block = 256 << 10
+    val window = 4 * Runtime.getRuntime.availableProcessors
+    val size = Gen.oneOf(0, 1, block - 1, block, block + 1, (window + 1) * block + 3)
+    val names = Seq("part-00000.bin", ".part-00000.bin.crc", "_SUCCESS", "._SUCCESS.crc",
+      "sub/part-00001.bin", "sub/.part-00001.bin.crc", "sub/deeper/part-00002.bin")
+    val file = for {
+      n <- size
+      random <- Gen.oneOf(true, false)
+      seed <- Gen.long
+    } yield {
+      val bytes = new Array[Byte](n)
+      if (random) new scala.util.Random(seed).nextBytes(bytes)
+      else bytes.indices.foreach(i => bytes(i) = "abcabdabcabcde".charAt(i % 14).toByte)
+      bytes
+    }
+    val tree = for {
+      picked <- Gen.atLeastOne(names)
+      contents <- Gen.listOfN(picked.size, file)
+    } yield picked.toSeq.zip(contents)
+    val prop = Prop.forAllNoShrink(tree) { entries =>
+      val root = Files.createTempDirectory("graft-zip-prop")
+      val dir = Files.createDirectory(root.resolve("Extract"))
+      entries.foreach { case (name, bytes) =>
+        Files.createDirectories(dir.resolve(name).getParent)
+        Files.write(dir.resolve(name), bytes)
+      }
+      val zip = Sink.zipDirectory(dir.toString, s"$dir.zip")
+      val bad = zipMismatches(dir, zip)
+      // the spool file beside the zip is gone
+      val left = root.toFile.list().toSet
+      (bad.isEmpty && left == Set("Extract", "Extract.zip")) :| s"${bad.mkString("; ")} left=$left"
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("zipDirectory rejects a zip path inside the directory it zips") {
+    val dir = Files.createTempDirectory("graft-zip-self")
+    Files.write(dir.resolve("a.bin"), Array[Byte](1, 2, 3))
+    intercept[IllegalArgumentException] {
+      Sink.zipDirectory(dir.toString, s"$dir/out.zip")
+    }
+    assert(dir.toFile.list().toSeq == Seq("a.bin"))
   }
 
   test("zipDirectory on a missing directory throws instead of writing an empty zip") {
@@ -73,9 +163,35 @@ class SinkSpec extends SparkSpec {
     assert(srcSum == backSum)
   }
 
+  test("jdbcShaped rolls a failed partition back instead of leaving its batches committed") {
+    val url = "jdbc:derby:memory:graftTxn;create=true"
+    val driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+    Class.forName(driver)
+    def sql[T](f: java.sql.Statement => T): T =
+      Using.resource(java.sql.DriverManager.getConnection(url))(c => f(c.createStatement()))
+    sql(_.execute("CREATE TABLE graft_txn (X BIGINT CHECK (X < 100))"))
+    // one partition, 10 rows per batch: ten batches pass the CHECK, the
+    // eleventh breaks it. Under autocommit the first 100 rows would stay.
+    intercept[Exception] {
+      Sink.jdbcShaped(spark.range(0, 150, 1, 1).toDF("X"), url, "graft_txn",
+        batchSize = 10, driver = Some(driver)).mode("append").save()
+    }
+    val left = sql { st =>
+      val rs = st.executeQuery("SELECT COUNT(*) FROM graft_txn")
+      rs.next(); rs.getLong(1)
+    }
+    assert(left == 0)
+  }
+
   test("classifyError maps the reference's O13 taxonomy") {
     assert(Sink.classifyError(new OutOfMemoryError()) == "memory")
     assert(Sink.classifyError(new Sink.ConversionTimeoutException(600)) == "timeout")
+    // the timeout keeps the cancelled job's failure as its cause, and the
+    // cause's text never reclassifies it
+    val cancelled = new RuntimeException("wrap", new IllegalStateException("Schema x"))
+    val timeout = new Sink.ConversionTimeoutException(600, cancelled)
+    assert(timeout.getCause eq cancelled)
+    assert(Sink.classifyError(timeout) == "timeout")
     assert(Sink.classifyError(new Sink.InputTooLargeException(2048, 1024)) == "input-too-large")
     assert(Sink.classifyError(new RuntimeException(
       "wrap", new IllegalStateException("Schema mismatch on column x"))) == "schema")
