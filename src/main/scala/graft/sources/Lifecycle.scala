@@ -50,10 +50,7 @@ object Lifecycle {
     * for any plan built against the pre-fold location — the group-drain
     * pin reproduced exactly this on the prefix family before the
     * default changed. Pass 0 only for an index this maintainer
-    * exclusively owns. BEHAVIOR CHANGE (r19 — release note): the
-    * default was 0 through r18, so a pre-r19 caller relying on it now
-    * retains one extra retired epoch per anchor between passes; pass
-    * `keepEpochs = 0` explicitly to keep full reclamation. The fold thresholds are [[Tombstones
+    * exclusively owns. The fold thresholds are [[Tombstones
     * .needsCompaction]]'s knobs. `leaseWaitMs` < 0 opts the lease out
     * (the caller owns exclusion).
     *
@@ -97,18 +94,16 @@ object Lifecycle {
     * the cron entry a deployment points at the same
     * [[graft.streaming.DocumentsStream.CorpusIngestTargets]] its runner
     * takes ([[graft.streaming.DocumentsStream.runCorpusIngest]] /
-    * `runHybridIngest`), deriving each family's anchor, debt frame,
-    * fold, and (for the location-anchored families) live anchor resolver
-    * exactly the way the runner does — before r20 the group-drain +
-    * concurrent-maintenance soak hand-rolled four per-family [[maintain]]
-    * calls; this is that composition as one call, and the soak now runs
-    * against it. Families maintain INDEPENDENTLY (each under its own
-    * verified per-anchor lease, serialized against the runner's
-    * per-batch claim): one family's fold never blocks another's, and a
-    * failure in one family propagates after the earlier families'
-    * passes already committed — safe, because a maintenance pass is
-    * idempotent (debt re-checks, vacuum re-enumerates). Returns what
-    * each family's pass did, keyed by family name, in commit order.
+    * `runHybridIngest`), over the same [[IndexFamily]] list the runner
+    * ingests through, so each family's anchor, debt frame, fold and live
+    * anchor resolver are the runner's own. Families maintain
+    * INDEPENDENTLY (each under its own verified per-anchor lease,
+    * serialized against the runner's per-batch claim): one family's fold
+    * never blocks another's, and a failure in one family propagates after
+    * the earlier families' passes already committed — safe, because a
+    * maintenance pass is idempotent (debt re-checks, vacuum
+    * re-enumerates). Returns what each family's pass did, keyed by family
+    * name, in commit order.
     */
   def maintainGroup(
       s: SparkSession,
@@ -116,36 +111,9 @@ object Lifecycle {
       keepEpochs: Int = 1,
       maxMaskedPpm: Long = 100000L, maxDeltaBatches: Long = 8L,
       holder: String = "maintenance",
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Map[String, Maintenance] = {
-    val out = scala.collection.mutable.LinkedHashMap[String, Maintenance]()
-    def locTable(family: String, table: String, fold: => Unit): Unit = {
-      def loc() = Tombstones.tableLocation(s, table)
-      out(family) = maintain(s, loc(), family, s.table(table), "doc_id",
-        fold, anchorAfter = Some(() => loc()),
-        keepEpochs = keepEpochs, maxMaskedPpm = maxMaskedPpm,
-        maxDeltaBatches = maxDeltaBatches, holder = holder,
-        leaseWaitMs = leaseWaitMs, leaseTtlMs = leaseTtlMs)
-    }
-    targets.search.foreach { case (table, path) =>
-      out("search") = maintain(s, path, "search", s.table(table), "doc_id",
-        graft.operators.SearchQueries.compactSearchIndex(s, table, path),
-        keepEpochs = keepEpochs, maxMaskedPpm = maxMaskedPpm,
-        maxDeltaBatches = maxDeltaBatches, holder = holder,
-        leaseWaitMs = leaseWaitMs, leaseTtlMs = leaseTtlMs)
-    }
-    targets.band.foreach(t => locTable("band", t,
-      graft.operators.DedupQueries.compactBandIndex(s, t)))
-    targets.winnow.foreach(t => locTable("winnow", t,
-      graft.operators.DedupQueries.compactWinnowIndex(s, t)))
-    targets.prefix.foreach(t => locTable("prefix", t,
-      graft.operators.DedupQueries.compactPrefixIndex(s, t)))
-    targets.ivf.foreach(path => out("ivf") =
-      maintainIvf(s, path, keepEpochs, maxMaskedPpm, maxDeltaBatches,
-        holder, leaseWaitMs, leaseTtlMs))
-    // SeqMap, not toMap: the doc promises commit order, and a plain
-    // immutable Map drops insertion order past 4 entries (review-found)
-    out.to(scala.collection.immutable.SeqMap)
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Map[String, Maintenance] =
+    maintainAll(s, IndexFamily.corpus(s, targets, dir = None), keepEpochs,
+      maxMaskedPpm, maxDeltaBatches, holder, leaseWaitMs, leaseTtlMs)
 
   /** [[maintainGroup]] for a MEDIA-ASSET group
     * ([[graft.streaming.DocumentsStream.AssetIngestTargets]] — the
@@ -157,36 +125,22 @@ object Lifecycle {
       keepEpochs: Int = 1,
       maxMaskedPpm: Long = 100000L, maxDeltaBatches: Long = 8L,
       holder: String = "maintenance",
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Map[String, Maintenance] = {
-    val out = scala.collection.mutable.LinkedHashMap[String, Maintenance]()
-    targets.phash.foreach { table =>
-      def loc() = Tombstones.tableLocation(s, table)
-      out("phash") = maintain(s, loc(), "phash", s.table(table), "asset_id",
-        graft.operators.MultimodalQueries.compactPhashIndex(s, table),
-        anchorAfter = Some(() => loc()),
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Map[String, Maintenance] =
+    maintainAll(s, IndexFamily.assets(s, targets, dir = None), keepEpochs,
+      maxMaskedPpm, maxDeltaBatches, holder, leaseWaitMs, leaseTtlMs)
+
+  /** One [[maintain]] pass per family, in list order. A SeqMap, not
+    * toMap: a plain immutable Map drops insertion order past 4 entries.
+    */
+  private def maintainAll(
+      s: SparkSession, families: Seq[IndexFamily], keepEpochs: Int,
+      maxMaskedPpm: Long, maxDeltaBatches: Long, holder: String,
+      leaseWaitMs: Long, leaseTtlMs: Long): Map[String, Maintenance] =
+    families.map { f =>
+      f.name -> maintain(s, f.anchor(), f.name, f.rows(), f.idCol, f.compact(),
+        anchorAfter = Some(f.anchor), defaultData = f.vacuumData,
         keepEpochs = keepEpochs, maxMaskedPpm = maxMaskedPpm,
         maxDeltaBatches = maxDeltaBatches, holder = holder,
         leaseWaitMs = leaseWaitMs, leaseTtlMs = leaseTtlMs)
-    }
-    targets.ivf.foreach(path => out("ivf") =
-      maintainIvf(s, path, keepEpochs, maxMaskedPpm, maxDeltaBatches,
-        holder, leaseWaitMs, leaseTtlMs))
-    out.to(scala.collection.immutable.SeqMap) // commit order, like maintainGroup
-  }
-
-  // flat epoch-dir family shared by both groups: the debt denominator is
-  // the CURRENT base frame (resolved lazily under the lease — a fold may
-  // redirect it), and vacuum needs the build path to enumerate
-  // epoch-named dirs
-  private def maintainIvf(
-      s: SparkSession, path: String, keepEpochs: Int, maxMaskedPpm: Long,
-      maxDeltaBatches: Long, holder: String, leaseWaitMs: Long,
-      leaseTtlMs: Long): Maintenance =
-    maintain(s, path, "ivf",
-      s.read.parquet(IndexManifest.dataPath(s, path, path)), "vec_id",
-      graft.operators.SimilarityQueries.compactIvfIndex(s, path),
-      defaultData = Some(path),
-      keepEpochs = keepEpochs, maxMaskedPpm = maxMaskedPpm,
-      maxDeltaBatches = maxDeltaBatches, holder = holder,
-      leaseWaitMs = leaseWaitMs, leaseTtlMs = leaseTtlMs)
+    }.to(scala.collection.immutable.SeqMap)
 }

@@ -3,10 +3,11 @@ package graft.sources
 import graft.operators.Convert
 import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.io.{ByteArrayOutputStream, EOFException, File}
+import java.io.{ByteArrayOutputStream, EOFException, File, IOException}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, LinkOption, Path}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future}
 import java.util.zip.{CRC32, Deflater, ZipEntry}
 import scala.util.Using
@@ -183,8 +184,12 @@ object Sink {
     *
     * `dir` must be an existing local directory: anything else (a missing
     * path, a file, a non-local URI) throws instead of writing an empty zip.
-    * A `zipPath` inside `dir` throws, since the zip would read itself. Any
-    * failure rethrows and leaves neither a partial zip nor the spool file.
+    * A `zipPath` inside `dir` throws, since the zip would read itself. The
+    * tree under `dir` is listed without following links before the zip is
+    * opened, and anything in it that is not a regular file or a directory
+    * (a symlink, FIFO, socket or device) throws an IOException naming it:
+    * such a path is neither silently dropped nor followed. Any failure
+    * rethrows and leaves neither a partial zip nor the spool file.
     */
   def zipDirectory(dir: String, zipPath: String): String = {
     val base = new File(dir)
@@ -192,14 +197,12 @@ object Sink {
     val zip = new File(zipPath).getAbsoluteFile
     require(!zip.getCanonicalFile.toPath.startsWith(base.getCanonicalFile.toPath),
       s"zip $zipPath lies inside the directory it zips: $dir")
-    def files(f: File, prefix: String): Seq[(File, String)] =
-      if (f.isFile) Seq(f -> (prefix + f.getName))
-      else Option(f.listFiles()).toSeq.flatten.flatMap(files(_, prefix + f.getName + "/"))
+    val entries = regularFiles(base, "")
     val spool = Files.createTempFile(zip.getParentFile.toPath, s".${zip.getName}.", ".spool")
     var written = false
     try {
       Using.resource(new ZipArchiveOutputStream(zip)) { zos =>
-        base.listFiles().toSeq.flatMap(files(_, "")).foreach { case (f, name) =>
+        entries.foreach { case (f, name) =>
           // ZipArchiveEntry(File, name) would add NTFS and extended-timestamp
           // extra fields: 72 bytes per entry that no reader here uses
           val entry = new ZipArchiveEntry(name)
@@ -215,6 +218,22 @@ object Sink {
     } finally {
       Files.deleteIfExists(spool)
       if (!written) Files.deleteIfExists(zip.toPath)
+    }
+  }
+
+  /** The regular files under directory `d` with their entry names, links
+    * not followed; anything else under `d` throws.
+    */
+  private def regularFiles(d: File, prefix: String): Seq[(File, String)] = {
+    val children = d.listFiles()
+    if (children == null) throw new IOException(s"cannot list directory $d")
+    children.toSeq.flatMap { f =>
+      val name = prefix + f.getName
+      val a = Files.readAttributes(f.toPath, classOf[BasicFileAttributes], LinkOption.NOFOLLOW_LINKS)
+      if (a.isRegularFile) Seq(f -> name)
+      else if (a.isDirectory) regularFiles(f, name + "/")
+      else throw new IOException(
+        s"cannot zip $f: ${if (a.isSymbolicLink) "a symbolic link" else "not a regular file or directory"}")
     }
   }
 

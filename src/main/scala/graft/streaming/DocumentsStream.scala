@@ -3,9 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.DedupQueries
+import graft.sources.IndexFamily
+import Runner.{drain, readFiles}
 
 /** Streaming document ingestion against the persisted dedup index — the
   * production shape for "is this arriving document a near-dup of anything we
@@ -34,10 +36,21 @@ object DocumentsStream {
 
   /** Read a parquet directory of (doc_id, text) as a bounded stream. */
   def readDocs(spark: SparkSession, inPath: String): DataFrame =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1) // several micro-batches, not one gulp
-      .parquet(inPath)
+    readFiles(spark, docSchema, inPath)
+
+  private val assetSchema: StructType = StructType(Seq(
+    StructField("asset_id", LongType),
+    StructField("payload", BinaryType),
+    StructField("format", StringType)))
+
+  /** (doc_id, text, lang): the corpus groups' text columns. */
+  private val corpusSchema: StructType =
+    StructType(docSchema.fields :+ StructField("lang", StringType))
+
+  /** The columns a group row adds for its vector sibling. */
+  private val labelled: Seq[StructField] = Seq(
+    StructField("label", IntegerType),
+    StructField("embedding", ArrayType(FloatType)))
 
   /** EXACTLY-ONCE streaming ingest into the winnow index — the
     * document-fingerprint twin of
@@ -53,65 +66,9 @@ object DocumentsStream {
   def runWinnowIngest(
       spark: SparkSession, inPath: String, table: String,
       checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch VERIFIED writer lease on the CURRENT location anchor
-          // (the fold moves it; resolve → acquire → re-resolve, retrying
-          // if a concurrent fold moved the location mid-claim — plain
-          // re-resolution alone leaves a window where two claimants hold
-          // different generations of the anchor and exclusion voids);
-          // holder = this lineage's checkpoint; < 0 opts out
-          graft.sources.WriterLease.withResolvedIngestLease(spark,
-              () => graft.sources.Tombstones.tableLocation(spark, table),
-              checkpoint, leaseWaitMs, leaseTtlMs) { _ =>
-            refreshFamilyTables(spark, batch.toDF(), table)
-            graft.operators.DedupQueries.ingestWinnowBatch(
-              batch.toDF(), table, batchId, streamId = checkpoint)
-            foldIfDue(spark, table, foldEvery,
-              graft.operators.DedupQueries.compactWinnowIndex(spark, table))
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Invalidate the session-local cached relations of a family's catalog
-    * tables before an arm reads them. `foreachBatch` executes on the
-    * streaming query's CLONED session, whose table-relation cache is
-    * separate from the main session's: a fold by a CONCURRENT process
-    * ([[graft.sources.Lifecycle.maintain]] cron-looping on the main
-    * session) swaps the table's location and refreshes only its own
-    * cache, so the stream clone keeps planning over the PRE-FOLD
-    * location — silently stale reads while the old files last,
-    * FILE_NOT_EXIST once vacuum reclaims them (the group-drain +
-    * concurrent-maintenance pin reproduced both). Refreshing under the
-    * verified lease makes every arm plan over the live location; on the
-    * uncontended path it costs one metadata invalidation per arm.
-    */
-  private[streaming] def refreshFamilyTables(
-      outer: SparkSession, batchDf: DataFrame, tables: String*): Unit =
-    Seq(outer, batchDf.sparkSession).distinct.foreach { ss =>
-      tables.foreach(t => ss.catalog.refreshTable(t))
-    }
-
-  /** The inline LSM fold policy for the location-anchored runners: the
-    * shared [[graft.sources.Tombstones.windowReached]] trigger against
-    * the table's current location anchor. The fence rides the fold's
-    * location move, so replays of already-folded batches still skip.
-    */
-  private def foldIfDue(
-      spark: SparkSession, table: String, foldEvery: Int,
-      fold: => Unit): Unit =
-    if (graft.sources.Tombstones.windowReached(spark,
-        graft.sources.Tombstones.tableLocation(spark, table), foldEvery))
-      fold
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark, readDocs(spark, inPath), checkpoint,
+      Seq(IndexFamily.winnow(spark, table)), foldEvery, leaseWaitMs, leaseTtlMs)
 
   /** EXACTLY-ONCE streaming ingest into the MinHash band index — the
     * candidate-generation side of near-dup detection under a stream:
@@ -125,34 +82,9 @@ object DocumentsStream {
   def runBandIngest(
       spark: SparkSession, inPath: String, table: String,
       checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch VERIFIED writer lease on the CURRENT location anchor
-          // (the fold moves it; resolve → acquire → re-resolve, retrying
-          // if a concurrent fold moved the location mid-claim — plain
-          // re-resolution alone leaves a window where two claimants hold
-          // different generations of the anchor and exclusion voids);
-          // holder = this lineage's checkpoint; < 0 opts out
-          graft.sources.WriterLease.withResolvedIngestLease(spark,
-              () => graft.sources.Tombstones.tableLocation(spark, table),
-              checkpoint, leaseWaitMs, leaseTtlMs) { _ =>
-            refreshFamilyTables(spark, batch.toDF(), table)
-            graft.operators.DedupQueries.ingestBandBatch(
-              batch.toDF(), table, batchId, streamId = checkpoint)
-            foldIfDue(spark, table, foldEvery,
-              graft.operators.DedupQueries.compactBandIndex(spark, table))
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark, readDocs(spark, inPath), checkpoint,
+      Seq(IndexFamily.band(spark, table)), foldEvery, leaseWaitMs, leaseTtlMs)
 
   /** EXACTLY-ONCE streaming ingest into the prefix (PPJoin) index — the
     * exact-recall family's ingest twin: per-batch representatives'
@@ -164,34 +96,9 @@ object DocumentsStream {
   def runPrefixIngest(
       spark: SparkSession, inPath: String, table: String,
       checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch VERIFIED writer lease on the CURRENT location anchor
-          // (the fold moves it; resolve → acquire → re-resolve, retrying
-          // if a concurrent fold moved the location mid-claim — plain
-          // re-resolution alone leaves a window where two claimants hold
-          // different generations of the anchor and exclusion voids);
-          // holder = this lineage's checkpoint; < 0 opts out
-          graft.sources.WriterLease.withResolvedIngestLease(spark,
-              () => graft.sources.Tombstones.tableLocation(spark, table),
-              checkpoint, leaseWaitMs, leaseTtlMs) { _ =>
-            refreshFamilyTables(spark, batch.toDF(), table, s"${table}_fwd")
-            graft.operators.DedupQueries.ingestPrefixBatch(
-              batch.toDF(), table, batchId, streamId = checkpoint)
-            foldIfDue(spark, table, foldEvery,
-              graft.operators.DedupQueries.compactPrefixIndex(spark, table))
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark, readDocs(spark, inPath), checkpoint,
+      Seq(IndexFamily.prefix(spark, table)), foldEvery, leaseWaitMs, leaseTtlMs)
 
   /** EXACTLY-ONCE streaming ingest into the phash index — the media
     * family's ingest twin: arriving binary assets are perceptual-hashed
@@ -202,30 +109,9 @@ object DocumentsStream {
   def runPhashIngest(
       spark: SparkSession, inPath: String, table: String,
       checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val assetSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("payload", org.apache.spark.sql.types.BinaryType),
-      StructField("format", StringType)))
-    val q = spark.readStream
-      .schema(assetSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          // per-batch VERIFIED writer lease on the CURRENT location
-          // anchor inside the shared family arm; holder = this lineage's
-          // checkpoint; < 0 opts out
-          ingestPhashFamily(spark, batch.toDF(), table, batchId,
-            checkpoint, foldEvery, leaseWaitMs, leaseTtlMs)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark, readFiles(spark, assetSchema, inPath), checkpoint,
+      Seq(IndexFamily.phash(spark, table)), foldEvery, leaseWaitMs, leaseTtlMs)
 
   /** The sibling indexes one corpus ingest group feeds — each optional,
     * so a deployment composes exactly the families it serves. `search` is
@@ -234,9 +120,7 @@ object DocumentsStream {
     * `ivf` is the VECTOR family's immutable index path — the modality
     * sibling [[runHybridIngest]] feeds from the same (lineage, batch-id)
     * fence, closing the group for
-    * [[graft.operators.SearchQueries.hybridTopkFromIndexesConsistent]]
-    * (before r20 that consistent read's common-lineage precondition was
-    * only producible by hand-staged ingestIvfBatch calls).
+    * [[graft.operators.SearchQueries.hybridTopkFromIndexesConsistent]].
     */
   final case class CorpusIngestTargets(
       search: Option[(String, String)] = None,
@@ -248,101 +132,6 @@ object DocumentsStream {
       prefix.isDefined || ivf.isDefined,
       "CorpusIngestTargets: at least one target family")
   }
-
-  /** One micro-batch through every LEXICAL sibling of a corpus ingest
-    * group, in the fixed commit order (search → band → winnow → prefix) —
-    * the shared body of [[runCorpusIngest]] and [[runHybridIngest]].
-    * `docs` must carry (doc_id, text, lang) and be persisted by the
-    * caller (each family derives its rows from the one cached read).
-    */
-  private def ingestLexicalFamilies(
-      spark: SparkSession, docs: DataFrame, targets: CorpusIngestTargets,
-      batchId: Long, checkpoint: String, foldEvery: Int,
-      leaseWaitMs: Long, leaseTtlMs: Long): Unit = {
-    targets.search.foreach { case (table, path) =>
-      graft.sources.WriterLease.withIngestLease(spark, path,
-          checkpoint, leaseWaitMs, leaseTtlMs) {
-        refreshFamilyTables(spark, docs, table)
-        graft.operators.SearchQueries.ingestSearchBatch(
-          spark, table, path, docs.select("doc_id", "text", "lang"),
-          batchId, streamId = checkpoint)
-        if (graft.sources.Tombstones.windowReached(spark, path, foldEvery))
-          graft.operators.SearchQueries.compactSearchIndex(spark, table, path)
-      }
-    }
-    targets.band.foreach { table =>
-      graft.sources.WriterLease.withResolvedIngestLease(spark,
-          () => graft.sources.Tombstones.tableLocation(spark, table),
-          checkpoint, leaseWaitMs, leaseTtlMs) { _ =>
-        refreshFamilyTables(spark, docs, table)
-        graft.operators.DedupQueries.ingestBandBatch(
-          docs.select("doc_id", "text"), table, batchId,
-          streamId = checkpoint)
-        foldIfDue(spark, table, foldEvery,
-          graft.operators.DedupQueries.compactBandIndex(spark, table))
-      }
-    }
-    targets.winnow.foreach { table =>
-      graft.sources.WriterLease.withResolvedIngestLease(spark,
-          () => graft.sources.Tombstones.tableLocation(spark, table),
-          checkpoint, leaseWaitMs, leaseTtlMs) { _ =>
-        refreshFamilyTables(spark, docs, table)
-        graft.operators.DedupQueries.ingestWinnowBatch(
-          docs.select("doc_id", "text"), table, batchId,
-          streamId = checkpoint)
-        foldIfDue(spark, table, foldEvery,
-          graft.operators.DedupQueries.compactWinnowIndex(spark, table))
-      }
-    }
-    targets.prefix.foreach { table =>
-      graft.sources.WriterLease.withResolvedIngestLease(spark,
-          () => graft.sources.Tombstones.tableLocation(spark, table),
-          checkpoint, leaseWaitMs, leaseTtlMs) { _ =>
-        refreshFamilyTables(spark, docs, table, s"${table}_fwd")
-        graft.operators.DedupQueries.ingestPrefixBatch(
-          docs.select("doc_id", "text"), table, batchId,
-          streamId = checkpoint)
-        foldIfDue(spark, table, foldEvery,
-          graft.operators.DedupQueries.compactPrefixIndex(spark, table))
-      }
-    }
-  }
-
-  /** One micro-batch into the VECTOR (IVF) sibling — shared by the two
-    * group runners ([[runHybridIngest]] / [[runAssetIngest]]); `vecRows`
-    * must carry (vec_id, label, embedding). Immutable anchor, so the
-    * plain ingest lease suffices (folds redirect data inside the
-    * manifest without moving the anchor).
-    */
-  private def ingestIvfFamily(
-      spark: SparkSession, dir: String, path: String, vecRows: DataFrame,
-      batchId: Long, checkpoint: String, foldEvery: Int,
-      leaseWaitMs: Long, leaseTtlMs: Long): Unit =
-    graft.sources.WriterLease.withIngestLease(spark, path,
-        checkpoint, leaseWaitMs, leaseTtlMs) {
-      graft.operators.SimilarityQueries.ingestIvfBatch(
-        spark, dir, path, vecRows, batchId, streamId = checkpoint)
-      if (graft.sources.Tombstones.windowReached(spark, path, foldEvery))
-        graft.operators.SimilarityQueries.compactIvfIndex(spark, path)
-    }
-
-  /** One micro-batch into the phash sibling — shared by
-    * [[runPhashIngest]] and [[runAssetIngest]]; `assets` must carry
-    * (asset_id, payload, format).
-    */
-  private def ingestPhashFamily(
-      spark: SparkSession, assets: DataFrame, table: String,
-      batchId: Long, checkpoint: String, foldEvery: Int,
-      leaseWaitMs: Long, leaseTtlMs: Long): Unit =
-    graft.sources.WriterLease.withResolvedIngestLease(spark,
-        () => graft.sources.Tombstones.tableLocation(spark, table),
-        checkpoint, leaseWaitMs, leaseTtlMs) { _ =>
-      refreshFamilyTables(spark, assets, table)
-      graft.operators.MultimodalQueries.ingestPhashBatch(
-        assets, table, batchId, streamId = checkpoint)
-      foldIfDue(spark, table, foldEvery,
-        graft.operators.MultimodalQueries.compactPhashIndex(spark, table))
-    }
 
   /** MULTI-INDEX streaming ingest group — the way a real pipeline uses
     * the per-family runners: ONE document batch feeds every sibling index
@@ -385,30 +174,9 @@ object DocumentsStream {
       "runCorpusIngest reads a text-only corpus (doc_id, text, lang) — a " +
         "vector-family target needs the (doc, embedding) schema of " +
         "runHybridIngest, which fences the IVF sibling under the same lineage")
-    val corpusSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType)))
-    val q = spark.readStream
-      .schema(corpusSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // one persisted read of the batch feeds all sibling derivations
-          val docs = batch.toDF().persist()
-          // FIXED ORDER — a crash leaves a deterministic prefix of it
-          try ingestLexicalFamilies(spark, docs, targets, batchId,
-            checkpoint, foldEvery, leaseWaitMs, leaseTtlMs)
-          finally docs.unpersist(false)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Runner.ingest(spark, readFiles(spark, corpusSchema, inPath), checkpoint,
+      IndexFamily.corpus(spark, targets, dir = None), foldEvery,
+      leaseWaitMs, leaseTtlMs)
   }
 
   /** MULTI-MODAL streaming ingest group — [[runCorpusIngest]] with the
@@ -446,40 +214,12 @@ object DocumentsStream {
   def runHybridIngest(
       spark: SparkSession, inPath: String, dir: String,
       targets: CorpusIngestTargets, checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val hybridSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("label", org.apache.spark.sql.types.IntegerType),
-      StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
-    val q = spark.readStream
-      .schema(hybridSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // one persisted read of the batch feeds all sibling derivations
-          val rows = batch.toDF().persist()
-          try {
-            // FIXED ORDER — lexical prefix first, the vector sibling last
-            ingestLexicalFamilies(spark, rows, targets, batchId,
-              checkpoint, foldEvery, leaseWaitMs, leaseTtlMs)
-            targets.ivf.foreach(path => ingestIvfFamily(spark, dir, path,
-              rows.select(col("doc_id").as("vec_id"), col("label"),
-                col("embedding")),
-              batchId, checkpoint, foldEvery, leaseWaitMs, leaseTtlMs))
-          } finally rows.unpersist(false)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark,
+      readFiles(spark, StructType(corpusSchema.fields ++ labelled), inPath)
+        .withColumn("vec_id", col("doc_id")),
+      checkpoint, IndexFamily.corpus(spark, targets, Some(dir)), foldEvery,
+      leaseWaitMs, leaseTtlMs)
 
   /** The sibling indexes one MEDIA-ASSET ingest group feeds — the
     * non-text modality's [[CorpusIngestTargets]]: `phash` is the
@@ -512,40 +252,12 @@ object DocumentsStream {
   def runAssetIngest(
       spark: SparkSession, inPath: String, dir: String,
       targets: AssetIngestTargets, checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val assetSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("payload", org.apache.spark.sql.types.BinaryType),
-      StructField("format", StringType),
-      StructField("label", org.apache.spark.sql.types.IntegerType),
-      StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
-    val q = spark.readStream
-      .schema(assetSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch.toDF().persist()
-          try {
-            // FIXED ORDER — phash first, the vector sibling last
-            targets.phash.foreach(table => ingestPhashFamily(spark,
-              rows.select("asset_id", "payload", "format"), table,
-              batchId, checkpoint, foldEvery, leaseWaitMs, leaseTtlMs))
-            targets.ivf.foreach(path => ingestIvfFamily(spark, dir, path,
-              rows.select(col("asset_id").as("vec_id"), col("label"),
-                col("embedding")),
-              batchId, checkpoint, foldEvery, leaseWaitMs, leaseTtlMs))
-          } finally rows.unpersist(false)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark,
+      readFiles(spark, StructType(assetSchema.fields ++ labelled), inPath)
+        .withColumn("vec_id", col("asset_id")),
+      checkpoint, IndexFamily.assets(spark, targets, Some(dir)), foldEvery,
+      leaseWaitMs, leaseTtlMs)
 
   /** Drain `inPath` with Trigger.AvailableNow, joining every micro-batch
     * against `indexTable` (a [[DedupQueries.writeBandIndex]] bucketed
@@ -553,26 +265,18 @@ object DocumentsStream {
     */
   def runIncrementalDedup(
       spark: SparkSession, inPath: String, indexTable: String,
-      outPath: String, checkpoint: String): Unit = {
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val bands = DedupQueries.bandKeysOf(DedupQueries.signaturesOf(batch.toDF()))
-        // the VISIBLE index view (tombstones masked, ingested batches
-        // included) — a mid-stream takedown stops matching and a
-        // mid-stream ingest starts matching from the next micro-batch on
-        val idx = DedupQueries.bandIndexFrame(spark, indexTable)
-          .select(col("doc_id").as("c_id"), col("bk"))
-        bands.join(idx, "bk")
-          .select("doc_id", "c_id").distinct()
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      val bands = DedupQueries.bandKeysOf(DedupQueries.signaturesOf(batch))
+      // the VISIBLE index view (tombstones masked, ingested batches
+      // included) — a mid-stream takedown stops matching and a
+      // mid-stream ingest starts matching from the next micro-batch on
+      val idx = DedupQueries.bandIndexFrame(spark, indexTable)
+        .select(col("doc_id").as("c_id"), col("bk"))
+      bands.join(idx, "bk")
+        .select("doc_id", "c_id").distinct()
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming count-min ingest: sketch each micro-batch's documents and
     * append the per-batch cells; the standing sketch is the CELL-WISE SUM
@@ -583,19 +287,11 @@ object DocumentsStream {
     */
   def runCmsIngest(
       spark: SparkSession, inPath: String, outPath: String,
-      checkpoint: String): Unit = {
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.TextQueries.cmsSketchOf(batch.toDF())
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      graft.operators.TextQueries.cmsSketchOf(batch)
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Merge appended per-batch sketch cells into the standing sketch. */
   def mergedSketch(spark: SparkSession, outPath: String): DataFrame =
@@ -626,29 +322,12 @@ object DocumentsStream {
       checkpoint: String): Unit = {
     val counts = spark.read.parquet(s"$modelPath/counts")
     val total = spark.read.parquet(s"$modelPath/total")
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.TextQueries.surprisalOf(batch.toDF(), counts, total)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      graft.operators.TextQueries.surprisalOf(batch, counts, total)
+        .write.mode("append").parquet(outPath)
+    }
   }
 
-  /** Streaming linear-classifier monitor — the supervised serving twin of
-    * [[runSurprisalMonitor]]: arriving documents score against the
-    * PERSISTED perceptron weight grid ([[graft.operators.TextQueries
-    * .writeLinearModel]]) per trigger. The model is collected ONCE at
-    * start (control-plane: n_labels × 65 longs) and baked into every
-    * micro-batch's broadcast scoring join, so per-doc predictions are
-    * micro-batching-invariant — pinned equal to the one-shot serving pass
-    * in StreamingSpec. A real deployment re-trains on a cadence and swaps
-    * the model path, never the query.
-    */
   /** Streaming weighted sampler — priority sampling's MERGEABILITY made
     * operational. Priorities are a pure function of (doc_id, text)
     * ([[graft.operators.TextQueries.priorityOf]]), so the global top-k by
@@ -665,19 +344,12 @@ object DocumentsStream {
       spark: SparkSession, inPath: String, outPath: String,
       checkpoint: String): Unit = {
     val k = graft.operators.TextQueries.PRI_TOP_K
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.TextQueries.priorityOf(batch.toDF())
-          .orderBy(col("priority").desc, col("doc_id")).limit(k)
-          .select("doc_id", "n_tokens", "priority")
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      graft.operators.TextQueries.priorityOf(batch)
+        .orderBy(col("priority").desc, col("doc_id")).limit(k)
+        .select("doc_id", "n_tokens", "priority")
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   /** The standing sample: top-k by priority over the per-batch winners. */
@@ -708,17 +380,10 @@ object DocumentsStream {
       spark: SparkSession, modelPath: String, inPath: String, outPath: String,
       checkpoint: String): Unit = {
     val boiler = spark.read.parquet(modelPath)
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.TextQueries.stripSpansAgainst(batch.toDF(), boiler)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      graft.operators.TextQueries.stripSpansAgainst(batch, boiler)
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   /** Streaming winnow-fingerprint probe against the persisted corpus
@@ -733,25 +398,17 @@ object DocumentsStream {
     */
   def runWinnowProbe(
       spark: SparkSession, inPath: String, indexTable: String,
-      outPath: String, checkpoint: String): Unit = {
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val bFps = graft.operators.TextQueries.winnowSelected(batch.toDF())
-          .select(col("doc_id"), col("fp")).distinct()
-        // winnowIndexFrame, not the raw table: a takedown landing
-        // mid-stream stops matching from the NEXT micro-batch on (the
-        // probe-time df cap re-derives over the survivors with it)
-        DedupQueries.winnowIncrementalPairs(
-            bFps, DedupQueries.winnowIndexFrame(spark, indexTable))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      val bFps = graft.operators.TextQueries.winnowSelected(batch)
+        .select(col("doc_id"), col("fp")).distinct()
+      // winnowIndexFrame, not the raw table: a takedown landing
+      // mid-stream stops matching from the NEXT micro-batch on (the
+      // probe-time df cap re-derives over the survivors with it)
+      DedupQueries.winnowIncrementalPairs(
+          bFps, DedupQueries.winnowIndexFrame(spark, indexTable))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming exact-recall near-dup probe — the PPJoin twin of
     * [[runWinnowProbe]]: each arriving micro-batch's documents probe the
@@ -768,20 +425,12 @@ object DocumentsStream {
     */
   def runPrefixProbe(
       spark: SparkSession, inPath: String, indexTable: String,
-      outPath: String, checkpoint: String): Unit = {
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (idx, fwd) = DedupQueries.prefixIndexFrames(spark, indexTable)
-        DedupQueries.prefixIncrementalPairs(batch.toDF(), idx, fwd)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      val (idx, fwd) = DedupQueries.prefixIndexFrames(spark, indexTable)
+      DedupQueries.prefixIncrementalPairs(batch, idx, fwd)
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming re-encode detection: arriving binary assets are
     * perceptual-hashed per micro-batch (the mapPartitions signature of
@@ -793,31 +442,16 @@ object DocumentsStream {
     */
   def runPhashProbe(
       spark: SparkSession, inPath: String, indexTable: String,
-      outPath: String, checkpoint: String): Unit = {
-    val assetSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("payload", org.apache.spark.sql.types.BinaryType),
-      StructField("format", StringType)))
-    val q = spark.readStream
-      .schema(assetSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val keys = graft.operators.MultimodalQueries.phashBandKeys(
-          graft.operators.Multimodal.perceptualHash(batch.toDF()).toDF())
-        // tombstone-filtered index view: a mid-stream takedown stops
-        // matching from the next micro-batch on
-        graft.operators.MultimodalQueries.phashProbePairs(
-            keys, graft.operators.MultimodalQueries.phashIndexFrame(spark, indexTable))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readFiles(spark, assetSchema, inPath), checkpoint) { (batch, _) =>
+      val keys = graft.operators.MultimodalQueries.phashBandKeys(
+        graft.operators.Multimodal.perceptualHash(batch).toDF())
+      // tombstone-filtered index view: a mid-stream takedown stops
+      // matching from the next micro-batch on
+      graft.operators.MultimodalQueries.phashProbePairs(
+          keys, graft.operators.MultimodalQueries.phashIndexFrame(spark, indexTable))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Continuous quality gating: the Gopher rule battery
     * ([[graft.operators.TextQueries.gopherRulesOf]] — the exact projection
@@ -831,31 +465,33 @@ object DocumentsStream {
     */
   def runGopherAudit(
       spark: SparkSession, inPath: String, outPath: String,
-      checkpoint: String): Unit = {
-    val q = graft.operators.TextQueries.gopherRulesOf(readDocs(spark, inPath))
+      checkpoint: String): Unit =
+    graft.operators.TextQueries.gopherRulesOf(readDocs(spark, inPath))
       .writeStream
       .format("parquet")
       .option("path", outPath)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 
+  /** Streaming linear-classifier monitor — the supervised serving twin of
+    * [[runSurprisalMonitor]]: arriving documents score against the
+    * PERSISTED perceptron weight grid ([[graft.operators.TextQueries
+    * .writeLinearModel]]) per trigger. The model is collected ONCE at
+    * start (control-plane: n_labels × 65 longs) and baked into every
+    * micro-batch's broadcast scoring join, so per-doc predictions are
+    * micro-batching-invariant — pinned equal to the one-shot serving pass
+    * in StreamingSpec. A real deployment re-trains on a cadence and swaps
+    * the model path, never the query.
+    */
   def runLinearMonitor(
       spark: SparkSession, modelPath: String, inPath: String, outPath: String,
       checkpoint: String): Unit = {
     val (labels, w) = graft.operators.TextQueries.readLinearModel(spark, modelPath)
-    val q = readDocs(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.TextQueries.linearScore(spark, batch.toDF(), labels, w)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(readDocs(spark, inPath), checkpoint) { (batch, _) =>
+      graft.operators.TextQueries.linearScore(spark, batch, labels, w)
+        .write.mode("append").parquet(outPath)
+    }
   }
 }

@@ -2,11 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.VectorOps
 import graft.operators.SimilarityQueries
+import graft.sources.IndexFamily
+import Runner.{drain, readFiles}
 
 /** Streaming ANN serving — arriving query vectors answered from the
   * PERSISTED IVF index per micro-batch.
@@ -32,10 +33,16 @@ object EmbeddingsStream {
 
   /** Read a parquet directory of embeddings rows as a bounded stream. */
   def readVectors(spark: SparkSession, inPath: String): DataFrame =
-    spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", 1) // several micro-batches, not one gulp
-      .parquet(inPath)
+    readFiles(spark, vecSchema, inPath)
+
+  /** A batch of vectors as (vec_id, v: double[], nrm), the shape every
+    * probe and verdict takes.
+    */
+  private def queriesOf(batch: DataFrame): DataFrame =
+    batch
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
 
   /** Drain `inPath` with Trigger.AvailableNow, probing `indexPath` for each
     * micro-batch's query vectors; (q_id, rank, cand_id, cos) rows land
@@ -43,23 +50,11 @@ object EmbeddingsStream {
     */
   def runAnnProbe(
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
-      outPath: String, checkpoint: String): Unit = {
-    val q = readVectors(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val queries = batch.toDF()
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-          .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
-        SimilarityQueries.ivfProbeIndex(spark, dir, indexPath, queries)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readVectors(spark, inPath), checkpoint) { (batch, _) =>
+      SimilarityQueries.ivfProbeIndex(spark, dir, indexPath, queriesOf(batch))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** EXACTLY-ONCE streaming index INGEST — the IVF twin of
     * [[SearchStream.runSearchIngest]]: arriving vectors land in the
@@ -80,28 +75,10 @@ object EmbeddingsStream {
   def runAnnIngest(
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
       checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val q = readVectors(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // the checkpoint IS the lineage (see runSearchIngest); the
-          // per-batch lease serializes concurrent mutators of this index
-          graft.sources.WriterLease.withIngestLease(
-              spark, indexPath, checkpoint, leaseWaitMs, leaseTtlMs) {
-            SimilarityQueries.ingestIvfBatch(
-              spark, dir, indexPath, batch.toDF(), batchId, streamId = checkpoint)
-            if (graft.sources.Tombstones.windowReached(spark, indexPath, foldEvery))
-              SimilarityQueries.compactIvfIndex(spark, indexPath)
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark, readVectors(spark, inPath), checkpoint,
+      Seq(IndexFamily.ivf(spark, indexPath, Some(dir))), foldEvery,
+      leaseWaitMs, leaseTtlMs)
 
   /** EXACTLY-ONCE streaming ingest into the persisted k-NN graph — the
     * last index family's twin of [[runAnnIngest]]: each micro-batch's
@@ -116,26 +93,10 @@ object EmbeddingsStream {
   def runGraphIngest(
       spark: SparkSession, dir: String, inPath: String, graphPath: String,
       checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val q = readVectors(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.WriterLease.withIngestLease(
-              spark, graphPath, checkpoint, leaseWaitMs, leaseTtlMs) {
-            SimilarityQueries.ingestGraphBatch(
-              spark, dir, graphPath, batch.toDF(), batchId, streamId = checkpoint)
-            if (graft.sources.Tombstones.windowReached(spark, graphPath, foldEvery))
-              SimilarityQueries.compactKnnGraph(spark, graphPath)
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark, readVectors(spark, inPath), checkpoint,
+      Seq(IndexFamily.graph(spark, graphPath, dir)), foldEvery,
+      leaseWaitMs, leaseTtlMs)
 
   /** Streaming cross-modal serving — arriving TEXT-query vectors answered
     * with ranked ASSETS from the persisted IVF index: each micro-batch
@@ -148,24 +109,12 @@ object EmbeddingsStream {
     */
   def runCrossmodalProbe(
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
-      outPath: String, checkpoint: String): Unit = {
-    val q = readVectors(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val queries = batch.toDF()
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-          .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
-        graft.operators.MultimodalQueries.crossmodalEnrich(spark, dir,
-            SimilarityQueries.ivfProbeIndex(spark, dir, indexPath, queries))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readVectors(spark, inPath), checkpoint) { (batch, _) =>
+      graft.operators.MultimodalQueries.crossmodalEnrich(spark, dir,
+          SimilarityQueries.ivfProbeIndex(spark, dir, indexPath, queriesOf(batch)))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming graph-ANN serving — the beam-walk twin of [[runAnnProbe]]:
     * each micro-batch's query vectors are answered by
@@ -179,23 +128,11 @@ object EmbeddingsStream {
     */
   def runGraphBeamProbe(
       spark: SparkSession, dir: String, inPath: String, graphPath: String,
-      outPath: String, checkpoint: String): Unit = {
-    val q = readVectors(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val queries = batch.toDF()
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-          .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
-        SimilarityQueries.graphBeamFromIndex(spark, dir, graphPath, queries)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readVectors(spark, inPath), checkpoint) { (batch, _) =>
+      SimilarityQueries.graphBeamFromIndex(spark, dir, graphPath, queriesOf(batch))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming semantic dedup — the embedding twin of
     * [[DocumentsStream.runIncrementalDedup]]: each micro-batch's arriving
@@ -208,25 +145,14 @@ object EmbeddingsStream {
     */
   def runSemanticDedup(
       spark: SparkSession, dir: String, inPath: String, indexPath: String,
-      outPath: String, checkpoint: String, tau: Double): Unit = {
-    val q = readVectors(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val queries = batch.toDF()
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-          .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
-        semanticVerdicts(
-          SimilarityQueries.ivfProbeIndex(spark, dir, indexPath, queries),
-          queries.select(col("vec_id").as("q_id")), tau)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String, tau: Double): Unit =
+    drain(readVectors(spark, inPath), checkpoint) { (batch, _) =>
+      val queries = queriesOf(batch)
+      semanticVerdicts(
+        SimilarityQueries.ivfProbeIndex(spark, dir, indexPath, queries),
+        queries.select(col("vec_id").as("q_id")), tau)
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming semantic decontamination — arriving TRAINING vectors are
     * scored against the broadcast eval set per micro-batch
@@ -242,21 +168,10 @@ object EmbeddingsStream {
       spark: SparkSession, dir: String, inPath: String,
       outPath: String, checkpoint: String): Unit = {
     val eval = SimilarityQueries.decontamEvalSet(spark, dir)
-    val q = readVectors(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val vecs = batch.toDF()
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-          .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
-        SimilarityQueries.decontamVerdicts(vecs, eval)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(readVectors(spark, inPath), checkpoint) { (batch, _) =>
+      SimilarityQueries.decontamVerdicts(queriesOf(batch), eval)
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   /** Fold probe results (q_id, rank, cand_id, cos) into per-query verdicts;

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 
+import Runner.{drain, readFiles}
+
 /** Structured Streaming over the `events` table (SURVEY.md §2.9 build-out).
   *
   * The reference only "streams" as out-of-core batch iteration
@@ -305,18 +307,11 @@ object EventsStream {
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
     try withNanosLongConf(spark) {
-      val q = readEvents(spark, dir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch
-            .withColumn("day", date_trunc("day", col("ts")))
-            .write.mode("overwrite").partitionBy("day").parquet(outPath)
-          ()
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(readEvents(spark, dir), checkpoint) { (batch, _) =>
+        batch
+          .withColumn("day", date_trunc("day", col("ts")))
+          .write.mode("overwrite").partitionBy("day").parquet(outPath)
+      }
     } finally prior match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
@@ -349,29 +344,17 @@ object EventsStream {
       spark: SparkSession, dir: String, outPath: String, checkpoint: String,
       dim: DataFrame, dimKeyCol: String, dimTimeCol: String): Unit =
     withNanosLongConf(spark) {
-      val q = readEvents(spark, dir)
+      val events = readEvents(spark, dir)
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.plans.Asof.join(
-            batch.toDF(), dim,
-            leftOn = Seq("user_id"), rightOn = Seq(dimKeyCol),
-            leftTimeCol = "ts_us", rightTimeCol = dimTimeCol)
-            .write.mode("append").parquet(outPath)
-          ()
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(events, checkpoint) { (batch, _) =>
+        graft.plans.Asof.join(
+          batch, dim,
+          leftOn = Seq("user_id"), rightOn = Seq(dimKeyCol),
+          leftTimeCol = "ts_us", rightTimeCol = dimTimeCol)
+          .write.mode("append").parquet(outPath)
+      }
     }
 
-  /** Drain the whole (bounded) source once with Trigger.AvailableNow into an
-    * in-memory sink and return the materialized result — the test harness
-    * for the streaming paths. `complete`/`update` output modes because
-    * watermark-close semantics on a bounded replay would hold back the final
-    * windows.
-    */
   /** Per-row data-contract counts for a micro-batch or a full frame. Every
     * constraint here is PER-ROW, so batch reports merge by plain summation
     * into exactly the full-corpus report — the property the streaming
@@ -391,6 +374,16 @@ object EventsStream {
         .as("bad_type"),
       count(when(col("value") < 0, 1)).as("negative_value"))
 
+  /** The (event_id, ts, user_id, event_type, value) event log the monitor
+    * and CDC runners read, `ts` a plain TIMESTAMP.
+    */
+  private val eventLogSchema: StructType = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType)))
+
   /** Streaming data-contract monitor: append each micro-batch's per-row
     * constraint counts; [[mergedQuality]] sums them into the standing
     * report (drain == one-shot pinned in StreamingSpec). The ingest-side
@@ -398,26 +391,10 @@ object EventsStream {
     */
   def runQualityMonitor(
       spark: SparkSession, inPath: String, outPath: String,
-      checkpoint: String): Unit = {
-    val q = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        qualityCounts(batch.toDF()).write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    drain(readFiles(spark, eventLogSchema, inPath), checkpoint) { (batch, _) =>
+      qualityCounts(batch).write.mode("append").parquet(outPath)
+    }
 
   /** Sum appended per-batch reports into the standing contract report. */
   def mergedQuality(spark: SparkSession, outPath: String): DataFrame =
@@ -456,31 +433,15 @@ object EventsStream {
     */
   def runCdcIngest(
       spark: SparkSession, inPath: String, outPath: String,
-      checkpoint: String): Unit = {
-    val q = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // Each delta carries its micro-batch epoch — the delta log's version
-        // axis. The fold ignores it (groupBy user_id), but time travel
-        // (mergedCdcSnapshotAsOf) filters on it: snapshot AS OF epoch k is
-        // the fold of the log prefix, exactly the lakehouse versioned-read.
-        cdcDeltaOf(batch.toDF()).withColumn("epoch", lit(batchId))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    drain(readFiles(spark, eventLogSchema, inPath), checkpoint) { (batch, batchId) =>
+      // Each delta carries its micro-batch epoch — the delta log's version
+      // axis. The fold ignores it (groupBy user_id), but time travel
+      // (mergedCdcSnapshotAsOf) filters on it: snapshot AS OF epoch k is
+      // the fold of the log prefix, exactly the lakehouse versioned-read.
+      cdcDeltaOf(batch).withColumn("epoch", lit(batchId))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Fold the appended delta log into the serving snapshot: sums add,
     * latest-wins re-maximizes over per-batch winners.
@@ -515,6 +476,12 @@ object EventsStream {
         col("last.last_ts").as("last_ts"), col("last.last_event_id").as("last_event_id"),
         col("last.last_type").as("last_type"))
 
+  /** Drain the whole (bounded) source once with Trigger.AvailableNow into an
+    * in-memory sink and return the materialized result — the test harness
+    * for the streaming paths. `complete`/`update` output modes because
+    * watermark-close semantics on a bounded replay would hold back the final
+    * windows.
+    */
   def runOnce(result: DataFrame, queryName: String, mode: String): DataFrame =
     runOnceWithProgress(result, queryName, mode)._1
 
@@ -564,29 +531,21 @@ object EventsStream {
     */
   def runCusumIngest(
       spark: SparkSession, dir: String, outPath: String,
-      checkpoint: String): Unit = {
-    val q = readEvents(spark, dir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // idempotent per batch: each micro-batch OVERWRITES its own
-        // batch_id=<id> subdirectory, so a replayed batch (foreachBatch is
-        // at-least-once) replaces its census instead of appending a second
-        // copy — duplicated census rows would be silently SUMMED by the
-        // cell-wise merge downstream, shifting CUSUM means and thresholds.
-        // Readers see a hive-partitioned table; the merge keys on
-        // (event_type, hr) and never reads batch_id.
-        batch.toDF()
-          .groupBy(col("event_type"),
-            (unix_micros(col("ts")) / lit(3600000000L)).cast("long").as("hr"))
-          .agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    drain(readEvents(spark, dir), checkpoint) { (batch, batchId) =>
+      // idempotent per batch: each micro-batch OVERWRITES its own
+      // batch_id=<id> subdirectory, so a replayed batch (foreachBatch is
+      // at-least-once) replaces its census instead of appending a second
+      // copy — duplicated census rows would be silently SUMMED by the
+      // cell-wise merge downstream, shifting CUSUM means and thresholds.
+      // Readers see a hive-partitioned table; the merge keys on
+      // (event_type, hr) and never reads batch_id.
+      batch
+        .groupBy(col("event_type"),
+          (unix_micros(col("ts")) / lit(3600000000L)).cast("long").as("hr"))
+        .agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    }
 }
 
 /** transformWithState processor backing [[EventsStream.userRunningCountsTws]]:

@@ -1,10 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.SearchQueries
+import graft.sources.IndexFamily
+import Runner.{drain, readFiles}
 
 /** Streaming lexical-search serving — arriving keyword queries answered from
   * the PERSISTED inverted index per micro-batch (the BM25 twin of
@@ -32,10 +33,7 @@ object SearchStream {
 
   /** Read a parquet directory of (q_id, term) rows as a bounded stream. */
   def readQueries(spark: SparkSession, inPath: String): DataFrame =
-    spark.readStream
-      .schema(querySchema)
-      .option("maxFilesPerTrigger", 1) // several micro-batches, not one gulp
-      .parquet(inPath)
+    readFiles(spark, querySchema, inPath)
 
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -65,40 +63,10 @@ object SearchStream {
   def runSearchIngest(
       spark: SparkSession, inPath: String, table: String, indexPath: String,
       checkpoint: String, foldEvery: Int = 0,
-      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit = {
-    val q = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch writer lease (holder = this lineage's checkpoint):
-          // a concurrent mutator waits instead of paging on the manifest
-          // collision; < 0 opts out
-          graft.sources.WriterLease.withIngestLease(
-              spark, indexPath, checkpoint, leaseWaitMs, leaseTtlMs) {
-            // the search table's LOCATION moves at folds even though its
-            // manifest anchor (indexPath) does not — a concurrent
-            // maintainer's fold leaves this stream clone's relation cache
-            // on the pre-fold location (see DocumentsStream
-            // .refreshFamilyTables); refresh under the lease
-            DocumentsStream.refreshFamilyTables(spark, batch.toDF(), table)
-            // the checkpoint IS the lineage: batch ids are monotone within
-            // it, and a different checkpoint must refuse rather than fence
-            SearchQueries.ingestSearchBatch(
-              spark, table, indexPath, batch.toDF(), batchId, streamId = checkpoint)
-            if (graft.sources.Tombstones.windowReached(spark, indexPath, foldEvery))
-              SearchQueries.compactSearchIndex(spark, table, indexPath)
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      leaseWaitMs: Long = 600000L, leaseTtlMs: Long = 600000L): Unit =
+    Runner.ingest(spark, readFiles(spark, docSchema, inPath), checkpoint,
+      Seq(IndexFamily.search(spark, table, indexPath)), foldEvery,
+      leaseWaitMs, leaseTtlMs)
 
   /** Drain `inPath` with Trigger.AvailableNow, probing the persisted
     * inverted index for each micro-batch's queries; (q_id, rank, doc_id,
@@ -106,17 +74,9 @@ object SearchStream {
     */
   def runBm25Probe(
       spark: SparkSession, inPath: String, table: String, indexPath: String,
-      outPath: String, checkpoint: String): Unit = {
-    val q = readQueries(spark, inPath)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        SearchQueries.bm25ProbeIndex(spark, table, indexPath, batch.toDF())
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpoint: String): Unit =
+    drain(readQueries(spark, inPath), checkpoint) { (batch, _) =>
+      SearchQueries.bm25ProbeIndex(spark, table, indexPath, batch)
+        .write.mode("append").parquet(outPath)
+    }
 }

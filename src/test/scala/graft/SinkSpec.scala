@@ -119,6 +119,29 @@ class SinkSpec extends SparkSpec {
     assert(dir.toFile.list().toSeq == Seq("a.bin"))
   }
 
+  test("zipDirectory refuses symlinks instead of dropping or following them") {
+    // a dropped dangling link would vanish from the artifact unnoticed, and
+    // a followed link back up the tree repeats the tree until the path
+    // grows too long
+    def refused(link: (Path, Path) => Path): Unit = {
+      val root = Files.createTempDirectory("graft-zip-link")
+      val dir = Files.createDirectory(root.resolve("Extract"))
+      Files.write(dir.resolve("a.bin"), Array[Byte](1, 2, 3))
+      val l = link(dir, root)
+      val err = intercept[java.io.IOException] {
+        Sink.zipDirectory(dir.toString, s"$dir.zip")
+      }
+      assert(err.getMessage.contains(l.toString), err.getMessage)
+      // listed before the zip is opened: neither a partial zip nor a spool
+      assert(root.toFile.list().toSeq == Seq("Extract"))
+    }
+    refused((dir, root) =>
+      Files.createSymbolicLink(dir.resolve("dangling"), root.resolve("no-such-file")))
+    refused((dir, _) =>
+      Files.createSymbolicLink(Files.createDirectory(dir.resolve("sub")).resolve("loop"),
+        Path.of("..")))
+  }
+
   test("zipDirectory on a missing directory throws instead of writing an empty zip") {
     val tmp = Files.createTempDirectory("graft-zip-missing").toString
     val zip = s"$tmp/out.zip"

@@ -2278,6 +2278,16 @@ class TombstoneSpec extends SparkSpec {
     assert(err.getMessage.contains("claim"), err.getMessage)
     // opting the lease out resolves once and runs the body directly
     assert(wl.withResolvedIngestLease(spark, () => l1, "x", waitMs = -1L)(identity) == l1)
+    // a constant resolver under a real wait budget is the plain ingest
+    // lease on a fixed anchor: the body runs once, at that anchor, holding
+    // the lease, which is released afterwards
+    val fixed = s"$tmp/rlease_fixed"
+    val ran = scala.collection.mutable.ArrayBuffer[(String, Option[String])]()
+    wl.withResolvedIngestLease(spark, () => fixed, "claimant", waitMs = 5000L) { a =>
+      ran += (a -> wl.current(spark, a).map(_.holder))
+    }
+    assert(ran.toSeq == Seq(fixed -> Some("claimant")))
+    assert(wl.current(spark, fixed).isEmpty)
     // the retry loop is bounded by the caller's TOTAL wait budget, not
     // per-attempt: with a zero budget the first anchor-moved retry pages
     // on the wall-clock deadline rather than burning toward the attempt
