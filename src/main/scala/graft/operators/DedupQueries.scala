@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{GQuery, Tables}
 import graft.functions.VectorOps
+import graft.sources.IndexWrite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -394,12 +395,9 @@ object DedupQueries {
     * a buffered/ingested batch outstanding fails loudly (the shared
     * resurrection guard — fold first).
     */
-  def deleteFromBandIndex(s: SparkSession, table: String, docIds: Seq[Long]): Unit = {
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    graft.sources.Tombstones.requireNoBufferedClash(
-      s, anchor, docIds, "doc_id", "deleteFromBandIndex", "compactBandIndex")
-    graft.sources.Tombstones.add(s, anchor, docIds)
-  }
+  def deleteFromBandIndex(s: SparkSession, table: String, docIds: Seq[Long]): Unit =
+    IndexWrite.delete(s, IndexWrite.Target(graft.sources.Tombstones.tableLocation(s, table),
+      "doc_id", "deleteFromBandIndex", "compactBandIndex"), docIds)
 
   /** The probe-facing view of a persisted band index: the bucketed table
     * minus its tombstoned documents, plus any open update window's latest
@@ -433,12 +431,11 @@ object DedupQueries {
     * ([[compactBandIndex]]) is the window's only physical rewrite.
     */
   def bufferBandUpdate(docs: DataFrame, table: String): Unit =
-    bufferBandBatch(docs,
-      graft.sources.Tombstones.tableLocation(docs.sparkSession, table), hwm = None)
+    replaceBand(docs, table, "bufferBandUpdate", None)
 
   /** EXACTLY-ONCE streaming ingest of one document micro-batch into the
     * MinHash band index — the fourth location-anchored family to ride
-    * [[graft.sources.Tombstones.fenceAdmits]] (same semantics as
+    * [[graft.sources.IndexWrite.replace]]'s fence (same semantics as
     * [[graft.operators.SearchQueries.ingestSearchBatch]]: skip a replayed
     * `batchId` of the SAME lineage, refuse a different lineage loudly,
     * rows + fence in one atomic commit; the fence is carried across the
@@ -447,41 +444,23 @@ object DedupQueries {
     */
   def ingestBandBatch(
       docs: DataFrame, table: String, batchId: Long,
-      streamId: String = "default"): Boolean = {
-    val s = docs.sparkSession
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, anchor, batchId, streamId, "ingestBandBatch")) false
-    else { bufferBandBatch(docs, anchor, Some((streamId, batchId))); true }
-  }
+      streamId: String = "default"): Boolean =
+    replaceBand(docs, table, "ingestBandBatch", Some((streamId, batchId)))
 
-  private def bufferBandBatch(
-      docs: DataFrame, anchor: String, hwm: Option[(String, Long)]): Unit = {
-    val s = docs.sparkSession
-    val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-      docs, "doc_id", "bufferBandUpdate")
-    // sub-3-token docs sign to nothing (no shingles): their ids still
-    // tombstone the base — an update shrinking a doc below the shingle
-    // floor removes it from the index, exactly as a rebuild would; but a
-    // REMOVAL of a window-resident id cannot take effect (mask covers
-    // base only) — refuse toward the fold. Persisted: the rows feed both
-    // the removal check and the delta write.
-    val rows = bandKeysOf(signaturesOf(docs)).persist()
-    try {
-      val rowIds = rows.select("doc_id").distinct().collect().map(_.getLong(0)).toSeq
-      // ONE epoch threads both guards (the writer-side discipline); the
-      // resurrect guard takes the ROW-LANDING ids — a removed id
-      // redelivered sub-floor lands nothing and stays a clean no-op
-      val ep = graft.sources.IndexManifest.current(s, anchor)
-      graft.sources.Tombstones.requireRemovalsNotBufferedOf(
-        s, ep, anchor, ids, rowIds, "doc_id", "bufferBandUpdate", "compactBandIndex")
-      graft.sources.Tombstones.requireNoResurrectOf(
-        s, ep, anchor, rowIds, "doc_id", "bufferBandUpdate", "compactBandIndex")
-      graft.sources.Tombstones.commitUpdateBatch(s, anchor, ids, None, hwm) { d =>
-        rows.write.mode("overwrite").parquet(d)
-      }
-    } finally rows.unpersist(false)
-  }
+  /** Sub-3-token docs sign to nothing (no shingles): their ids still
+    * tombstone the base — an update shrinking a doc below the shingle
+    * floor removes it from the index, exactly as a rebuild would.
+    * Persisted: the rows feed both the landing ids and the delta write.
+    */
+  private def replaceBand(
+      docs: DataFrame, table: String, what: String,
+      fence: Option[(String, Long)]): Boolean =
+    IndexWrite.replace(docs, IndexWrite.Target(
+        graft.sources.Tombstones.tableLocation(docs.sparkSession, table),
+        "doc_id", what, "compactBandIndex"), fence) { (_, _) =>
+      val rows = bandKeysOf(signaturesOf(docs)).persist()
+      IndexWrite.Encoded(rows, landing = Some(IndexWrite.idsOf(rows, "doc_id")))
+    }
 
   /** Physically remove tombstoned documents' band keys, fold any open
     * update window's delta batches in, and restore one file per bucket
@@ -803,12 +782,8 @@ object DedupQueries {
     */
   def deleteFromPrefixIndex(s: SparkSession, table: String, docIds: Seq[Long]): Unit = {
     import s.implicits._
-    // an id with a buffered/ingested batch outstanding must fold first
-    // (the shared resurrection guard) — checked before membership so the
-    // error names the actionable step
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    graft.sources.Tombstones.requireNoBufferedClash(
-      s, anchor, docIds, "doc_id", "deleteFromPrefixIndex", "compactPrefixIndex")
+    val target = IndexWrite.Target(graft.sources.Tombstones.tableLocation(s, table),
+      "doc_id", "deleteFromPrefixIndex", "compactPrefixIndex")
     // membership probe against the VISIBLE forward store (base∪delta —
     // ingested representatives are takedown targets too) with the BOUNDED
     // id list broadcast (the forward store is corpus-scale — the semi
@@ -826,7 +801,7 @@ object DedupQueries {
     // family's single mask authority (both views resolve it), so the
     // takedown is one atomic commit; the old two-anchor double-write was
     // a torn window (a crash between the commits masked one view only)
-    graft.sources.Tombstones.add(s, anchor, docIds)
+    IndexWrite.delete(s, target, docIds)
   }
 
   /** The probe-facing (inverted, forward) views of a persisted prefix
@@ -917,8 +892,7 @@ object DedupQueries {
     * exists to produce; retiring the loser is the takedown path's job.
     */
   def bufferPrefixUpdate(docs: DataFrame, table: String): Unit =
-    bufferPrefixBatch(docs, table,
-      graft.sources.Tombstones.tableLocation(docs.sparkSession, table), hwm = None)
+    replacePrefix(docs, table, "bufferPrefixUpdate", None)
 
   /** EXACTLY-ONCE streaming ingest of one document micro-batch into the
     * prefix (PPJoin) index — same fence semantics as
@@ -928,64 +902,46 @@ object DedupQueries {
     */
   def ingestPrefixBatch(
       docs: DataFrame, table: String, batchId: Long,
-      streamId: String = "default"): Boolean = {
-    val s = docs.sparkSession
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, anchor, batchId, streamId, "ingestPrefixBatch")) false
-    else { bufferPrefixBatch(docs, table, anchor, Some((streamId, batchId))); true }
-  }
+      streamId: String = "default"): Boolean =
+    replacePrefix(docs, table, "ingestPrefixBatch", Some((streamId, batchId)))
 
-  private def bufferPrefixBatch(
-      docs: DataFrame, table: String, anchor: String,
-      hwm: Option[(String, Long)]): Unit = {
+  /** The batch's representatives are the row-landing ids; the masked ids
+    * are those PLUS any batch id already standing whose new content yields
+    * no rows — a doc shrunk below the 3-token shingle floor is an update
+    * that REMOVES it, exactly as a rebuild would. A batch of all-short
+    * UNKNOWN docs masks nothing and is a clean no-op, never a thrown
+    * poison pill (the streaming caller would replay it forever).
+    * Uniqueness runs over the RAW batch ids: two texts under one doc_id
+    * could otherwise both become representatives.
+    */
+  private def replacePrefix(
+      docs: DataFrame, table: String, what: String,
+      fence: Option[(String, Long)]): Boolean = {
     val s = docs.sparkSession
     import s.implicits._
-    // uniqueness over the RAW batch ids: two texts under one doc_id could
-    // otherwise both become representatives — one id, two row sets
-    val rawIds = graft.sources.Tombstones.requireUniqueBatchIds(
-      docs, "doc_id", "bufferPrefixUpdate")
-    // the frozen order comes from the VISIBLE inverted view (build rows
-    // plus earlier batches — so a token first seen by ingest keeps its
-    // assigned order everywhere)
-    val visInv = prefixIndexFrames(s, table)._1
-    // persisted: the rows feed both the rep-id collect and the delta
-    // write — without the cache the whole shingle/rank computation runs
-    // twice per micro-batch
-    val rows = prefixBatchRows(docs, visInv).persist()
-    try {
-      val repIds = rows.select("doc_id").distinct().collect().map(_.getLong(0)).toSeq
-      // the masked ids: the batch's representatives (their rows are
-      // replaced) PLUS any batch id already standing whose new content
-      // yields no rows — a doc shrunk below the 3-token shingle floor is
-      // an update that REMOVES it, exactly as a rebuild would. A batch of
-      // all-short UNKNOWN docs is a clean no-op, never a thrown poison
-      // pill (the streaming caller would replay it forever). The standing
-      // lookup runs ONLY when removal candidates exist (driver-decidable
-      // — the common all-indexable batch skips the index scan entirely).
+    IndexWrite.replace(docs, IndexWrite.Target(
+        graft.sources.Tombstones.tableLocation(s, table),
+        "doc_id", what, "compactPrefixIndex"), fence) { (ep, rawIds) =>
+      // the frozen order comes from the VISIBLE inverted view (build rows
+      // plus earlier batches — so a token first seen by ingest keeps its
+      // assigned order everywhere)
+      val visInv = prefixArmOf(s, ep, s.table(table))
+      // persisted: the rows feed both the rep-id collect and the delta
+      // write — without the cache the whole shingle/rank computation runs
+      // twice per micro-batch
+      val rows = prefixBatchRows(docs, visInv).persist()
+      val repIds = IndexWrite.idsOf(rows, "doc_id")
+      // the standing lookup runs ONLY when removal candidates exist
+      // (driver-decidable — the common all-indexable batch skips the
+      // index scan entirely)
       val removalCandidates = rawIds.filterNot(repIds.toSet)
       val standingRemovals: Seq[Long] =
         if (removalCandidates.isEmpty) Seq.empty
         else visInv.select("doc_id").distinct()
           .join(broadcast(removalCandidates.toDF("doc_id")), Seq("doc_id"), "left_semi")
           .collect().map(_.getLong(0)).toSeq
-      val maskIds = repIds ++ standingRemovals
-      if (maskIds.isEmpty) return
-      // a REMOVAL (standing id, no replacement rows) of a window-resident
-      // id cannot take effect — the mask covers base only; fold first
-      // ONE epoch threads both guards; the resurrect guard takes the
-      // representatives (the row-landing ids) — a removed id redelivered
-      // sub-floor lands nothing and stays a clean no-op, never a poison
-      // pill the streaming runner replays forever (review-found)
-      val ep = graft.sources.IndexManifest.current(s, anchor)
-      graft.sources.Tombstones.requireRemovalsNotBufferedOf(
-        s, ep, anchor, maskIds, repIds, "doc_id", "bufferPrefixUpdate", "compactPrefixIndex")
-      graft.sources.Tombstones.requireNoResurrectOf(
-        s, ep, anchor, repIds, "doc_id", "bufferPrefixUpdate", "compactPrefixIndex")
-      graft.sources.Tombstones.commitUpdateBatch(s, anchor, maskIds, None, hwm) { d =>
-        rows.write.mode("overwrite").parquet(d)
-      }
-    } finally rows.unpersist(false)
+      IndexWrite.Encoded(rows, landing = Some(repIds), mask = Some(repIds ++ standingRemovals))
+    }
   }
 
   /** Physically remove tombstoned documents from both halves, folding any
@@ -1163,14 +1119,9 @@ object DedupQueries {
     * out unaffected. [[compactWinnowIndex]] folds tombstones in
     * physically.
     */
-  def deleteFromWinnowIndex(s: SparkSession, table: String, docIds: Seq[Long]): Unit = {
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    // a takedown of an id with a buffered update outstanding would mask
-    // the base rows but leave the delta rows matching — fold first
-    graft.sources.Tombstones.requireNoBufferedClash(
-      s, anchor, docIds, "doc_id", "deleteFromWinnowIndex", "compactWinnowIndex")
-    graft.sources.Tombstones.add(s, anchor, docIds)
-  }
+  def deleteFromWinnowIndex(s: SparkSession, table: String, docIds: Seq[Long]): Unit =
+    IndexWrite.delete(s, IndexWrite.Target(graft.sources.Tombstones.tableLocation(s, table),
+      "doc_id", "deleteFromWinnowIndex", "compactWinnowIndex"), docIds)
 
   /** The probe-facing view of a persisted winnow index: the fp-bucketed
     * table minus its tombstoned documents (broadcast anti-join — the
@@ -1202,8 +1153,7 @@ object DedupQueries {
     * fold ([[compactWinnowIndex]]) is the window's only physical rewrite.
     */
   def bufferWinnowUpdate(docs: DataFrame, table: String): Unit =
-    bufferWinnowBatch(docs,
-      graft.sources.Tombstones.tableLocation(docs.sparkSession, table), hwm = None)
+    replaceWinnow(docs, table, "bufferWinnowUpdate", None)
 
   /** EXACTLY-ONCE streaming ingest of one document micro-batch into the
     * winnow index — the third family's twin of
@@ -1218,39 +1168,29 @@ object DedupQueries {
     */
   def ingestWinnowBatch(
       docs: DataFrame, table: String, batchId: Long,
-      streamId: String = "default"): Boolean = {
-    val s = docs.sparkSession
-    // resolve the location-anchor ONCE and thread it through (the
-    // search/IVF twins take their immutable path as a parameter)
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, anchor, batchId, streamId, "ingestWinnowBatch")) false
-    else { bufferWinnowBatch(docs, anchor, Some((streamId, batchId))); true }
-  }
+      streamId: String = "default"): Boolean =
+    replaceWinnow(docs, table, "ingestWinnowBatch", Some((streamId, batchId)))
 
-  private def bufferWinnowBatch(
-      docs: DataFrame, anchor: String, hwm: Option[(String, Long)]): Unit = {
-    val s = docs.sparkSession
-    val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-      docs, "doc_id", "bufferWinnowUpdate")
+  /** A doc shrunk below the fingerprint floor lands no rows: a REMOVAL.
+    * Persisted: the rows feed both the landing ids and the delta write.
+    */
+  private def replaceWinnow(
+      docs: DataFrame, table: String, what: String,
+      fence: Option[(String, Long)]): Boolean =
+    IndexWrite.replace(docs, IndexWrite.Target(
+        graft.sources.Tombstones.tableLocation(docs.sparkSession, table),
+        "doc_id", what, "compactWinnowIndex"), fence) { (_, _) =>
+      val rows = winnowRows(docs).persist()
+      IndexWrite.Encoded(rows, landing = Some(IndexWrite.idsOf(rows, "doc_id")))
+    }
+
+  /** A batch's winnow index rows: its selected fingerprints, each with
+    * the doc's fingerprint count `n_fp_c`.
+    */
+  private def winnowRows(docs: DataFrame): DataFrame = {
     val fps = TextQueries.winnowSelected(docs)
       .select(col("doc_id"), col("fp")).distinct()
-    // persisted: the rows feed both the removal check and the delta write
-    val rows = fps.join(fps.groupBy("doc_id").agg(count(lit(1)).as("n_fp_c")), "doc_id")
-      .persist()
-    try {
-      // a doc shrunk below the fingerprint floor is a REMOVAL — refuse if
-      // its current rows live in the open window (mask covers base only)
-      val rowIds = rows.select("doc_id").distinct().collect().map(_.getLong(0)).toSeq
-      val ep = graft.sources.IndexManifest.current(s, anchor)
-      graft.sources.Tombstones.requireRemovalsNotBufferedOf(
-        s, ep, anchor, ids, rowIds, "doc_id", "bufferWinnowUpdate", "compactWinnowIndex")
-      graft.sources.Tombstones.requireNoResurrectOf(
-        s, ep, anchor, rowIds, "doc_id", "bufferWinnowUpdate", "compactWinnowIndex")
-      graft.sources.Tombstones.commitUpdateBatch(s, anchor, ids, None, hwm) { d =>
-        rows.write.mode("overwrite").parquet(d)
-      }
-    } finally rows.unpersist(false)
+    fps.join(fps.groupBy("doc_id").agg(count(lit(1)).as("n_fp_c")), "doc_id")
   }
 
   /** Physically remove tombstoned documents' fingerprints, fold any open
@@ -1265,7 +1205,7 @@ object DedupQueries {
   /** Append a document batch's winnowed fingerprints to an existing
     * [[writeWinnowIndex]] table — the daily-ingest lifecycle, now ATOMIC:
     * the batch lands as an INSERT-ONLY delta through ONE manifest commit
-    * ([[graft.sources.Tombstones.commitInsertBatch]]), so a crashed
+    * ([[graft.sources.IndexWrite.insert]]), so a crashed
     * append changes nothing and no standing file is touched (as-of reads
     * stay exact across appends). The physical bucket-append is the fold's
     * job ([[compactWinnowIndex]] rewrites base∪delta into fresh fp
@@ -1278,49 +1218,16 @@ object DedupQueries {
     */
   def appendWinnowIndex(docs: DataFrame, table: String): Unit = {
     val s = docs.sparkSession
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    // ONE epoch resolution threads the guards and the visible view
-    val ep = graft.sources.IndexManifest.current(s, anchor)
-    // idempotency guard: a replayed batch (operator retry, scheduler rerun)
+    // idempotency: a replayed batch (operator retry, scheduler rerun)
     // must not append its rows twice — duplicated (doc_id, fp) rows double
     // shared_fp counts and push df toward the cap, silently changing probe
-    // results. Docs already VISIBLE (base or an open delta batch) are
-    // dropped BEFORE winnowing: the membership check broadcasts the (small)
-    // batch id set against the visible scan, so the standing index is
-    // never shuffled, and the resulting already-present set is tiny. Net
-    // effect: append-then-probe == rebuild-then-probe holds under replay,
-    // not just for disjoint batches.
-    val batchIds = docs.select("doc_id").distinct()
-    // a deleted id may NOT be re-used before a compaction has folded its
-    // tombstone in: the anti-join that masks the deleted rows would mask
-    // the re-appended ones too (silent suppression), and skipping the
-    // tombstone check would resurrect the old rows (silent undelete) —
-    // both are data corruption, so the collision fails loudly instead
-    graft.sources.Tombstones.idSetOf(s, ep).foreach { t =>
-      val clash = t.withColumnRenamed("id", "doc_id")
-        .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"appendWinnowIndex: doc_ids ${clash.mkString(",")} were deleted from " +
-          s"$table — run compactWinnowIndex before re-using deleted ids")
-    }
-    val visible = graft.sources.Tombstones.maskedOverrideFrame(
-      s, ep, s.table(table), "doc_id")
-    val present: Array[Long] = visible.select("doc_id")
-      .join(broadcast(batchIds), Seq("doc_id"), "left_semi").distinct()
-      .collect().map(_.getLong(0))
-    import s.implicits._
-    val fresh = docs.join(
-      broadcast(present.toSeq.toDF("doc_id")), Seq("doc_id"), "left_anti")
-    // a fully-replayed batch leaves nothing fresh — a clean no-op, not an
-    // empty delta commit
-    if (fresh.isEmpty) return
-    val fps = TextQueries.winnowSelected(fresh)
-      .select(col("doc_id"), col("fp")).distinct()
-    val rows = fps.join(fps.groupBy("doc_id").agg(count(lit(1)).as("n_fp_c")), "doc_id")
-    graft.sources.Tombstones.commitInsertBatch(s, anchor, None) { d =>
-      rows.write.mode("overwrite").parquet(d)
-    }
+    // results — so docs already VISIBLE (base or an open delta batch) are
+    // dropped BEFORE winnowing, and append-then-probe == rebuild-then-probe
+    // holds under replay, not just for disjoint batches
+    IndexWrite.insert(docs, IndexWrite.Target(graft.sources.Tombstones.tableLocation(s, table),
+        "doc_id", "appendWinnowIndex", "compactWinnowIndex"), None,
+      ep => graft.sources.Tombstones.maskedOverrideFrame(s, ep, s.table(table), "doc_id"),
+      dropVisible = true) { (_, _, fresh) => IndexWrite.Encoded(winnowRows(fresh)) }
   }
 
   /** Replace changed documents in the winnow index — delete + fold +

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GQuery, Tables}
+import graft.sources.IndexWrite
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column queries: binary payloads with metadata extraction.
@@ -499,14 +500,9 @@ object MultimodalQueries {
     */
   def deleteFromPhashIndex(
       s: org.apache.spark.sql.SparkSession, table: String,
-      assetIds: Seq[Long]): Unit = {
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    // an id with a buffered/ingested batch outstanding must fold first
-    // (the shared resurrection guard)
-    graft.sources.Tombstones.requireNoBufferedClash(
-      s, anchor, assetIds, "asset_id", "deleteFromPhashIndex", "compactPhashIndex")
-    graft.sources.Tombstones.add(s, anchor, assetIds)
-  }
+      assetIds: Seq[Long]): Unit =
+    IndexWrite.delete(s, IndexWrite.Target(graft.sources.Tombstones.tableLocation(s, table),
+      "asset_id", "deleteFromPhashIndex", "compactPhashIndex"), assetIds)
 
   /** The probe-facing view of a persisted phash index: the bk-bucketed
     * table minus its tombstoned assets, plus any open update window's
@@ -521,15 +517,6 @@ object MultimodalQueries {
     graft.sources.Tombstones.maskedOverrideFrame(s, ep, s.table(table), "asset_id")
   }
 
-  /** [[phashIndexFrame]] AS OF committed epoch `version` — time travel
-    * over the phash index's takedown/update/ingest history (the fold ends
-    * the horizon; see [[graft.sources.Tombstones.tableFrameAsOf]]).
-    */
-  def phashIndexFrameAsOf(
-      s: org.apache.spark.sql.SparkSession, table: String, version: Long)
-      : org.apache.spark.sql.DataFrame =
-    graft.sources.Tombstones.tableFrameAsOf(s, table, "asset_id", version)
-
   /** Buffer one asset-update batch into the phash index WITHOUT
     * compacting — the media family's LSM memtable: the tombstone masks
     * the ids' base band keys, the re-hashed replacement signatures land
@@ -538,12 +525,11 @@ object MultimodalQueries {
     */
   def bufferPhashUpdate(
       assets: org.apache.spark.sql.DataFrame, table: String): Unit =
-    bufferPhashBatch(assets,
-      graft.sources.Tombstones.tableLocation(assets.sparkSession, table), hwm = None)
+    replacePhash(assets, table, "bufferPhashUpdate", None)
 
   /** EXACTLY-ONCE streaming ingest of one asset micro-batch into the
     * phash index — the media family joins
-    * [[graft.sources.Tombstones.fenceAdmits]] (same semantics as the
+    * [[graft.sources.IndexWrite.replace]]'s fence (same semantics as the
     * search/IVF/winnow/band/prefix twins: skip a replayed `batchId` of
     * the SAME lineage, refuse a different lineage loudly, rows + fence in
     * one atomic commit, fence carried across the compaction's location
@@ -552,36 +538,25 @@ object MultimodalQueries {
     */
   def ingestPhashBatch(
       assets: org.apache.spark.sql.DataFrame, table: String, batchId: Long,
-      streamId: String = "default"): Boolean = {
-    val s = assets.sparkSession
-    val anchor = graft.sources.Tombstones.tableLocation(s, table)
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, anchor, batchId, streamId, "ingestPhashBatch")) false
-    else { bufferPhashBatch(assets, anchor, Some((streamId, batchId))); true }
-  }
+      streamId: String = "default"): Boolean =
+    replacePhash(assets, table, "ingestPhashBatch", Some((streamId, batchId)))
 
-  private def bufferPhashBatch(
-      assets: org.apache.spark.sql.DataFrame, anchor: String,
-      hwm: Option[(String, Long)]): Unit = {
-    val s = assets.sparkSession
-    val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-      assets, "asset_id", "bufferPhashUpdate")
-    // the same GLOBAL id bound the build enforces eagerly: every probe
-    // classifies asset_id >= 1e6 as a planted variant, so an ingested
-    // collision would misfile from this batch on — fail here, not there
-    require(ids.forall(_ < 1000000L),
-      s"bufferPhashUpdate: asset_ids ${ids.filter(_ >= 1000000L).take(5).mkString(",")} " +
-        ">= 1e6 collide with the planted-variant id offsets — widen the " +
-        "offsets (and the oracle) first")
-    // every asset hashes, so the batch id list IS the row-landing set
-    graft.sources.Tombstones.requireNoResurrectOf(
-      s, graft.sources.IndexManifest.current(s, anchor),
-      anchor, ids, "asset_id", "bufferPhashUpdate", "compactPhashIndex")
-    val rows = phashBandKeys(Multimodal.perceptualHash(assets).toDF())
-    graft.sources.Tombstones.commitUpdateBatch(s, anchor, ids, None, hwm) { d =>
-      rows.write.mode("overwrite").parquet(d)
+  /** Every asset hashes, so the batch ids are the row-landing set. */
+  private def replacePhash(
+      assets: org.apache.spark.sql.DataFrame, table: String, what: String,
+      fence: Option[(String, Long)]): Boolean =
+    IndexWrite.replace(assets, IndexWrite.Target(
+        graft.sources.Tombstones.tableLocation(assets.sparkSession, table),
+        "asset_id", what, "compactPhashIndex"), fence) { (_, ids) =>
+      // the same GLOBAL id bound the build enforces eagerly: every probe
+      // classifies asset_id >= 1e6 as a planted variant, so an ingested
+      // collision would misfile from this batch on — fail here, not there
+      require(ids.forall(_ < 1000000L),
+        s"$what: asset_ids ${ids.filter(_ >= 1000000L).take(5).mkString(",")} " +
+          ">= 1e6 collide with the planted-variant id offsets — widen the " +
+          "offsets (and the oracle) first")
+      IndexWrite.Encoded(phashBandKeys(Multimodal.perceptualHash(assets).toDF()))
     }
-  }
 
   /** Physically remove tombstoned assets' band keys, fold any open update
     * window's delta batches in, and restore one file per bucket (the

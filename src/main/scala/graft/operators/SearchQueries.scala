@@ -3,6 +3,7 @@ package graft.operators
 import graft.{GQuery, Tables}
 import graft.functions.Exact.countStarSql
 import graft.functions.VectorOps
+import graft.sources.IndexWrite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -472,7 +473,7 @@ object SearchQueries {
   /** Incremental index maintenance — the batch-append path, now ATOMIC:
     * new documents' postings land as an INSERT-ONLY delta batch and the
     * 1-row stats advance by cell-wise addition IN THE SAME manifest
-    * commit ([[graft.sources.Tombstones.commitInsertBatch]]), so a probe
+    * commit ([[graft.sources.IndexWrite.insert]]), so a probe
     * sees rows-with-stats or neither — the postings-landed/stats-old
     * crash window the old in-place bucket append carried is structurally
     * gone, and a crashed append changes NOTHING (retry-safe). No standing
@@ -491,62 +492,20 @@ object SearchQueries {
     * replacements go through [[bufferSearchUpdate]]).
     */
   def appendSearchIndex(
-      s: SparkSession, table: String, path: String, newDocs: DataFrame): Unit = {
-    // an empty batch is a clean no-op (no empty delta commit)
-    if (newDocs.isEmpty) return
-    // one doc_id, two texts in ONE batch has no defined resolution order
-    // and would double-serve under an insert-only append — refuse
-    // (distributed check: append batches are data-plane-sized)
-    val dups = newDocs.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).select("doc_id")
-      .limit(5).collect().map(_.getLong(0))
-    require(dups.isEmpty,
-      s"appendSearchIndex: doc_ids ${dups.mkString(",")} appear more than " +
-        "once in the batch — resolve to one version per id upstream")
-    // ONE epoch resolution threads every read arm (deleted-id guard,
-    // present guard, stats base) — the writer-side one-epoch discipline;
-    // only the commit re-reads (its version check is the collision guard)
-    val ep = graft.sources.IndexManifest.current(s, path)
-    // a deleted id may not be re-used before a compaction folds its
-    // tombstone in: the probe-side anti-join would silently suppress the
-    // re-appended rows (the appendWinnowIndex discipline) — fail loudly
-    graft.sources.Tombstones.idSetOf(s, ep).foreach { t =>
-      val clash = t.withColumnRenamed("id", "doc_id")
-        .join(broadcast(newDocs.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"appendSearchIndex: doc_ids ${clash.mkString(",")} were deleted from " +
-          s"$table — run compactSearchIndex before re-using deleted ids")
+      s: SparkSession, table: String, path: String, newDocs: DataFrame): Unit =
+    IndexWrite.insert(newDocs, IndexWrite.Target(path, "doc_id", "appendSearchIndex",
+        "compactSearchIndex"), None, ep => visiblePostingsOf(s, table, ep)) { (ep, _, fresh) =>
+      // the stats delta derives from the batch's POSTINGS (the
+      // replaceSearch discipline): a sub-floor insert that lands no
+      // postings must count 0, not +1 n_docs — the stored stats always
+      // describe the serve set. Persisted: the delta agg and the delta
+      // write share the postings computation.
+      val old = epochStats(s, path, ep).head
+      val posts = postingsOf(fresh).persist()
+      val (nd, sdl) = contribution(posts)
+      IndexWrite.Encoded(posts,
+        stats = Some(statsFrame(s, old.getLong(0) + nd, old.getLong(1) + sdl)))
     }
-    // an id already serving would end up DOUBLE-served (insert-only means
-    // no masking tombstone) — the silent-corruption twin of the deleted-id
-    // clash; fail loudly toward the update path instead
-    val present = visiblePostingsOf(s, table, ep).select("doc_id")
-      .join(broadcast(newDocs.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
-      .limit(5).collect().map(_.getLong(0))
-    require(present.isEmpty,
-      s"appendSearchIndex: doc_ids ${present.mkString(",")} already serve in " +
-        s"$table — appends are insert-only; replace changed documents through " +
-        "bufferSearchUpdate/updateSearchIndex")
-    val old = epochStats(s, path, ep).head
-    // the stats delta derives from the batch's POSTINGS (the
-    // bufferSearchBatch discipline): a sub-floor insert that lands no
-    // postings must count 0, not +1 n_docs — the stored stats always
-    // describe the serve set. Persisted: the delta agg and the delta
-    // write share the postings computation.
-    val posts = postingsOf(newDocs).persist()
-    try {
-      val delta = posts.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-        .head
-      val newStats = s.createDataFrame(Seq(
-          (old.getLong(0) + delta.getLong(0), old.getLong(1) + delta.getLong(1))))
-        .toDF("n_docs", "tt")
-      graft.sources.Tombstones.commitInsertBatch(s, path, Some(newStats)) { d =>
-        posts.write.mode("overwrite").parquet(d)
-      }
-    } finally posts.unpersist(false)
-  }
 
   /** The PROBE-VISIBLE postings: base table rows minus tombstones (which
     * include every buffered-update id) plus the latest buffered
@@ -597,7 +556,7 @@ object SearchQueries {
     */
   def bufferSearchUpdate(
       s: SparkSession, table: String, path: String, docs: DataFrame): Unit =
-    bufferSearchBatch(s, table, path, docs, hwm = None)
+    replaceSearch(s, table, path, docs, "bufferSearchUpdate", None)
 
   /** EXACTLY-ONCE streaming ingest of one micro-batch — the LSM ingest
     * path (new or changed documents land as a delta batch through ONE
@@ -621,63 +580,47 @@ object SearchQueries {
   def ingestSearchBatch(
       s: SparkSession, table: String, path: String, docs: DataFrame,
       batchId: Long, streamId: String = "default"): Boolean =
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, path, batchId, streamId, "ingestSearchBatch")) false
-    else { bufferSearchBatch(s, table, path, docs, Some((streamId, batchId))); true }
+    replaceSearch(s, table, path, docs, "ingestSearchBatch", Some((streamId, batchId)))
 
-  private def bufferSearchBatch(
-      s: SparkSession, table: String, path: String, docs: DataFrame,
-      hwm: Option[(String, Long)]): Unit = {
+  private def replaceSearch(
+      s: SparkSession, table: String, path: String, docs: DataFrame, what: String,
+      fence: Option[(String, Long)]): Boolean = {
     import s.implicits._
-    // resolve the manifest ONCE and thread the epoch through every read
-    // arm (visible rows, stats) — the writer-side half of the probes'
-    // one-epoch-per-operation discipline; only the commit re-reads (its
-    // version check doubles as the single-writer collision guard)
-    val ep = graft.sources.IndexManifest.current(s, path)
-    // duplicate ids within ONE batch have no defined resolution order
-    // (deltaLatestOf dedups across batches only) — fail loudly
-    val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-      docs, "doc_id", "bufferSearchUpdate")
-    // the replaced versions' contribution comes from the PROBE-VISIBLE
-    // rows (base-unmasked, or an earlier batch of this window — either
-    // way exactly what scoring currently counts), so the stats stay exact
-    // after every batch, including re-updates and fresh inserts
-    val old = visiblePostingsOf(s, table, ep)
-      .join(broadcast(ids.toDF("doc_id")), Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl").distinct()
+    IndexWrite.replace(docs, IndexWrite.Target(path, "doc_id", what, "compactSearchIndex"),
+        fence) { (ep, ids) =>
+      // the replaced versions' contribution comes from the PROBE-VISIBLE
+      // rows (base-unmasked, or an earlier batch of this window — either
+      // way exactly what scoring currently counts), so the stats stay exact
+      // after every batch, including re-updates and fresh inserts
+      val (oldN, oldT) = contribution(visiblePostingsOf(s, table, ep)
+        .join(broadcast(ids.toDF("doc_id")), Seq("doc_id"), "left_semi"))
+      val cur = epochStats(s, path, ep).head
+      // persisted: the rows feed the stats add-side, the landing ids, and
+      // the delta write. The ADD side comes from the batch's POSTINGS
+      // (what will actually serve), never a raw batch-row count: a doc
+      // whose new text yields no postings is a REMOVAL and must count as 0
+      // — statsOf(docs) counted it (+1 n_docs), permanently inflating the
+      // stored stats on every sub-floor update or removed-id sub-floor
+      // redelivery until a fold recomputed them (review-found: pre-fold and
+      // post-fold rankings diverged with no data change)
+      val rows = postingsOf(docs).persist()
+      val (addN, addT) = contribution(rows)
+      IndexWrite.Encoded(rows, landing = Some(IndexWrite.idsOf(rows, "doc_id")),
+        stats = Some(statsFrame(s,
+          cur.getLong(0) - oldN + addN, cur.getLong(1) - oldT + addT)))
+    }
+  }
+
+  /** The (n_docs, Σdl) contribution of a postings frame's documents. */
+  private def contribution(postings: DataFrame): (Long, Long) = {
+    val r = postings.select("doc_id", "dl").distinct()
       .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
       .head
-    val cur = epochStats(s, path, ep).head
-    // persisted: the rows feed the stats add-side, the removal check, and
-    // the delta write
-    val rows = postingsOf(docs).persist()
-    try {
-      // the ADD side comes from the batch's POSTINGS (what will actually
-      // serve), never a raw batch-row count: a doc whose new text yields
-      // no postings is a REMOVAL and must count as 0 — statsOf(docs)
-      // counted it (+1 n_docs), permanently inflating the stored stats on
-      // every sub-floor update or removed-id sub-floor redelivery until a
-      // fold recomputed them (review-found: pre-fold and post-fold
-      // rankings diverged with no data change)
-      val add = rows.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-        .head
-      val newStats = s.createDataFrame(Seq((
-          cur.getLong(0) - old.getLong(0) + add.getLong(0),
-          cur.getLong(1) - old.getLong(1) + add.getLong(1))))
-        .toDF("n_docs", "tt")
-      // a doc whose new text yields no postings is a REMOVAL — refuse if
-      // its current postings live in the open window (mask covers base only)
-      val rowIds = rows.select("doc_id").distinct().collect().map(_.getLong(0)).toSeq
-      graft.sources.Tombstones.requireRemovalsNotBufferedOf(
-        s, ep, path, ids, rowIds, "doc_id", "bufferSearchUpdate", "compactSearchIndex")
-      graft.sources.Tombstones.requireNoResurrectOf(
-        s, ep, path, rowIds, "doc_id", "bufferSearchUpdate", "compactSearchIndex")
-      graft.sources.Tombstones.commitUpdateBatch(s, path, ids, Some(newStats), hwm) { d =>
-        rows.write.mode("overwrite").parquet(d)
-      }
-    } finally rows.unpersist(false)
+    (r.getLong(0), r.getLong(1))
   }
+
+  private def statsFrame(s: SparkSession, nDocs: Long, tt: Long): DataFrame =
+    s.createDataFrame(Seq((nDocs, tt))).toDF("n_docs", "tt")
 
   /** Probe the persisted index with the fixed query set: the term In-filter
     * pushes to the postings scan, df rides the term bucketing (no exchange),
@@ -709,36 +652,17 @@ object SearchQueries {
   def deleteFromSearchIndex(
       s: SparkSession, table: String, path: String, docIds: Seq[Long]): Unit = {
     import s.implicits._
-    // resolve the manifest ONCE and thread the epoch through every read
-    // arm (buffered-window guard, decrement source, stats) — the guard,
-    // the decrement, and the committed template must describe the SAME
-    // committed state; only the commit re-reads (its version check
-    // doubles as the single-writer collision guard)
-    val ep = graft.sources.IndexManifest.current(s, path)
-    // a takedown of an id with a buffered update outstanding would mask
-    // the base rows but leave the delta rows serving — fold the window
-    // first (fail loudly, the append-guard discipline)
-    graft.sources.Tombstones.deltaFrameOf(s, ep)
-      .map(_.select("doc_id").distinct()).foreach { b =>
-      val clash = b.join(broadcast(docIds.toDF("doc_id")), Seq("doc_id"), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"deleteFromSearchIndex: doc_ids ${clash.mkString(",")} have buffered " +
-          s"updates in $path's open window — run compactSearchIndex first")
-    }
-    // membership via a broadcast join, not an isin literal: a bulk
-    // takedown (thousands of ids) would otherwise inline a giant In-list
-    // into the plan; the id frame broadcasts like every tombstone mask
-    val del = graft.sources.Tombstones.filterOf(s.table(table), ep, "doc_id")
-      .join(broadcast(docIds.toDF("doc_id")), Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .head
-    val old = epochStats(s, path, ep).head
-    graft.sources.Tombstones.addWithStats(s, path, docIds,
-      s.createDataFrame(Seq(
-          (old.getLong(0) - del.getLong(0), old.getLong(1) - del.getLong(1))))
-        .toDF("n_docs", "tt"))
+    // the guard, the decrement and the committed template describe ONE
+    // resolved epoch; membership via a broadcast join, not an isin
+    // literal: a bulk takedown (thousands of ids) would otherwise inline a
+    // giant In-list into the plan
+    IndexWrite.delete(s, IndexWrite.Target(path, "doc_id", "deleteFromSearchIndex",
+        "compactSearchIndex"), docIds, stats = Some { ep =>
+      val (nd, sdl) = contribution(graft.sources.Tombstones.filterOf(s.table(table), ep, "doc_id")
+        .join(broadcast(docIds.toDF("doc_id")), Seq("doc_id"), "left_semi"))
+      val old = epochStats(s, path, ep).head
+      statsFrame(s, old.getLong(0) - nd, old.getLong(1) - sdl)
+    })
   }
 
   /** Replace changed documents in the index — the UPDATE of the lifecycle's

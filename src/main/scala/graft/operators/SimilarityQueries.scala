@@ -3,6 +3,7 @@ package graft.operators
 import graft.GQuery
 import graft.functions.Exact.countStarSql
 import graft.functions.VectorOps
+import graft.sources.IndexWrite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -798,7 +799,8 @@ object SimilarityQueries {
     * else needs maintenance.
     */
   def deleteFromRpSketch(s: SparkSession, path: String, vecIds: Seq[Long]): Unit =
-    graft.sources.Tombstones.add(s, path, vecIds)
+    IndexWrite.delete(s,
+      IndexWrite.Target(path, "vec_id", "deleteFromRpSketch", "compactRpSketch"), vecIds)
 
   /** Fold an RP sketch's tombstones in (flat rewrite + swap + clear). */
   def compactRpSketch(
@@ -1300,7 +1302,7 @@ object SimilarityQueries {
     * new vectors are assigned against the index's EXISTING seed set
     * (cells never move once built) and land as an INSERT-ONLY delta batch
     * partitioned by cell through ONE manifest commit
-    * ([[graft.sources.Tombstones.commitInsertBatch]]) — a crashed append
+    * ([[graft.sources.IndexWrite.insert]]) — a crashed append
     * changes nothing, no standing file is touched (as-of reads stay exact
     * across appends — the old in-place partition append had to fence them
     * with a generation bump), and probes prune delta dirs by cell exactly
@@ -1312,69 +1314,36 @@ object SimilarityQueries {
     */
   def appendIvfIndex(
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
-      nSeeds: Int = N_SEEDS, trained: Boolean = false): Unit = {
-    // an empty batch is a clean no-op — committing it would land an
-    // EMPTY cell-partitioned delta dir (a dynamic-partition write with
-    // zero rows produces no schema-bearing file), which every later
-    // delta read chokes on: the previously harmless zero-row scheduled
-    // append must not brick the index
-    if (newRows.isEmpty) return
-    // one id, two vectors in ONE batch has no defined resolution order
-    // and would double-serve under an insert-only append — refuse (the
-    // requireUniqueBatchIds contract, checked DISTRIBUTED here because
-    // append batches are data-plane-sized, never driver-collected)
-    val dups = newRows.groupBy("vec_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).select("vec_id")
-      .limit(5).collect().map(_.getLong(0))
-    require(dups.isEmpty,
-      s"appendIvfIndex: vec_ids ${dups.mkString(",")} appear more than once " +
-        "in the batch — resolve to one row per id upstream")
-    // ONE epoch resolution threads both guards' read arms
-    val ep = graft.sources.IndexManifest.current(s, path)
-    // a deleted id may not be re-used before a compaction folds its
-    // tombstone in: every probe's anti-join would silently MASK the
-    // re-appended rows (silent suppression — the corruption the
-    // appendSearchIndex/appendWinnowIndex guards exist to prevent); fail
-    // loudly instead
-    graft.sources.Tombstones.idSetOf(s, ep).foreach { t =>
-      val clash = t.withColumnRenamed("id", "vec_id")
-        .join(broadcast(newRows.select("vec_id").distinct()), Seq("vec_id"), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"appendIvfIndex: vec_ids ${clash.mkString(",")} were deleted from " +
-          s"$path — run compactIvfIndex before re-using deleted ids")
+      nSeeds: Int = N_SEEDS, trained: Boolean = false): Unit =
+    // the served id view need not be masked: a tombstoned id is refused as
+    // deleted before it
+    IndexWrite.insert(newRows, IndexWrite.Target(path, "vec_id", "appendIvfIndex",
+        "compactIvfIndex"), None, ep => {
+      val base = s.read.parquet(ep.flatMap(_.data).getOrElse(path)).select("vec_id")
+      graft.sources.Tombstones.deltaFrameOf(s, ep)
+        .fold(base)(d => base.unionByName(d.select("vec_id")))
+    }) { (_, _, fresh) =>
+      IndexWrite.Encoded(ivfRows(s, dir, path, fresh, nSeeds, trained), Seq("cell"))
     }
-    // an id already serving (base or an open delta) would double-serve
-    // under an insert-only append — fail loudly toward the update path
-    val baseRows = s.read.parquet(ep.flatMap(_.data).getOrElse(path))
-    val visIds = graft.sources.Tombstones.deltaFrameOf(s, ep) match {
-      case Some(d) => baseRows.select("vec_id").unionByName(d.select("vec_id"))
-      case None    => baseRows.select("vec_id")
-    }
-    val present = visIds
-      .join(broadcast(newRows.select("vec_id").distinct()), Seq("vec_id"), "left_semi")
-      .limit(5).collect().map(_.getLong(0))
-    require(present.isEmpty,
-      s"appendIvfIndex: vec_ids ${present.mkString(",")} already serve in " +
-        s"$path — appends are insert-only; replace changed vectors through " +
-        "bufferIvfUpdate/updateIvfIndex")
-    // the append must assign with the SAME quantizer the index was built
-    // with — a trained index appended against raw seeds would scatter new
-    // rows into the wrong cells (geometry is the contract, as on probes).
-    // The persisted sidecar is authoritative; the params are the fallback
-    // for pre-sidecar indexes.
+
+  /** `rows` (the embeddings schema) assigned to cells with the SAME
+    * quantizer the index was built with — a trained index fed against raw
+    * seeds would scatter new rows into the wrong cells (geometry is the
+    * contract, as on probes). The persisted sidecar is authoritative; the
+    * params are the fallback for pre-sidecar indexes.
+    */
+  private def ivfRows(
+      s: SparkSession, dir: String, path: String, rows: DataFrame,
+      nSeeds: Int, trained: Boolean): DataFrame = {
     val (ns, tr) = quantizerConfigOf(s, path, nSeeds, trained)
     val em = VectorOps.normalizedMeta(s, dir)
     val seeds = if (tr) trainedSeedSet(em, ns) else seedSet(em, ns)
-    val nw = newRows
+    val nw = rows
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
-    val assigned = assignToSeeds(nw, seeds)
+    assignToSeeds(nw, seeds)
       .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("seed_id").as("cell"))
-    graft.sources.Tombstones.commitInsertBatch(s, path, None) { d =>
-      assigned.write.mode("overwrite").partitionBy("cell").parquet(d)
-    }
   }
 
   /** Delete vectors from a persisted IVF index — the takedown path: the
@@ -1387,13 +1356,9 @@ object SimilarityQueries {
     * index equals a fresh build over the survivors (pinned in
     * TombstoneSpec).
     */
-  def deleteFromIvfIndex(s: SparkSession, path: String, vecIds: Seq[Long]): Unit = {
-    // a takedown of an id with a buffered update outstanding would mask
-    // the base rows but leave the delta rows serving — fold first
-    graft.sources.Tombstones.requireNoBufferedClash(
-      s, path, vecIds, "vec_id", "deleteFromIvfIndex", "compactIvfIndex")
-    graft.sources.Tombstones.add(s, path, vecIds)
-  }
+  def deleteFromIvfIndex(s: SparkSession, path: String, vecIds: Seq[Long]): Unit =
+    IndexWrite.delete(s,
+      IndexWrite.Target(path, "vec_id", "deleteFromIvfIndex", "compactIvfIndex"), vecIds)
 
   /** Replace changed vectors in a persisted IVF index — the UPDATE
     * completing the vector family's CRUD (the updateSearchIndex
@@ -1609,7 +1574,7 @@ object SimilarityQueries {
   def bufferIvfUpdate(
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
       nSeeds: Int = N_SEEDS, trained: Boolean = false): Unit =
-    bufferIvfBatch(s, dir, path, newRows, None, nSeeds, trained)
+    replaceIvf(s, dir, path, newRows, "bufferIvfUpdate", None, nSeeds, trained)
 
   /** EXACTLY-ONCE streaming ingest of one vector micro-batch — the IVF
     * twin of [[graft.operators.SearchQueries.ingestSearchBatch]] (see its
@@ -1629,34 +1594,19 @@ object SimilarityQueries {
   def ingestIvfBatch(
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
       batchId: Long, streamId: String = "default"): Boolean =
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, path, batchId, streamId, "ingestIvfBatch")) false
-    else { bufferIvfBatch(s, dir, path, newRows, Some((streamId, batchId))); true }
+    replaceIvf(s, dir, path, newRows, "ingestIvfBatch", Some((streamId, batchId)),
+      N_SEEDS, trained = false)
 
-  private def bufferIvfBatch(
-      s: SparkSession, dir: String, path: String, newRows: DataFrame,
-      hwm: Option[(String, Long)],
-      nSeeds: Int = N_SEEDS, trained: Boolean = false): Unit = {
-    val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-      newRows, "vec_id", "bufferIvfUpdate")
-    // every IVF batch row is a replacement row, so the batch id list IS
-    // the row-landing set
-    graft.sources.Tombstones.requireNoResurrectOf(
-      s, graft.sources.IndexManifest.current(s, path),
-      path, ids, "vec_id", "bufferIvfUpdate", "compactIvfIndex")
-    val (ns, tr) = quantizerConfigOf(s, path, nSeeds, trained)
-    val em = VectorOps.normalizedMeta(s, dir)
-    val seeds = if (tr) trainedSeedSet(em, ns) else seedSet(em, ns)
-    val nw = newRows
-      .select(col("vec_id"), col("label"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", expr(s"sqrt(${VectorOps.dotExpr("v", "v")})"))
-    val assigned = assignToSeeds(nw, seeds)
-      .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("seed_id").as("cell"))
-    graft.sources.Tombstones.commitUpdateBatch(s, path, ids, None, hwm) { d =>
-      assigned.write.mode("overwrite").partitionBy("cell").parquet(d)
+  /** Every IVF batch row is a replacement row, so the batch ids are the
+    * row-landing set.
+    */
+  private def replaceIvf(
+      s: SparkSession, dir: String, path: String, newRows: DataFrame, what: String,
+      fence: Option[(String, Long)], nSeeds: Int, trained: Boolean): Boolean =
+    IndexWrite.replace(newRows,
+        IndexWrite.Target(path, "vec_id", what, "compactIvfIndex"), fence) { (_, _) =>
+      IndexWrite.Encoded(ivfRows(s, dir, path, newRows, nSeeds, trained), Seq("cell"))
     }
-  }
 
   /** Hard-negative mining served from the PERSISTED IVF index — the
     * index-scale form `pipeline_hard_negatives` promises: candidates come
@@ -1901,7 +1851,7 @@ object SimilarityQueries {
     * the delta by KEY OVERRIDE (a node in the open window serves only its
     * newest adjacency), so no masking fragment is needed and takedown
     * tombstones keep their result-surface-only semantics; ONE
-    * [[graft.sources.Tombstones.commitInsertBatch]] commit makes the
+    * [[graft.sources.IndexWrite.insert]] commit makes the
     * whole batch visible or nothing.
     *
     * SYSTEM-OF-RECORD CONTRACT: the graph stores topology, never vectors
@@ -1913,7 +1863,7 @@ object SimilarityQueries {
   def bufferGraphInsert(
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
       nBuckets: Long = KNN_BUCKETS): Unit =
-    bufferGraphBatch(s, dir, path, newRows, None, nBuckets)
+    insertGraph(s, dir, path, newRows, "bufferGraphInsert", None, nBuckets)
 
   /** EXACTLY-ONCE streaming ingest of one vector micro-batch into the
     * k-NN graph — the LAST index family joins the shared fence (see
@@ -1927,51 +1877,38 @@ object SimilarityQueries {
       s: SparkSession, dir: String, path: String, newRows: DataFrame,
       batchId: Long, streamId: String = "default",
       nBuckets: Long = KNN_BUCKETS): Boolean =
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, path, batchId, streamId, "ingestGraphBatch")) false
-    else {
-      bufferGraphBatch(s, dir, path, newRows, Some((streamId, batchId)), nBuckets)
-      true
+    insertGraph(s, dir, path, newRows, "ingestGraphBatch", Some((streamId, batchId)),
+      nBuckets)
+
+  /** Insert-only: an id already a graph MEMBER (edge rows or sentinel)
+    * would double-define its adjacency, so it is refused toward
+    * delete + fold + re-ingest.
+    */
+  private def insertGraph(
+      s: SparkSession, dir: String, path: String, newRows: DataFrame, what: String,
+      fence: Option[(String, Long)], nBuckets: Long): Boolean =
+    IndexWrite.insert(newRows, IndexWrite.Target(path, "vec_id", what, "compactKnnGraph"),
+        fence, ep => graphRowsVisibleOf(s, ep, path)) { (_, visible, fresh) =>
+      IndexWrite.Encoded(graphDelta(s, dir, visible, fresh, what, nBuckets), Seq("bucket"))
     }
 
-  private def bufferGraphBatch(
-      s: SparkSession, dir: String, path: String, newRows: DataFrame,
-      hwm: Option[(String, Long)], nBuckets: Long = KNN_BUCKETS): Unit = {
-    import s.implicits._
-    // empty batch = clean no-op: an empty bucket-partitioned delta dir
-    // has no schema-bearing file and would brick every later delta read
-    if (newRows.isEmpty) return
-    val ep = graft.sources.IndexManifest.current(s, path)
-    val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-      newRows, "vec_id", "bufferGraphInsert")
-    // a deleted id may not re-enter before a fold (the shared guard)
-    graft.sources.Tombstones.idSetOf(s, ep).foreach { t =>
-      val clash = t.withColumnRenamed("id", "vec_id")
-        .join(broadcast(ids.toDF("vec_id")), Seq("vec_id"), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"bufferGraphInsert: vec_ids ${clash.mkString(",")} were deleted from " +
-          s"$path — run compactKnnGraph before re-using deleted ids")
-    }
-    val visible = graphRowsVisibleOf(s, ep, path)
-    // insert-only: an id already a graph MEMBER (edge rows or sentinel)
-    // would double-define its adjacency — refuse toward delete+re-ingest
-    val present = visible.select("vec_id").distinct()
-      .join(broadcast(ids.toDF("vec_id")), Seq("vec_id"), "left_semi")
-      .limit(5).collect().map(_.getLong(0))
-    require(present.isEmpty,
-      s"bufferGraphInsert: vec_ids ${present.mkString(",")} are already graph " +
-        s"members in $path — inserts only; replace via deleteFromKnnGraph + " +
-        "compactKnnGraph + re-ingest")
+  /** One insert batch's graph delta: the new nodes' rows plus replacement
+    * rows for the standing nodes whose top-3 admitted a new node.
+    */
+  private def graphDelta(
+      s: SparkSession, dir: String, visible: DataFrame, newRows: DataFrame,
+      what: String, nBuckets: Long): DataFrame = {
+    val e = VectorOps.normalized(s, dir)
     // the system-of-record check: every batch id must score from the
     // corpus table (bounded id list broadcast; the corpus never shuffles)
-    val e = VectorOps.normalized(s, dir)
+    import s.implicits._
+    val ids = newRows.select("vec_id").collect().map(_.getLong(0)).toSeq
     val inCorpus = e.select("vec_id")
       .join(broadcast(ids.toDF("vec_id")), Seq("vec_id"), "left_semi")
-      .distinct().collect().map(_.getLong(0)).toSet
+      .collect().map(_.getLong(0)).toSet
     val missing = ids.filterNot(inCorpus).take(5)
     require(missing.isEmpty,
-      s"bufferGraphInsert: vec_ids ${missing.mkString(",")} are not in the " +
+      s"$what: vec_ids ${missing.mkString(",")} are not in the " +
         s"embeddings corpus under '$dir' — the graph stores topology only; " +
         "land the corpus append first (probes score from the corpus table)")
     // frozen geometry: the same full-corpus seed set the build used
@@ -2020,11 +1957,8 @@ object SimilarityQueries {
       .join(rows.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), lit(0L).as("rank"), lit(-1L).as("nbr_id"),
         lit(0.0).as("cos"), col("seed_id").as("cell"))
-    val delta = rows.unionByName(sentinels)
+    rows.unionByName(sentinels)
       .withColumn("bucket", pmod(col("vec_id"), lit(nBuckets)))
-    graft.sources.Tombstones.commitInsertBatch(s, path, None, hwm) { d =>
-      delta.write.mode("overwrite").partitionBy("bucket").parquet(d)
-    }
   }
 
   /** The probe-visible rows of a persisted graph against a SPECIFIC
@@ -2875,28 +2809,13 @@ object SimilarityQueries {
   def ingestPqBatch(
       s: SparkSession, path: String, newRows: DataFrame,
       batchId: Long, streamId: String = "default"): Boolean =
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, path, batchId, streamId, "ingestPqBatch")) false
-    else {
-      val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-        newRows, "vec_id", "ingestPqBatch")
-      // a deleted id may not re-enter before a fold (review-found: PQ/SQ
-      // were the two families missing the shared resurrect guard — the
-      // delta code rows would serve under a base-only mask and the fold
-      // would persist them, silently undoing the takedown)
-      graft.sources.Tombstones.requireNoResurrectOf(
-        s, graft.sources.IndexManifest.current(s, path),
-        path, ids, "vec_id", "ingestPqBatch", "compactPqIndex")
+    IndexWrite.replace(newRows, IndexWrite.Target(path, "vec_id", "ingestPqBatch",
+        "compactPqIndex"), Some((streamId, batchId))) { (_, _) =>
       val subs = subvectors(newRows
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")))
       val cents = broadcast(s.read.parquet(s"$path/codebook"))
-      val (codes, _) = pqPartsFrom(subs, cents)
-      graft.sources.Tombstones.commitUpdateBatch(
-          s, path, ids, None, Some((streamId, batchId))) { d =>
-        codes.write.mode("overwrite").parquet(d)
-      }
-      true
+      IndexWrite.Encoded(pqPartsFrom(subs, cents)._1)
     }
 
   /** Delete vectors from a persisted PQ index — the takedown path for the
@@ -2907,14 +2826,9 @@ object SimilarityQueries {
     * invalidates it — the stats-under-deletion discipline's "immutable
     * encoding artifact" case).
     */
-  def deleteFromPqIndex(s: SparkSession, path: String, vecIds: Seq[Long]): Unit = {
-    // an id in the open ingest window would keep serving from its delta
-    // row (tombstones mask the BASE only) and the fold would resurrect it
-    // permanently — fold first, loudly
-    graft.sources.Tombstones.requireNoBufferedClash(
-      s, path, vecIds, "vec_id", "deleteFromPqIndex", "compactPqIndex")
-    graft.sources.Tombstones.add(s, path, vecIds)
-  }
+  def deleteFromPqIndex(s: SparkSession, path: String, vecIds: Seq[Long]): Unit =
+    IndexWrite.delete(s,
+      IndexWrite.Target(path, "vec_id", "deleteFromPqIndex", "compactPqIndex"), vecIds)
 
   /** Fold a PQ index's tombstones in: rewrite codes minus deleted rows,
     * atomic swap, clear the sidecar (codebook untouched).
@@ -3282,25 +3196,14 @@ object SimilarityQueries {
   def ingestSqBatch(
       s: SparkSession, path: String, newRows: DataFrame,
       batchId: Long, streamId: String = "default"): Boolean =
-    if (!graft.sources.Tombstones.fenceAdmits(
-        s, path, batchId, streamId, "ingestSqBatch")) false
-    else {
-      val ids = graft.sources.Tombstones.requireUniqueBatchIds(
-        newRows, "vec_id", "ingestSqBatch")
-      graft.sources.Tombstones.requireNoResurrectOf(
-        s, graft.sources.IndexManifest.current(s, path),
-        path, ids, "vec_id", "ingestSqBatch", "compactSqIndex")
+    IndexWrite.replace(newRows, IndexWrite.Target(path, "vec_id", "ingestSqBatch",
+        "compactSqIndex"), Some((streamId, batchId))) { (_, _) =>
       val st = broadcast(s.read.parquet(s"$path/stats"))
-      val codes = newRows
+      IndexWrite.Encoded(newRows
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         .crossJoin(st)
-        .select(col("vec_id"), expr(sqCodeExpr).as("cd"))
-      graft.sources.Tombstones.commitUpdateBatch(
-          s, path, ids, None, Some((streamId, batchId))) { d =>
-        codes.write.mode("overwrite").parquet(d)
-      }
-      true
+        .select(col("vec_id"), expr(sqCodeExpr).as("cd")))
     }
 
   /** Delete vectors from a persisted SQ8 index. The 1-row (mns, mxs)
@@ -3312,12 +3215,9 @@ object SimilarityQueries {
     * [[compactSqIndex]] removes them physically, and the grid stays the
     * build-time one until a full rebuild re-encodes.
     */
-  def deleteFromSqIndex(s: SparkSession, path: String, vecIds: Seq[Long]): Unit = {
-    // same clash rule as every family with an open-window ingest path
-    graft.sources.Tombstones.requireNoBufferedClash(
-      s, path, vecIds, "vec_id", "deleteFromSqIndex", "compactSqIndex")
-    graft.sources.Tombstones.add(s, path, vecIds)
-  }
+  def deleteFromSqIndex(s: SparkSession, path: String, vecIds: Seq[Long]): Unit =
+    IndexWrite.delete(s,
+      IndexWrite.Target(path, "vec_id", "deleteFromSqIndex", "compactSqIndex"), vecIds)
 
   /** Fold an SQ index's tombstones in: rewrite codes minus deleted rows,
     * atomic swap, clear the sidecar (stats/grid untouched).

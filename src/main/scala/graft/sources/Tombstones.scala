@@ -154,8 +154,7 @@ object Tombstones {
       s: SparkSession, indexPath: String, ids: Seq[Long], newStats: DataFrame): Unit = {
     require(ids.nonEmpty, "Tombstones.addWithStats: empty id set")
     val e = IndexManifest.next(s, indexPath)
-    val statsDir = epochStatsDir(indexPath, e.version)
-    newStats.write.mode("overwrite").parquet(statsDir)
+    val statsDir = writeEpochStats(indexPath, e.version, newStats)
     val frag = writeFragment(s, indexPath, e.version, ids)
     IndexManifest.commit(s, indexPath,
       e.copy(stats = Some(statsDir), tombstones = e.tombstones :+ frag))
@@ -171,8 +170,7 @@ object Tombstones {
   def advanceStats(
       s: SparkSession, indexPath: String, newStats: DataFrame): Unit = {
     val e = IndexManifest.next(s, indexPath)
-    val statsDir = epochStatsDir(indexPath, e.version)
-    newStats.write.mode("overwrite").parquet(statsDir)
+    val statsDir = writeEpochStats(indexPath, e.version, newStats)
     IndexManifest.commit(s, indexPath, e.copy(stats = Some(statsDir)))
   }
 
@@ -200,76 +198,6 @@ object Tombstones {
   def deltaDir(indexPath: String): String =
     indexPath.stripSuffix("/") + "_delta"
 
-  /** Land one buffered update batch in ONE commit: the updated ids'
-    * tombstone fragment (masking their base rows), the batch's replacement
-    * rows, and optionally replacement stored stats — a probe sees all
-    * three or none, and a crashed buffer call changes nothing (the same
-    * atomicity contract as [[addWithStats]]). `writeBatch` materializes
-    * the replacement rows under the directory it is given. `hwm` (the
-    * streaming-ingest path) advances the manifest's (stream, batch-id)
-    * ingest mark IN the same commit — rows and replay fence land
-    * atomically, so an at-least-once redelivery can never observe
-    * rows-without-fence or fence-without-rows.
-    */
-  def commitUpdateBatch(
-      s: SparkSession, indexPath: String, ids: Seq[Long],
-      newStats: Option[DataFrame], hwm: Option[(String, Long)] = None)(
-      writeBatch: String => Unit): Unit = {
-    require(ids.nonEmpty, "Tombstones.commitUpdateBatch: empty id set")
-    val e = IndexManifest.next(s, indexPath)
-    val batch = s"${deltaDir(indexPath)}/b${e.version}"
-    writeBatch(batch)
-    val statsDir = newStats.map { df =>
-      val d = epochStatsDir(indexPath, e.version)
-      df.write.mode("overwrite").parquet(d)
-      d
-    }
-    val frag = writeFragment(s, indexPath, e.version, ids)
-    IndexManifest.commit(s, indexPath,
-      e.copy(stats = statsDir.orElse(e.stats),
-        tombstones = e.tombstones :+ frag,
-        deltas = e.deltas :+ batch,
-        ingestHwm = hwm.map(_._2).orElse(e.ingestHwm),
-        ingestStream = hwm.map(_._1).orElse(e.ingestStream)))
-  }
-
-  /** Land one INSERT-ONLY batch in ONE commit: the batch's new rows as a
-    * delta batch plus (optionally) advanced stored stats — no masking
-    * tombstone, because the rows are NEW (the caller guards that none of
-    * the ids already serve). This is the atomic form of the plain batch
-    * append: rows and stats become visible together or not at all, the
-    * base generation never moves (no standing file is touched, so as-of
-    * reads stay exact ACROSS appends), and — unlike [[commitUpdateBatch]]
-    * — no id list is collected to the driver, so the COMMIT is O(1) in
-    * batch size (a daily append is data-plane, not a bounded update
-    * request). PROBES, however, pay one broadcast of the open window's
-    * distinct id set until the fold ([[maskedOverrideFrame]] — the same
-    * cardinality [[deltaLatestOf]] already broadcasts), so the fold
-    * cadence (`foldEvery`, [[needsCompaction]]) must keep the open window
-    * broadcast-sized: land a huge append, fold promptly. The fold
-    * ([[compactBucketedIndex]]/[[compactFlat]]) does the physical
-    * bucket/cell append. `hwm` threads the streaming-ingest fence exactly
-    * as in [[commitUpdateBatch]].
-    */
-  def commitInsertBatch(
-      s: SparkSession, indexPath: String,
-      newStats: Option[DataFrame], hwm: Option[(String, Long)] = None)(
-      writeBatch: String => Unit): Unit = {
-    val e = IndexManifest.next(s, indexPath)
-    val batch = s"${deltaDir(indexPath)}/b${e.version}"
-    writeBatch(batch)
-    val statsDir = newStats.map { df =>
-      val d = epochStatsDir(indexPath, e.version)
-      df.write.mode("overwrite").parquet(d)
-      d
-    }
-    IndexManifest.commit(s, indexPath,
-      e.copy(stats = statsDir.orElse(e.stats),
-        deltas = e.deltas :+ batch,
-        ingestHwm = hwm.map(_._2).orElse(e.ingestHwm),
-        ingestStream = hwm.map(_._1).orElse(e.ingestStream)))
-  }
-
   /** The committed streaming-ingest fence, if any: (stream lineage,
     * high-water batch id). The REPLAY test for an arriving (streamId,
     * batchId): same lineage and batchId at or below the mark → skip;
@@ -280,36 +208,13 @@ object Tombstones {
     * verifying the input is a replay).
     */
   def ingestFence(s: SparkSession, indexPath: String): Option[(String, Long)] = {
-    // uncached on purpose: the exactly-once admission ([[fenceAdmits]])
+    // uncached on purpose: the exactly-once admission (IndexWrite's fence)
     // must see the true committed mark — a ≤-ttl-stale fence would
     // re-admit an already-committed batch as new
     val cur = IndexManifest.currentUncached(s, indexPath)
     for (h <- cur.flatMap(_.ingestHwm))
       yield (cur.flatMap(_.ingestStream).getOrElse("default"), h)
   }
-
-  /** The shared admission test of every exactly-once ingest path (the
-    * one source of truth for the fence semantics — search, IVF, and
-    * winnow all delegate here): true = the batch is new, ingest it;
-    * false = an at-least-once replay within the recorded lineage, skip
-    * it; a DIFFERENT lineage throws loudly (its ids restart from 0 —
-    * fencing it would silently drop never-ingested data). `what` names
-    * the calling ingest function in the error.
-    */
-  def fenceAdmits(
-      s: SparkSession, indexPath: String, batchId: Long, streamId: String,
-      what: String): Boolean =
-    ingestFence(s, indexPath) match {
-      case Some((st, _)) if st != streamId =>
-        throw new IllegalArgumentException(
-          s"$what: $indexPath was ingested by stream lineage '$st' but this " +
-            s"batch is from '$streamId' — batch ids are monotone only within one " +
-            "checkpoint, so fencing across lineages would silently drop data; reuse " +
-            "the original checkpoint, or run Tombstones.resetIngestFence after " +
-            "verifying the new input is not a replay")
-      case Some((_, h)) => batchId > h
-      case None => true
-    }
 
   /** The MIN COMMON ingest fence across a group of sibling indexes — the
     * serving snapshot a multi-index reader
@@ -401,143 +306,16 @@ object Tombstones {
     }.reduce(_ unionByName _))
   }
 
-  /** Latest-batch-per-id view of the live buffered batches: an id updated
-    * twice in one window surfaces only its newest rows (the batches are
-    * window-bounded, so the per-id max is a small aggregate).
+  /** Latest-batch-per-id view of an epoch's buffered batches: an id
+    * updated twice in one window surfaces only its newest rows (the
+    * batches are window-bounded, so the per-id max is a small aggregate).
     */
-  def deltaLatest(s: SparkSession, indexPath: String, idCol: String): Option[DataFrame] =
-    deltaLatestOf(s, IndexManifest.current(s, indexPath), idCol)
-
-  /** [[deltaLatest]] of a SPECIFIC epoch. */
   def deltaLatestOf(
       s: SparkSession, ep: Option[IndexManifest.Epoch], idCol: String): Option[DataFrame] =
     deltaFrameOf(s, ep).map { d =>
       val latest = d.groupBy(col(idCol)).agg(max(col("batch_seq")).as("batch_seq"))
       d.join(broadcast(latest), Seq(idCol, "batch_seq")).drop("batch_seq")
     }
-
-  /** Ids with an outstanding buffered batch, if any. */
-  def bufferedIdSet(s: SparkSession, indexPath: String, idCol: String): Option[DataFrame] =
-    deltaFrame(s, indexPath).map(_.select(idCol).distinct())
-
-  /** The shared delete-path guard: a takedown of an id with a buffered
-    * update outstanding would mask the BASE rows but leave the delta rows
-    * serving — and the next fold would write those delta rows into the
-    * compacted base while clearing the tombstone, permanently resurrecting
-    * a deleted id. Every family's delete path must fold the window first;
-    * this fails loudly on the clash (`compactHint` names the family's
-    * fold).
-    */
-  def requireNoBufferedClash(
-      s: SparkSession, indexPath: String, ids: Seq[Long], idCol: String,
-      what: String, compactHint: String): Unit =
-    requireNoBufferedClashOf(s, IndexManifest.currentUncached(s, indexPath),
-      indexPath, ids, idCol, what, compactHint)
-
-  /** [[requireNoBufferedClash]] against a pre-resolved epoch — the
-    * writer-side one-epoch-per-operation discipline (a buffer path that
-    * resolves once threads the same epoch through every guard and can
-    * never validate against state its commit no longer sees).
-    */
-  def requireNoBufferedClashOf(
-      s: SparkSession, ep: Option[IndexManifest.Epoch], indexPath: String,
-      ids: Seq[Long], idCol: String, what: String, compactHint: String): Unit =
-    deltaFrameOf(s, ep).map(_.select(idCol).distinct()).foreach { b =>
-      import s.implicits._
-      val clash = b.join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"$what: ${idCol}s ${clash.mkString(",")} have buffered updates in " +
-          s"$indexPath's open window — run $compactHint first")
-    }
-
-  /** The buffered-update REMOVAL guard: a batch id with NO replacement
-    * rows (a document shrunk below its family's indexability floor — no
-    * shingles, no fingerprints, no postings) is a removal, and a removal
-    * takes effect through the masking fragment, WHICH COVERS BASE ROWS
-    * ONLY — if the id's current rows live in the open window (an earlier
-    * batch of this window updated it), deltaLatest would keep serving
-    * them and the "removed" id would silently survive. Fold first; fail
-    * loudly (the requireNoBufferedClash discipline applied to the
-    * removal subset). `rowIds` is the batch's replacement-row id set.
-    */
-  def requireRemovalsNotBuffered(
-      s: SparkSession, indexPath: String, ids: Seq[Long], rowIds: Seq[Long],
-      idCol: String, what: String, compactHint: String): Unit =
-    requireRemovalsNotBufferedOf(s, IndexManifest.currentUncached(s, indexPath),
-      indexPath, ids, rowIds, idCol, what, compactHint)
-
-  /** [[requireRemovalsNotBuffered]] against a pre-resolved epoch. */
-  def requireRemovalsNotBufferedOf(
-      s: SparkSession, ep: Option[IndexManifest.Epoch], indexPath: String,
-      ids: Seq[Long], rowIds: Seq[Long], idCol: String,
-      what: String, compactHint: String): Unit = {
-    val removing = ids.filterNot(rowIds.toSet)
-    if (removing.nonEmpty)
-      requireNoBufferedClashOf(s, ep, indexPath, removing, idCol, what, compactHint)
-  }
-
-  /** The shared buffer/ingest-path RESURRECT guard: an id that was
-    * REMOVED — tombstoned with no window-resident replacement rows (a
-    * takedown, or an update that shrank the doc below its family's
-    * indexability floor) — may not land NEW REPLACEMENT ROWS before a
-    * fold retires the tombstone: the mask covers BASE rows only, so the
-    * batch's delta rows would serve immediately and the next fold would
-    * persist them, silently undoing the takedown — while the insert-only
-    * append paths refuse the very same ids as corruption (review-found
-    * asymmetry). Two deliberate scopings: (1) ids tombstoned BY an open
-    * update stay window-resident (their replacement rows serve), so
-    * re-updating them within the window remains legal; (2) the caller
-    * passes the batch's ROW-LANDING id set, not its raw id list — a
-    * removed id redelivered with sub-floor content lands no rows, so
-    * nothing can resurrect and the batch must stay a clean no-op for it,
-    * never a poison pill the streaming runner replays forever
-    * (review-found on the prefix path).
-    */
-  def requireNoResurrect(
-      s: SparkSession, indexPath: String, ids: Seq[Long], idCol: String,
-      what: String, compactHint: String): Unit =
-    requireNoResurrectOf(s, IndexManifest.currentUncached(s, indexPath),
-      indexPath, ids, idCol, what, compactHint)
-
-  /** [[requireNoResurrect]] against a pre-resolved epoch. */
-  def requireNoResurrectOf(
-      s: SparkSession, ep: Option[IndexManifest.Epoch], indexPath: String,
-      ids: Seq[Long], idCol: String, what: String, compactHint: String): Unit =
-    idSetOf(s, ep).foreach { t =>
-      import s.implicits._
-      val removed = deltaFrameOf(s, ep) match {
-        case Some(d) =>
-          t.join(d.select(col(idCol).as("id")).distinct(), Seq("id"), "left_anti")
-        case None => t
-      }
-      val clash = removed.withColumnRenamed("id", idCol)
-        .join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"$what: ${idCol}s ${clash.mkString(",")} were deleted from " +
-          s"$indexPath — a buffered update would resurrect the takedown " +
-          s"(its delta rows serve while the mask covers base rows only); " +
-          s"run $compactHint before re-using deleted ids")
-    }
-
-  /** The shared buffer/ingest-path guard: one batch carrying the same id
-    * TWICE has no defined resolution order (deltaLatestOf dedups across
-    * batches by commit order, never within one), and the PQ encoder would
-    * silently blend two embeddings' subspace codes into one garbage row —
-    * fail loudly and make the upstream resolve versions per batch.
-    * Returns the batch's (verified-unique) collected id list.
-    */
-  def requireUniqueBatchIds(df: DataFrame, idCol: String, what: String): Seq[Long] = {
-    val rows = df.select(idCol).collect().map(_.getLong(0))
-    val ids = rows.distinct.toSeq
-    require(rows.length == ids.length,
-      s"$what: the batch carries duplicate ${idCol}s " +
-        s"(e.g. ${rows.diff(ids).take(5).mkString(",")}) — two versions of one id " +
-        "in a single batch have no defined order; resolve to one version per id " +
-        "upstream (or split into ordered batches)")
-    ids
-  }
 
   /** Reclaim unreferenced lifecycle artifacts — the GC half of the
     * prepare-then-commit discipline: every mutation prepares files under
@@ -904,7 +682,15 @@ object Tombstones {
   private def epochStatsDir(indexPath: String, version: Long): String =
     s"${indexPath.stripSuffix("/")}_stats_e$version"
 
-  private def writeFragment(
+  /** Write `stats` under epoch `version`'s stats directory; returns it. */
+  private[sources] def writeEpochStats(
+      indexPath: String, version: Long, stats: DataFrame): String = {
+    val d = epochStatsDir(indexPath, version)
+    stats.write.mode("overwrite").parquet(d)
+    d
+  }
+
+  private[sources] def writeFragment(
       s: SparkSession, indexPath: String, version: Long, ids: Seq[Long]): String = {
     import s.implicits._
     val frag = s"${sidecar(indexPath)}/f$version"

@@ -247,16 +247,6 @@ object WriterLease {
       ()
     }
 
-  /** Run `body` under the lease, releasing on every exit path. Throws
-    * (rather than waiting) if the lease cannot be claimed within
-    * `waitMs` — the fail-deadline policy for scheduled jobs, where a
-    * writer that cannot start by its slot should page rather than queue.
-    * The exit release is RELEASE-IF-STILL-HELD: a body that outlives its
-    * TTL (size `ttlMs` to the body, or renew inside it via [[acquire]])
-    * may find its lease broken and re-taken — the successor's lease must
-    * not be torn down, and a completed body must not be reported failed
-    * over it (nor may a lost lease shadow the body's own exception).
-    */
   /** The lease the streaming ingest runners take around each micro-batch
     * by default (holder = the stream's checkpoint, its lineage identity):
     * a crashed co-writer's successor waits out the corpse's TTL instead
@@ -332,6 +322,16 @@ object WriterLease {
         "attempts — a fold storm, or a resolver that does not settle")
   }
 
+  /** Run `body` under the lease, releasing on every exit path. Throws
+    * (rather than waiting) if the lease cannot be claimed within
+    * `waitMs` — the fail-deadline policy for scheduled jobs, where a
+    * writer that cannot start by its slot should page rather than queue.
+    * The exit release is RELEASE-IF-STILL-HELD: a body that outlives its
+    * TTL (size `ttlMs` to the body, or renew inside it via [[acquire]])
+    * may find its lease broken and re-taken — the successor's lease must
+    * not be torn down, and a completed body must not be reported failed
+    * over it (nor may a lost lease shadow the body's own exception).
+    */
   def withLease[T](
       s: SparkSession, anchor: String, holder: String,
       ttlMs: Long = 600000L, waitMs: Long = 0L)(body: => T): T = {

@@ -143,7 +143,7 @@ object DocumentsStream {
     * Atomicity composition: there is deliberately NO cross-index
     * transaction — each family lands its (rows + masking tombstone +
     * (checkpoint, batch-id) fence) as its own single manifest commit
-    * ([[graft.sources.Tombstones.fenceAdmits]]), because one pointer
+    * ([[graft.sources.IndexWrite.replace]]'s fence), because one pointer
     * cannot atomically name four independent manifests. What makes the
     * GROUP exactly-once is that every family fences the same (lineage,
     * batch-id) pair: a crash BETWEEN sibling commits (family k landed,

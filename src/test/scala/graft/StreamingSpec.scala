@@ -1933,9 +1933,9 @@ class StreamingSpec extends SparkSpec {
   test("group drain + concurrent per-family maintenance: four cron loops against one corpus ingest group, exact final state") {
     // the deployment split the composed lifecycle implies: the GROUP
     // runner only ingests (foldEvery = 0), and a separate maintenance
-    // process crons Lifecycle.maintain per family — four loops, one per
-    // anchor, each serialized against the runner by that anchor's lease.
-    // Pins: no maintenance pass ever pages, the fold policy fires on at
+    // thread crons one Lifecycle.maintainGroup pass per tick over the
+    // four families, each family serialized against the runner by its
+    // anchor's lease. Pins: no maintenance pass ever pages, the fold policy fires on at
     // least one family mid-drain, every family's final state equals its
     // eagerly-buffered twin, and every settled window sits below the
     // fold threshold.
@@ -1967,8 +1967,7 @@ class StreamingSpec extends SparkSpec {
     def loc(t: String) = graft.sources.Tombstones.tableLocation(spark, t)
     // ONE call per cron tick: maintainGroup derives every family's
     // anchor, debt frame, fold, and live-location resolver from the SAME
-    // CorpusIngestTargets the runner drains — this soak hand-rolled four
-    // per-family maintain() loops before r20
+    // CorpusIngestTargets the runner drains
     def passGroup(): Map[String, graft.sources.Lifecycle.Maintenance] =
       graft.sources.Lifecycle.maintainGroup(
         spark, targets, maxDeltaBatches = 2L, holder = "gm_maint",

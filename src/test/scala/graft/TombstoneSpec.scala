@@ -2020,6 +2020,68 @@ class TombstoneSpec extends SparkSpec {
       SearchQueries.appendSearchIndex(spark, "search_hyg", sp, sdoc.unionAll(sdoc))
     }
     assert(e2.getMessage.contains("more than once"), e2.getMessage)
+    // the winnow append refuses the same shape: two texts under one doc_id
+    // would otherwise land as the union of both texts' fingerprints
+    import graft.operators.{DedupQueries, Multimodal, MultimodalQueries}
+    import graft.sources.{IndexManifest, Tombstones}
+    DedupQueries.writeWinnowIndex(spark, sfDir, "winnow_hyg", s"$tmp/winnow_hyg")
+    val twoTexts = Tables.documents(spark, sfDir).filter(col("doc_id") < 2)
+      .select(lit(9100000L) as "doc_id", col("text"))
+    val e3 = intercept[IllegalArgumentException] {
+      DedupQueries.appendWinnowIndex(twoTexts, "winnow_hyg")
+    }
+    assert(e3.getMessage.contains("more than once"), e3.getMessage)
+    // an empty replace batch commits nothing and advances no fence in
+    // every family, and its fenced ingest admits it
+    def unchanged(anchor: String)(write: => Unit): Unit = {
+      val before = (IndexManifest.current(spark, anchor), Tombstones.ingestFence(spark, anchor))
+      write
+      assert((IndexManifest.current(spark, anchor),
+        Tombstones.ingestFence(spark, anchor)) == before, anchor)
+    }
+    val noDocs = Tables.documents(spark, sfDir).filter(col("doc_id") < -1)
+      .select(col("doc_id"), col("text"))
+    DedupQueries.writeBandIndex(spark, sfDir, "band_hyg", s"$tmp/band_hyg")
+    DedupQueries.writePrefixIndex(spark, sfDir, "prefix_hyg", s"$tmp/prefix_hyg")
+    unchanged(Tombstones.tableLocation(spark, "band_hyg")) {
+      DedupQueries.bufferBandUpdate(noDocs, "band_hyg")
+      assert(DedupQueries.ingestBandBatch(noDocs, "band_hyg", 0L, streamId = "hyg"))
+    }
+    unchanged(Tombstones.tableLocation(spark, "winnow_hyg")) {
+      DedupQueries.bufferWinnowUpdate(noDocs, "winnow_hyg")
+      assert(DedupQueries.ingestWinnowBatch(noDocs, "winnow_hyg", 0L, streamId = "hyg"))
+    }
+    unchanged(Tombstones.tableLocation(spark, "prefix_hyg")) {
+      DedupQueries.bufferPrefixUpdate(noDocs, "prefix_hyg")
+      assert(DedupQueries.ingestPrefixBatch(noDocs, "prefix_hyg", 0L, streamId = "hyg"))
+    }
+    MultimodalQueries.writePhashIndex(spark, sfDir, "phash_hyg", s"$tmp/phash_hyg")
+    val noAssets = Multimodal.documentsAsAssets(spark, sfDir)
+      .filter(col("asset_id") < -1).select("asset_id", "payload", "format")
+    unchanged(Tombstones.tableLocation(spark, "phash_hyg")) {
+      MultimodalQueries.bufferPhashUpdate(noAssets, "phash_hyg")
+      assert(MultimodalQueries.ingestPhashBatch(noAssets, "phash_hyg", 0L, streamId = "hyg"))
+    }
+    unchanged(sp) {
+      SearchQueries.bufferSearchUpdate(spark, "search_hyg", sp, sdoc.filter(lit(false)))
+      assert(SearchQueries.ingestSearchBatch(
+        spark, "search_hyg", sp, sdoc.filter(lit(false)), 0L, streamId = "hyg"))
+    }
+    val noVecs = emb.filter(col("vec_id") < -1)
+    unchanged(ip) {
+      SimilarityQueries.bufferIvfUpdate(spark, sfDir, ip, noVecs)
+      assert(SimilarityQueries.ingestIvfBatch(spark, sfDir, ip, noVecs, 0L, streamId = "hyg"))
+    }
+    val pq = s"$tmp/pq_hyg"
+    SimilarityQueries.writePqIndex(spark, sfDir, pq)
+    unchanged(pq) {
+      assert(SimilarityQueries.ingestPqBatch(spark, pq, noVecs, 0L, streamId = "hyg"))
+    }
+    val sq = s"$tmp/sq_hyg"
+    SimilarityQueries.writeSqIndex(spark, sfDir, sq)
+    unchanged(sq) {
+      assert(SimilarityQueries.ingestSqBatch(spark, sq, noVecs, 0L, streamId = "hyg"))
+    }
   }
 
   test("as-of frames are family-uniform: bucketed families and the graph travel; folds end the horizon") {
