@@ -1831,10 +1831,11 @@ object SimilarityQueries {
     * them eagerly would strand whole neighborhoods) but are excluded from
     * every RESULT surface: [[graphBeamFromIndex]] drops them from the
     * ranked candidates, [[knnNeighborsFromGraph]] from both lookup sides.
-    * [[compactKnnGraph]] removes them physically (both endpoints).
+    * [[compactKnnGraph]] removes them physically (both endpoints). No ids
+    * is a no-op, as in every other family's delete.
     */
   def deleteFromKnnGraph(s: SparkSession, path: String, vecIds: Seq[Long]): Unit =
-    graft.sources.Tombstones.add(s, path, vecIds)
+    if (vecIds.nonEmpty) graft.sources.Tombstones.add(s, path, vecIds)
 
   /** Insert a batch of corpus vectors into a persisted k-NN graph WITHOUT
     * a rebuild — the FreshDiskANN insert re-expressed rebuild-EXACT under

@@ -158,11 +158,13 @@ object IndexWrite {
 
   /** Tombstone `ids` (see the object doc). `stats` derives the family's
     * replacement stored stats from the resolved epoch; they land in the
-    * tombstone's commit.
+    * tombstone's commit. No ids is a no-op, as an empty replace or insert
+    * is: nothing is resolved or committed.
     */
   def delete(
       s: SparkSession, t: Target, ids: Seq[Long],
       stats: Option[Option[IndexManifest.Epoch] => DataFrame] = None): Unit = {
+    if (ids.isEmpty) return
     val ep = IndexManifest.currentUncached(s, t.anchor)
     requireNoBufferedClashOf(s, ep, t, ids)
     stats match {

@@ -2,7 +2,14 @@ package graft.sources
 
 import graft.operators.Convert
 import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 import java.io.{ByteArrayOutputStream, EOFException, File, IOException}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
@@ -43,6 +50,10 @@ object Sink {
       extends IllegalArgumentException(s"input is $mb MB, limit $limit MB")
   class ConversionTimeoutException(s: Long, cause: Throwable = null)
       extends RuntimeException(s"conversion exceeded $s s", cause)
+  /** An input whose schema cannot be resolved: no data files, or files
+    * whose footers disagree.
+    */
+  class InputSchemaException(msg: String) extends IllegalArgumentException(msg)
 
   /** O13 parity (app.py:163-174): the reference buckets failures into
     * memory / timeout / schema / other with user-facing messages. Same
@@ -53,6 +64,7 @@ object Sink {
     case _: OutOfMemoryError => "memory"
     case _: ConversionTimeoutException => "timeout"
     case _: InputTooLargeException => "input-too-large"
+    case _: InputSchemaException => "schema"
     case t if causeChain(t).exists(_.isInstanceOf[OutOfMemoryError]) => "memory"
     case t if causeChain(t).exists { c =>
       val m = Option(c.getMessage).getOrElse("")
@@ -64,40 +76,126 @@ object Sink {
   private def causeChain(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
 
-  /** Input size through Hadoop's FileSystem API so the O10 guard holds on any
-    * scheme (s3a://, hdfs://, file://) — a java.io.File walk would silently
-    * return 0 for non-local URIs and bypass the limit on real deployments.
+  /** The files of a Parquet input, listed once through the Hadoop FS (so
+    * it holds on any scheme) with Spark's hidden-file filter applied below
+    * the root: `_SUCCESS`, `.crc` files and `_temporary/` are skipped, as
+    * Spark's own listing skips them. A root that is a file lists as itself.
     */
-  private def dirSizeBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.getContentSummary(p).getLength
+  private def listInput(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val root = new HPath(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk(_))
+    walk(fs.getFileStatus(root))
   }
 
-  /** Convert one Parquet input to the sink format: guard → normalize →
-    * sanitize → write. The write is a distributed parquet job; the timeout
-    * cancels the job group (the Spark analog of the reference's wall-clock
-    * abort, which killed a single-threaded loop).
+  /** Spark's rule for a path name its file listings skip
+    * (`HadoopFSUtils.shouldFilterOutPathName`, internal to Spark): names
+    * starting with `_` (unless they hold `=`, a partition directory) or
+    * `.`, and in-flight `._COPYING_` copies; the Parquet summary files
+    * `_metadata` and `_common_metadata` are kept.
+    */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  /** The schema `spark.read.parquet(inputPath)` would infer, resolved from
+    * the footers on the driver instead of in Spark's one-task inference job.
+    */
+  private[graft] def parquetSchema(spark: SparkSession, inputPath: String): StructType =
+    resolveSchema(spark, inputPath, listInput(spark, inputPath))
+
+  /** Reads the footer of every listed non-empty file (summary files
+    * included; Spark's scan skips empty files, so they hold no schema) and
+    * derives each one's Spark schema as `ParquetFileFormat.readSchemaFromFooter`
+    * does: the `org.apache.spark.sql.parquet.row.metadata` JSON when the
+    * writer left it, else `ParquetToSparkSchemaConverter` under the session
+    * SQLConf, so `nanosAsLong`, `inferTimestampNTZ` and the int96 flags act
+    * as in Spark's inference. Every file must agree, nullability aside;
+    * Spark would trust one file's footer and fail, or worse, mid-job. The
+    * schema returned is the one Spark picks: `_common_metadata`, else
+    * `_metadata`, else the first data file in path order. No such file or
+    * a disagreement throws [[InputSchemaException]]. Nothing is cached.
+    */
+  private def resolveSchema(
+      spark: SparkSession, inputPath: String, files: Seq[FileStatus]): StructType = {
+    val sorted = files.filter(_.getLen > 0).sortBy(_.getPath.toString)
+    if (sorted.isEmpty)
+      throw new InputSchemaException(s"no Parquet files to resolve a schema from in $inputPath")
+    val sqlConf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val options = HadoopReadOptions.builder(hadoopConf)
+      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+    import scala.jdk.CollectionConverters._
+    val schemas = sorted.asJava.parallelStream().map[StructType] { st =>
+      val meta = Using.resource(
+        ParquetFileReader.open(HadoopInputFile.fromStatus(st, hadoopConf), options))(_.getFooter)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, meta), new ParquetToSparkSchemaConverter(sqlConf))
+    }.toList.asScala.toSeq
+    val resolved = sorted.zip(schemas)
+    val (firstFile, firstSchema) = resolved.head
+    resolved.find { case (_, s) => nullableAll(s) != nullableAll(firstSchema) }.foreach {
+      case (f, s) => throw new InputSchemaException(
+        s"schema drift across the files of $inputPath: ${f.getPath} has ${s.catalogString}, " +
+          s"${firstFile.getPath} has ${firstSchema.catalogString}")
+    }
+    def named(n: String) = resolved.find(_._1.getPath.getName == n).map(_._2)
+    named("_common_metadata").orElse(named("_metadata")).getOrElse(firstSchema)
+  }
+
+  /** `t` with every field, element and value nullable and no field metadata. */
+  private def nullableAll(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => StructField(f.name, nullableAll(f.dataType))))
+    case a: ArrayType => ArrayType(nullableAll(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullableAll(m.keyType), nullableAll(m.valueType), valueContainsNull = true)
+    case o => o
+  }
+
+  private val InterruptOnCancel = "spark.job.interruptOnCancel"
+
+  /** Convert one Parquet input to the sink format: guard → resolve the
+    * schema from the footers → normalize → sanitize → write. One listing of
+    * the input serves the size guard and the footer reads, so the write is
+    * the conversion's only Spark job, and an input with no files or with
+    * drifting footers fails as `schema` before any job runs. The timeout
+    * cancels the conversion's jobs by a job tag of its own (the Spark analog
+    * of the reference's wall-clock abort, which killed a single-threaded
+    * loop), and leaves the caller's job group, tags and interrupt flag as
+    * they were; a timeout that fires outside a job, during the footer reads
+    * or the driver-side zip, still fails the conversion, and its zip is
+    * removed.
     */
   def convertParquet(
       spark: SparkSession,
       inputPath: String,
       outputDir: String,
       opts: ConvertOptions = ConvertOptions()): ConvertResult = {
-    val sizeBytes = dirSizeBytes(spark, inputPath)
+    val files = listInput(spark, inputPath)
+    val sizeBytes = files.map(_.getLen).sum
     if (sizeBytes > (opts.maxInputMb << 20))
       throw new InputTooLargeException(sizeBytes >> 20, opts.maxInputMb)
 
-    val groupId = s"graft-convert-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(groupId, s"convert $inputPath", interruptOnCancel = true)
+    val sc = spark.sparkContext
+    val tag = s"graft-convert-${System.nanoTime()}"
+    val priorInterrupt = sc.getLocalProperty(InterruptOnCancel)
+    sc.addJobTag(tag)
+    sc.setInterruptOnCancel(true)
     val timer = new java.util.Timer(true)
     @volatile var timedOut = false
     timer.schedule(new java.util.TimerTask {
-      def run(): Unit = { timedOut = true; spark.sparkContext.cancelJobGroup(groupId) }
+      def run(): Unit = { timedOut = true; sc.cancelJobsWithTag(tag) }
     }, opts.timeoutSeconds * 1000)
 
     val out = s"$outputDir/${opts.table}"
+    var zip: Option[String] = None
     try {
+      val schema = resolveSchema(spark, inputPath, files)
       // row count rides on the write itself via an observed metric — no
       // second scan of input or output (O8 progress accounting, app.py:133-136).
       // Caveat: the metric counts rows FED to the writer; under speculative
@@ -106,19 +204,25 @@ object Sink {
       // semantics (a UI counter, not an audit) — a run that needs exact
       // committed counts should read the output back instead.
       val obs = new org.apache.spark.sql.Observation(s"graft-convert-rows-${System.nanoTime()}")
-      val converted = Convert.pipeline(spark.read.parquet(inputPath))
+      val converted = Convert.pipeline(spark.read.schema(schema).parquet(inputPath))
         .observe(obs, org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("rows"))
       converted.write.mode(SaveMode.Overwrite).parquet(out)
       val rows = obs.get("rows").asInstanceOf[Long]
-      val zip = if (opts.zipArtifact) Some(zipDirectory(out, s"$out.zip")) else None
+      zip = if (opts.zipArtifact) Some(zipDirectory(out, s"$out.zip")) else None
+      if (timedOut) throw new ConversionTimeoutException(opts.timeoutSeconds)
       ConvertResult(out, rows, zip)
     } catch {
-      case e: Throwable if timedOut => throw new ConversionTimeoutException(opts.timeoutSeconds, e)
-      case e: Throwable             => throw e
+      case e: Throwable if timedOut =>
+        zip.foreach(z => Files.deleteIfExists(new File(z).toPath))
+        throw (e match {
+          case t: ConversionTimeoutException => t
+          case _ => new ConversionTimeoutException(opts.timeoutSeconds, e)
+        })
     } finally {
       timer.cancel()
-      spark.sparkContext.clearJobGroup()
+      sc.removeJobTag(tag)
+      sc.setLocalProperty(InterruptOnCancel, priorInterrupt)
     }
   }
 

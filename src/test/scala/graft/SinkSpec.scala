@@ -1,6 +1,14 @@
 package graft
 
 import graft.sources.Sink
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.propBoolean
@@ -388,5 +396,157 @@ class SinkSpec extends SparkSpec {
       src.schema.fields.length)
     assert(GraftMemorySink.rows("v2schema").length == src.count())
     GraftMemorySink.clear("v2schema")
+  }
+
+  /** Writes `rows` rows of `schema` with parquet-mr's own example writer,
+    * which leaves no Spark row metadata, so the schema resolves through
+    * `ParquetToSparkSchemaConverter` as it does for a pyarrow or DuckDB
+    * file. `fill` sets a row's values; what it leaves unset is null.
+    */
+  private def writeBare(file: Path, schema: MessageType, rows: Int)(fill: Group => Unit): Unit = {
+    val w = ExampleParquetWriter.builder(new HPath(file.toUri)).withType(schema).build()
+    try (0 until rows).foreach { _ =>
+      val g = new SimpleGroupFactory(schema).newGroup()
+      fill(g)
+      w.write(g)
+    } finally w.close()
+  }
+
+  /** The input read with its footer-resolved schema, as the sink reads it,
+    * has the schema Spark infers: the same fields, types and metadata
+    * (Spark reads every file column as nullable either way).
+    */
+  private def resolvesAsSpark(p: String): Boolean =
+    spark.read.schema(Sink.parquetSchema(spark, p)).parquet(p).schema ==
+      spark.read.parquet(p).schema
+
+  test("parquetSchema resolves the fixtures' schemas as Spark infers them") {
+    Tables.all.foreach(t => assert(resolvesAsSpark(s"$sfDir/$t.parquet"), t))
+    // events has shipped with ts as TIMESTAMP(MICROS) and as
+    // TIMESTAMP(NANOS); the nanos encoding resolves only under nanosAsLong
+    val nanos = Files.createTempDirectory("graft-nanos").resolve("events.parquet")
+    val ts = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .optional(INT64).as(LogicalTypeAnnotation.timestampType(true, TimeUnit.NANOS)).named("ts")
+      .named("schema")
+    writeBare(nanos, ts, 3) { g => g.add("event_id", 1L); g.add("ts", 1600000000000000000L) }
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "true")
+    try Seq(s"$sfDir/events.parquet", nanos.toString).foreach(p => assert(resolvesAsSpark(p), p))
+    finally spark.conf.unset(key)
+    // without it, Spark and the resolver both refuse the nanos footer
+    intercept[Throwable](spark.read.parquet(nanos.toString))
+    intercept[Throwable](Sink.parquetSchema(spark, nanos.toString))
+  }
+
+  test("parquetSchema agrees with Spark on generated types, bare and Spark-written") {
+    val decimal = for {
+      p <- Gen.choose(1, 38)
+      sc <- Gen.choose(0, p)
+      phys <- Gen.oneOf(Seq(BINARY) ++ Option.when(p <= 9)(INT32) ++ Option.when(p <= 18)(INT64))
+    } yield (n: String) =>
+      Types.optional(phys).as(LogicalTypeAnnotation.decimalType(sc, p)).named(n)
+    val timestamp = for {
+      utc <- Gen.oneOf(true, false)
+      unit <- Gen.oneOf(TimeUnit.MILLIS, TimeUnit.MICROS)
+    } yield (n: String) =>
+      Types.optional(INT64).as(LogicalTypeAnnotation.timestampType(utc, unit)).named(n)
+    val bareColumn: Gen[String => Type] = Gen.oneOf(decimal, timestamp, Gen.oneOf[String => Type](
+      n => Types.optional(FLOAT).named(n),
+      n => Types.optional(BINARY).named(n),
+      n => Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(n),
+      n => Types.optional(INT32).as(LogicalTypeAnnotation.intType(16, true)).named(n),
+      // pyarrow's all-null column
+      n => Types.optional(INT32).as(LogicalTypeAnnotation.unknownType()).named(n),
+      n => Types.optionalGroup().optional(INT32).named("a")
+        .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("b").named(n),
+      n => Types.optionalList().optionalElement(INT32).named(n)))
+    val sparkColumn: Gen[DataType] = Gen.oneOf(
+      for { p <- Gen.choose(1, 38); sc <- Gen.choose(0, p) } yield DecimalType(p, sc),
+      Gen.oneOf[DataType](TimestampNTZType, TimestampType, FloatType, BinaryType, StringType,
+        IntegerType, ArrayType(IntegerType), MapType(StringType, LongType),
+        StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))))
+    val bareInput = Gen.zip(Gen.nonEmptyListOf(bareColumn), Gen.choose(0, 2))
+    val bare = Prop.forAllNoShrink(bareInput) { case (cols, rows) =>
+      val schema = new MessageType("schema",
+        cols.zipWithIndex.map { case (c, i) => c(s"c$i") }.asJava)
+      val dir = Files.createTempDirectory("graft-bare")
+      // a float32 NaN in every FLOAT column, every other value null
+      writeBare(dir.resolve("part-0.parquet"), schema, rows) { g =>
+        schema.getFields.asScala
+          .filter(f => f.isPrimitive && f.asPrimitiveType.getPrimitiveTypeName == FLOAT)
+          .foreach(f => g.add(f.getName, Float.NaN))
+      }
+      resolvesAsSpark(dir.toString) :| schema.toString
+    }
+    val written = Prop.forAllNoShrink(Gen.nonEmptyListOf(sparkColumn)) { types =>
+      val schema = StructType(types.zipWithIndex.map { case (t, i) => StructField(s"c$i", t) })
+      val row = Row.fromSeq(types.map { case FloatType => Float.NaN; case _ => null })
+      val out = s"${Files.createTempDirectory("graft-written")}/t"
+      spark.createDataFrame(java.util.List.of(row), schema).coalesce(1).write.parquet(out)
+      resolvesAsSpark(out) :| schema.catalogString
+    }
+    Seq(bare, written).foreach { prop =>
+      val res = org.scalacheck.Test.check(
+        org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(15), prop)
+      assert(res.passed, res.status.toString)
+    }
+  }
+
+  test("convertParquet fails as schema, before writing, on drifting footers or no data files") {
+    val dir = s"${Files.createTempDirectory("graft-drift")}/in"
+    spark.range(3).selectExpr("id AS a").write.parquet(dir)
+    spark.range(3).selectExpr("CAST(id AS STRING) AS a").write.mode("append").parquet(dir)
+    val out = Files.createTempDirectory("graft-drift-out").toString
+    val drift = intercept[Sink.InputSchemaException](Sink.convertParquet(spark, dir, out))
+    assert(Sink.classifyError(drift) == "schema", drift.getMessage)
+    assert(drift.getMessage.contains("drift"), drift.getMessage)
+    assert(!new java.io.File(s"$out/Extract").exists())
+    // nullability alone is no drift: a REQUIRED and an OPTIONAL `a` convert
+    val mixed = Files.createTempDirectory("graft-nullability")
+    def one(name: String, required: Boolean): Unit = writeBare(mixed.resolve(name),
+      new MessageType("schema", (if (required) Types.required(INT64) else Types.optional(INT64))
+        .named("a")), 2)(_.add("a", 7L))
+    one("part-0.parquet", required = true)
+    one("part-1.parquet", required = false)
+    // an empty file holds no rows and no schema, and is no drift either
+    Files.write(mixed.resolve("part-00.parquet"), Array.emptyByteArray)
+    assert(Sink.convertParquet(spark, mixed.toString, out).rows == 4)
+    // no data files: an empty directory, one holding only hidden files, or
+    // only an empty file
+    def dirWith(name: String) = Files.write(Files.createTempDirectory("graft-nodata")
+      .resolve(name), Array.emptyByteArray).getParent
+    Seq(Files.createTempDirectory("graft-empty"), dirWith("_SUCCESS"),
+        dirWith("part-0.parquet")).foreach { d =>
+      val e = intercept[Sink.InputSchemaException](Sink.convertParquet(spark, d.toString, out))
+      assert(Sink.classifyError(e) == "schema", e.getMessage)
+    }
+  }
+
+  test("convertParquet leaves the caller's job group, tags and interrupt flag as they were") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "the caller's work", interruptOnCancel = false)
+    try {
+      val out = Files.createTempDirectory("graft-group").toString
+      assert(Sink.convertParquet(spark, s"$sfDir/region.parquet", out).rows == 5)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "false")
+      assert(sc.getJobTags().isEmpty)
+    } finally sc.clearJobGroup()
+  }
+
+  test("a timeout fails the conversion as timeout and leaves no zip") {
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("graft-timeout").toString
+    // a zero timeout fires before or during the write's job, or during the
+    // driver-side zip; each fails the conversion
+    val e = intercept[Sink.ConversionTimeoutException] {
+      Sink.convertParquet(spark, s"$sfDir/region.parquet", out,
+        Sink.ConvertOptions(timeoutSeconds = 0, zipArtifact = true))
+    }
+    assert(Sink.classifyError(e) == "timeout")
+    assert(!new java.io.File(s"$out/Extract.zip").exists())
+    assert(sc.getJobTags().isEmpty)
+    assert(sc.getLocalProperty("spark.job.interruptOnCancel") == null)
   }
 }

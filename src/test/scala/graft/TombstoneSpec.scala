@@ -2082,6 +2082,30 @@ class TombstoneSpec extends SparkSpec {
     unchanged(sq) {
       assert(SimilarityQueries.ingestSqBatch(spark, sq, noVecs, 0L, streamId = "hyg"))
     }
+    // an empty delete commits nothing in every family, as an empty replace
+    // or insert does
+    unchanged(Tombstones.tableLocation(spark, "band_hyg")) {
+      DedupQueries.deleteFromBandIndex(spark, "band_hyg", Nil)
+    }
+    unchanged(Tombstones.tableLocation(spark, "winnow_hyg")) {
+      DedupQueries.deleteFromWinnowIndex(spark, "winnow_hyg", Nil)
+    }
+    unchanged(Tombstones.tableLocation(spark, "prefix_hyg")) {
+      DedupQueries.deleteFromPrefixIndex(spark, "prefix_hyg", Nil)
+    }
+    unchanged(Tombstones.tableLocation(spark, "phash_hyg")) {
+      MultimodalQueries.deleteFromPhashIndex(spark, "phash_hyg", Nil)
+    }
+    unchanged(sp)(SearchQueries.deleteFromSearchIndex(spark, "search_hyg", sp, Nil))
+    unchanged(ip)(SimilarityQueries.deleteFromIvfIndex(spark, ip, Nil))
+    unchanged(pq)(SimilarityQueries.deleteFromPqIndex(spark, pq, Nil))
+    unchanged(sq)(SimilarityQueries.deleteFromSqIndex(spark, sq, Nil))
+    val rp = s"$tmp/rp_hyg"
+    SimilarityQueries.writeRpSketch(spark, sfDir, rp)
+    unchanged(rp)(SimilarityQueries.deleteFromRpSketch(spark, rp, Nil))
+    val gp = s"$tmp/graph_hyg"
+    SimilarityQueries.writeKnnGraphWhere(spark, sfDir, gp, col("vec_id") < 400)
+    unchanged(gp)(SimilarityQueries.deleteFromKnnGraph(spark, gp, Nil))
   }
 
   test("as-of frames are family-uniform: bucketed families and the graph travel; folds end the horizon") {
