@@ -16,11 +16,11 @@ import org.apache.spark.sql.SparkSession
   * fragments. Writers PREPARE everything under fresh names (a new stats
   * dir, a new tombstone fragment, a compacted data dir) — none of which
   * any reader resolves yet — then commit by landing ONE new version file
-  * through the selectable [[Landing]] primitive (rename-without-overwrite
-  * or conditional create — unlike the directory swaps this replaces, a
+  * with an exclusive (if-absent) create at its version name
+  * ([[createExclusive]] — unlike the directory swaps this replaces, a
   * one-file pointer is a primitive every store can land in one step).
-  * Readers list the manifest dir and resolve through the HIGHEST complete
-  * version. A crash anywhere before the pointer lands
+  * Readers list the manifest dir on every resolution and resolve through
+  * the HIGHEST complete version. A crash anywhere before the pointer lands
   * leaves readers on the previous epoch — internally consistent by
   * construction, because no epoch ever references half of a mutation: the
   * prepared files are unreferenced garbage, and re-running the mutation
@@ -107,21 +107,17 @@ object IndexManifest {
   final class UnsupportedIndexLayoutException(msg: String)
     extends RuntimeException(msg)
 
-  /** TEST HOOK — crash injection at the atomicity boundary: when set, the
-    * next [[commit]] throws AFTER every prepared file is durable but
-    * BEFORE the version pointer lands, simulating a writer dying at the
-    * worst possible instant. TombstoneSpec uses it to prove probes stay on
-    * the previous consistent epoch.
-    */
-  @volatile private[graft] var failNextCommit: Boolean = false
-
-  /** TEST HOOK — crash injection at the Nth commit of a MULTI-commit
-    * mutation (a compaction's pre-swap generation bump is commit 1, its
+  /** TEST HOOK — crash injection at the atomicity boundary: counts down
+    * on every [[commit]] and, when it reaches zero, throws AFTER every
+    * prepared file is durable but BEFORE the version pointer lands,
+    * simulating a writer dying at the worst possible instant. 0 fails the
+    * next commit; N fails the (N+1)th of a MULTI-commit mutation (a
+    * compaction's pre-swap generation bump is commit 1, its
     * tombstone-clearing epoch commit 2; an append's bump is commit 1, its
-    * stats advance commit 2): counts down on every commit and throws when
-    * it reaches zero, letting TombstoneSpec stage the mid-mutation states
-    * (bump landed, physical step or follow-up commit missing) and prove
-    * they are loud or consistent, never silently wrong. Negative = off.
+    * stats advance commit 2), letting TombstoneSpec stage the mid-mutation
+    * states (bump landed, physical step or follow-up commit missing) and
+    * prove they are loud or consistent, never silently wrong. Negative =
+    * off.
     */
   @volatile private[graft] var failCommitCountdown: Int = -1
 
@@ -133,50 +129,51 @@ object IndexManifest {
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
   // ---- the landing primitive -----------------------------------------------
-  // Every atomicity guarantee in the library bottoms out in ONE step: how a
-  // prepared version file becomes the committed pointer. That step is
-  // store-dependent, so it is a selectable seam (spark conf
-  // `graft.manifest.landing`), not a comment:
-  //
-  //   "rename" (default) — write a writer-unique tmp file, then a single-file
-  //   rename-WITHOUT-overwrite onto the version name. On HDFS the rename is
-  //   namenode-arbitrated atomic-exclusive; on the local FS it is a
-  //   client-side exists check + POSIX rename(2), safe under the documented
-  //   single-writer-per-index discipline; on object stores rename is a
-  //   non-atomic copy — select "create" there instead.
-  //
-  //   "create" — land the complete body straight at the version name with a
-  //   CONDITIONAL (if-absent) create: kernel-atomic O_EXCL (CREATE_NEW) on
-  //   the local FS, namenode-arbitrated `create(overwrite = false)` on HDFS
-  //   — the stronger primitive on both, and the exact shape of an object
-  //   store's conditional put (S3 If-None-Match / GCS if-generation-match),
-  //   which a deployment there swaps in at this one seam. The residual is a
-  //   writer dying BETWEEN create and close leaving a TORN version file;
-  //   the format makes that detectable (every complete body ends in the
-  //   `eot` marker), readers SKIP torn files (the commit never completed —
-  //   exactly the crash contract), and a retry reclaims them after
-  //   [[TORN_GRACE_MS]] (within the grace a torn file may be a live racer
-  //   mid-write, so the collision stays loud — the WriterLease discipline).
+  // Every atomicity guarantee in the library bottoms out in ONE step, how a
+  // prepared version file becomes the committed pointer: an exclusive
+  // (if-absent) create of the complete body straight at the version name
+  // ([[createExclusive]] — the shape of an object store's conditional put,
+  // S3 If-None-Match / GCS if-generation-match, which a deployment there
+  // swaps in at that one method). The residual is a writer dying BETWEEN
+  // create and close leaving a TORN version file; the format makes that
+  // detectable (every complete body ends in the `eot` marker), readers SKIP
+  // torn files (the commit never completed — exactly the crash contract),
+  // and a retry reclaims them after [[TORN_GRACE_MS]] (within the grace a
+  // torn file may be a live racer mid-write, so the collision stays loud —
+  // the WriterLease discipline).
 
-  sealed trait Landing
-  case object RenameLanding extends Landing
-  case object ConditionalCreateLanding extends Landing
-
-  /** The session's selected landing primitive (conf
-    * `graft.manifest.landing` = "rename" | "create").
+  /** Create `p` holding `body` only if nothing exists there — the one
+    * landing primitive, shared by [[commit]] and [[WriterLease.acquire]]'s
+    * first claim. On the local FS it is NIO `CREATE_NEW` (O_EXCL), because
+    * Hadoop's RawLocalFileSystem `create(overwrite = false)` is a
+    * non-atomic check-then-create (two racers can both "win"); elsewhere
+    * it is `create(overwrite = false)`, which HDFS arbitrates at the
+    * namenode. A lost race throws Hadoop's [[org.apache.hadoop.fs
+    * .FileAlreadyExistsException]] on both branches; every other
+    * IOException propagates as itself.
     */
-  def landingOf(s: SparkSession): Landing =
-    s.conf.get("graft.manifest.landing", "rename") match {
-      case "rename" => RenameLanding
-      case "create" => ConditionalCreateLanding
-      case other => throw new IllegalArgumentException(
-        s"graft.manifest.landing must be 'rename' or 'create', got '$other'")
-    }
+  private[sources] def createExclusive(
+      f: org.apache.hadoop.fs.FileSystem, p: Path, body: Array[Byte]): Unit = {
+    val isLocal = f.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
+      f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
+    val out =
+      if (isLocal)
+        try java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(p.toUri.getPath),
+          java.nio.file.StandardOpenOption.CREATE_NEW,
+          java.nio.file.StandardOpenOption.WRITE)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$p already exists")
+        }
+      else f.create(p, false)
+    try out.write(body)
+    finally out.close()
+  }
 
   /** Every COMPLETE version file ends in this marker — what lets readers
     * distinguish a committed epoch from a torn landing (a writer dead
     * between create and close) without trusting file length or mtime.
-    * FORMAT CUT (deliberate, r18): the marker and the conditional-create
+    * FORMAT CUT (deliberate, r18): the marker and the exclusive-create
     * landing entered the format TOGETHER — every marker-less file a
     * deployment of this library could hold predates both, and none were
     * ever persisted across a library upgrade (indexes rebuild per
@@ -188,11 +185,11 @@ object IndexManifest {
     */
   private val EOT = "eot\t1\n"
 
-  /** Grace before a torn version file becomes reclaimable by a retry,
-    * measured from its mtime: long enough that a racer mid-initial-write
-    * is never clobbered, short enough that a crashed landing stops
-    * blocking its version within a minute (the [[WriterLease]] torn-file
-    * discipline applied to the pointer itself).
+  /** Grace before a torn exclusive-create landing — a version file here,
+    * or [[WriterLease]]'s lease file — becomes reclaimable, measured from
+    * its mtime: long enough that a racer mid-initial-write is never
+    * clobbered, short enough that a crashed landing stops blocking within
+    * a minute.
     *
     * CLOCK ASSUMPTION: the age test compares the claimant's wall clock to
     * the file's store-stamped mtime, so on a SHARED store the grace must
@@ -212,188 +209,38 @@ object IndexManifest {
   }
 
   /** Parse one version file; None = torn (the landing never completed —
-    * readers resolve through the previous epoch, the crash contract).
-    * The torn classification is LANDING-SCOPED: under the conditional-
-    * create primitive a writer dead between create and close genuinely
-    * leaves a marker-less prefix, so skipping is the crash contract —
-    * but under the rename landing a version file appears ATOMICALLY
-    * complete or not at all, so a marker-less file there can only be a
-    * legacy (pre-marker) manifest carried forward or a foreign-format
-    * file at a version name, and silently skipping it would let a later
-    * commit set the old pointer aside and restart the lineage at v1,
-    * dropping tombstones/hwm (resurrecting takedowns). Refuse LOUDLY
-    * instead: the operator either re-lands the legacy files with the
-    * marker or selects the create landing if the file really is a torn
-    * landing from a create-configured co-writer. A file that VANISHES
-    * between the caller's listing and this read was a torn landing a
-    * concurrent commit-retry just set aside — gone is gone, skip it
-    * (matching the skip-torn semantics) in both modes.
+    * readers resolve through the previous epoch, the crash contract). A
+    * file that VANISHES between the caller's listing and this read was a
+    * torn landing a concurrent commit-retry just set aside — gone is gone,
+    * skip it too.
     */
   private def readEpochFile(
-      f: org.apache.hadoop.fs.FileSystem, d: Path, name: String,
-      landing: Landing): Option[Epoch] = {
+      f: org.apache.hadoop.fs.FileSystem, d: Path, name: String): Option[Epoch] = {
     val body =
       try readBody(f, new Path(d, name))
       catch { case _: java.io.FileNotFoundException => return None }
-    if (body.endsWith(EOT)) Some(parse(name.drop(1).toLong, body))
-    else landing match {
-      case ConditionalCreateLanding => None
-      case RenameLanding => throw new IllegalStateException(
-        s"IndexManifest: version file $name under $d has no completeness " +
-          "marker. Under the rename landing a torn file cannot occur, so " +
-          "this is a legacy pre-marker manifest (re-land its version files " +
-          "with the marker before upgrading) or a foreign file at a version " +
-          "name — skipping it would silently reset the lineage and drop " +
-          "its tombstones. Select graft.manifest.landing=create only if a " +
-          "create-configured writer could have torn this landing.")
-    }
+    if (body.endsWith(EOT)) Some(parse(name.drop(1).toLong, body)) else None
   }
 
   /** The current epoch, or None for a never-mutated (or freshly reset)
-    * index. One listStatus + one small-file read — control-plane cost.
-    * [r20] CONF-ROUTED: with `graft.manifest.cacheTtlMs` > 0 (default 0 =
-    * off) the resolution goes through the TTL cache — the one-flag
-    * deployment choice for a probe-heavy serving tier on a high-LIST-
-    * latency object store. The flag is for SERVING sessions: every
-    * mutation templates its epoch through [[next]], which REFUSES loudly
-    * under the flag (see there), so a cached resolution can never feed a
-    * commit's content. Writer-critical resolution ([[next]],
-    * [[requireSameGeneration]], the ingest fence) bypasses the cache via
-    * [[currentUncached]] regardless of the flag.
+    * index. One listStatus + one small-file read per call — control-plane
+    * cost, and always the true committed state, which the ingest fence,
+    * epoch templating and the as-of generation guard rely on.
     */
   def current(s: SparkSession, anchor: String): Option[Epoch] = {
-    val ttl = cacheTtlMs(s)
-    if (ttl <= 0L) resolveCurrent(s, anchor)
-    else cachedCurrent(s, anchor, ttl)
-  }
-
-  /** The session's cache-TTL flag (`graft.manifest.cacheTtlMs`, ms; 0 =
-    * off). One deployment flag: set it on serving sessions so every probe's
-    * `current()` resolution hits the TTL cache instead of the store.
-    *
-    * RETENTION CONTRACT [r21, ADVICE]: the staleness bound above only
-    * composes with fold/vacuum when the WRITER side retains superseded
-    * epochs across the ttl window — run vacuum with keepEpochs >= 1 and
-    * size ttl <= inter-commit interval x keepEpochs. Total reclaim
-    * (keepEpochs = 0, the vacuum default) under this flag lets a
-    * cross-process fold+vacuum delete a cached epoch's files while an
-    * in-flight reader still holds it (FileNotFound instead of the
-    * "mutation is never an observable error" guarantee). Same-process
-    * misuse warns loudly in [[graft.sources.Tombstones.vacuum]].
-    */
-  def cacheTtlMs(s: SparkSession): Long = {
-    val v = s.conf.get("graft.manifest.cacheTtlMs", "0")
-    try v.toLong
-    catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"graft.manifest.cacheTtlMs must be a millisecond count, got '$v'")
-    }
-  }
-
-  /** [[current]] WITHOUT the conf-routed cache — the writer-critical
-    * resolution: epoch templating, the as-of generation guard, and the
-    * exactly-once ingest fence must see the true committed state, never a
-    * ≤-ttl-stale hit (a stale fence would re-admit a committed batch; a
-    * stale generation guard would let an as-of read mix generations).
-    */
-  private[graft] def currentUncached(s: SparkSession, anchor: String): Option[Epoch] =
-    resolveCurrent(s, anchor)
-
-  private def resolveCurrent(s: SparkSession, anchor: String): Option[Epoch] = {
     val d = new Path(dir(anchor))
     val f = fs(s, d)
     if (!f.exists(d)) None
     else {
       // zero-padded names: lexicographic order = numeric order. Torn
-      // landings (no eot marker — a create-landed writer dead mid-write)
-      // are SKIPPED: their commit never completed, so the previous
-      // complete epoch is the committed state. The common case still
-      // reads one file.
-      val landing = landingOf(s)
+      // landings (no eot marker — a writer dead mid-write) are SKIPPED:
+      // their commit never completed, so the previous complete epoch is
+      // the committed state. The common case still reads one file.
       val versions = f.listStatus(d).toSeq
         .map(_.getPath.getName)
         .filter(_.matches("v\\d{12}"))
         .sorted(Ordering[String].reverse)
-      versions.iterator.flatMap(n => readEpochFile(f, d, n, landing)).nextOption()
-    }
-  }
-
-  // ---- TTL cache over current() ----------------------------------------------
-  // On HDFS/local FS a manifest resolution is one cheap listStatus + one
-  // small read; on a high-LIST-latency object store a probe-heavy serving
-  // tier pays that round-trip per probe. Two ways in: the conf flag above
-  // (routes every current() — the deployment choice) or the explicit
-  // [[cachedCurrent]] call (per-read opt-in, the r19 API). Bounded by a
-  // TTL. STALENESS BOUND: a hit can serve an epoch up to ttl after a
-  // CROSS-PROCESS writer superseded it; this process's OWN [[commit]] and
-  // [[reset]] invalidate the anchor's entry (read-your-writes — without
-  // it a writer-session flag flip could stale this process against its
-  // own mutations; cross-process writers remain invisible to the map, the
-  // honest residual). Size ttl ≤ the writers' lease TTL and the bound
-  // composes with the lease discipline: a superseded epoch a hit serves
-  // is at most (lease wait + ttl) old, and — because folds DEFER reclaim
-  // to vacuum — its files still exist for at least the vacuum retention
-  // window, so a stale hit reads a complete older state, never a
-  // half-reclaimed one. Keyed by the anchor string as the caller spells
-  // it (two spellings of one anchor cache independently — correct, just
-  // not shared).
-
-  private val epochCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[Epoch])]()
-
-  // per-anchor invalidation stamp, bumped BEFORE the cache entry drops on
-  // commit/reset: a concurrent cachedCurrent that resolved the PRE-commit
-  // store must not re-insert that stale epoch after the invalidation ran
-  // (the resolve-then-put race would re-stale the process against its own
-  // mutation for up to ttl — review-found); the miss path snapshots the
-  // stamp before resolving and only caches if it is unchanged, atomically
-  // under the key's compute lock.
-  private val cacheStamp =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
-  private def stampOf(anchor: String): java.util.concurrent.atomic.AtomicLong =
-    cacheStamp.computeIfAbsent(anchor, _ => new java.util.concurrent.atomic.AtomicLong())
-
-  private def invalidateCache(anchor: String): Unit = {
-    stampOf(anchor).incrementAndGet() // order matters: stamp first, then drop
-    epochCache.remove(anchor)
-    ()
-  }
-
-  /** [[current]] through the TTL cache: a hit younger than `ttlMs`
-    * returns without touching the store; a miss (or expiry) re-resolves
-    * and refreshes. `nowMs` is injectable for tests. Pinned in
-    * TombstoneSpec: a hit within ttl serves an epoch a FOREIGN writer
-    * superseded, the first post-expiry read sees the new one, and this
-    * process's own commit is visible immediately (invalidation).
-    */
-  def cachedCurrent(
-      s: SparkSession, anchor: String, ttlMs: Long,
-      nowMs: () => Long = () => System.currentTimeMillis()): Option[Epoch] = {
-    require(ttlMs > 0, "IndexManifest.cachedCurrent: ttlMs must be positive")
-    val hit = epochCache.get(anchor)
-    val t = nowMs()
-    if (hit != null && t - hit._1 < ttlMs) hit._2
-    else {
-      val stamp = stampOf(anchor).get()
-      val e = resolveCurrent(s, anchor)
-      // cache only if no commit/reset invalidated the anchor since the
-      // resolve began (read-your-writes would otherwise be violated by
-      // re-inserting the pre-commit epoch); compute() serializes against
-      // a concurrent invalidation's remove on this key
-      epochCache.compute(anchor, (_, old) =>
-        if (stampOf(anchor).get() != stamp) old else (t, e))
-      // [r21, ADVICE] bound growth for long-lived serving sessions probing
-      // many ephemeral anchors (clone destinations, per-tenant indexes):
-      // opportunistically sweep entries expired under THIS call's ttl once
-      // the map is large. Miss-path only (a hit never pays the sweep);
-      // stamps are one AtomicLong per anchor and deliberately never
-      // removed — a recreated stamp would restart at 0 and let an
-      // in-flight pre-invalidation resolve re-insert its stale epoch.
-      if (epochCache.size > 1024)
-        epochCache.forEach((k, v) =>
-          if (t - v._1 >= ttlMs) { epochCache.remove(k, v); () })
-      e
+      versions.iterator.flatMap(n => readEpochFile(f, d, n)).nextOption()
     }
   }
 
@@ -417,7 +264,7 @@ object IndexManifest {
       require(f.exists(p),
         s"IndexManifest.at: epoch $version of $anchor was never committed " +
           "(or its version file was removed)")
-      val e = readEpochFile(f, d, fileName(version), landingOf(s))
+      val e = readEpochFile(f, d, fileName(version))
       require(e.isDefined,
         s"IndexManifest.at: epoch $version of $anchor is a TORN landing — " +
           "the writer died mid-commit and the epoch never took effect")
@@ -434,14 +281,12 @@ object IndexManifest {
     val d = new Path(dir(anchor))
     val f = fs(s, d)
     if (!f.exists(d)) Seq.empty
-    else {
-      val landing = landingOf(s)
+    else
       f.listStatus(d).toSeq
         .map(_.getPath.getName)
         .filter(_.matches("v\\d{12}"))
         .sorted
-        .flatMap(name => readEpochFile(f, d, name, landing)) // torn never committed
-    }
+        .flatMap(name => readEpochFile(f, d, name)) // torn never committed
   }
 
   /** Template for the next epoch: the current state with the version
@@ -462,40 +307,17 @@ object IndexManifest {
     * must keep old readers serving needs a migration rewrite, not a
     * pointer flag.
     */
-  def next(s: SparkSession, anchor: String): Epoch = {
-    refuseMutationUnderCacheFlag(s, "next")
-    currentUncached(s, anchor)
+  def next(s: SparkSession, anchor: String): Epoch =
+    current(s, anchor)
       .map(e => e.copy(version = e.version + 1, retired = Vector.empty,
         layout = CURRENT_LAYOUT))
       .getOrElse(Epoch(1L, None, None, Vector.empty, Vector.empty, 0L))
-  }
-
-  /** The choke point that makes the conf-routed cache safe BY
-    * CONSTRUCTION: a MUTATING session under the flag could derive a
-    * fold's or ingest's CONTENT from a ≤-ttl-stale hit and silently fold
-    * away another process's fresh commit (the version numbers would not
-    * even collide — templating resolves uncached). Refuse loudly
-    * instead: serve through the flag, mutate without it (probe-side code
-    * may still opt in per read via [[cachedCurrent]]). Checked at BOTH
-    * [[next]] (fail before the prepare work) and [[commit]] (so
-    * hand-built epochs — the fold's carry — cannot slip past it).
-    */
-  private def refuseMutationUnderCacheFlag(s: SparkSession, what: String): Unit =
-    if (cacheTtlMs(s) > 0L)
-      throw new IllegalStateException(
-        s"IndexManifest.$what: refusing a mutation while " +
-          "graft.manifest.cacheTtlMs is set — a cached current() hit could " +
-          "feed this mutation's content a stale epoch and silently drop a " +
-          "concurrent sub-ttl commit. The cache flag is for serving " +
-          "sessions; mutate with it unset (probe-side code may still opt " +
-          "in per read via cachedCurrent).")
 
   /** Land `e` as the new current epoch — the single atom of every
     * lifecycle mutation. Fails loudly (never overwrites) if `e.version`
     * was already committed, surfacing a violated single-writer assumption.
     */
   def commit(s: SparkSession, anchor: String, e: Epoch): Unit = {
-    refuseMutationUnderCacheFlag(s, "commit")
     if (e.layout > CURRENT_LAYOUT)
       throw new UnsupportedIndexLayoutException(
         s"IndexManifest.commit: refusing to write epoch ${e.version} of $anchor " +
@@ -505,27 +327,22 @@ object IndexManifest {
     if (!f.exists(d)) f.mkdirs(d)
     val dest = new Path(d, fileName(e.version))
     requireDestFree(s, f, anchor, dest, e.version)
-    if (failNextCommit) {
-      failNextCommit = false
-      throw new RuntimeException(
-        s"IndexManifest: injected crash before committing epoch ${e.version} of $anchor")
-    }
     if (failCommitCountdown >= 0) {
       failCommitCountdown -= 1
       if (failCommitCountdown < 0)
         throw new RuntimeException(
           s"IndexManifest: injected crash before committing epoch ${e.version} of $anchor")
     }
-    val body = serialize(e).getBytes("UTF-8")
-    landingOf(s) match {
-      case RenameLanding => landByRename(s, f, d, dest, body, anchor, e.version)
-      case ConditionalCreateLanding =>
-        landByConditionalCreate(f, dest, body, anchor, e.version)
+    // only the exists-collision maps to the single-writer page; any other
+    // IOException (transient namenode/network, quota, permission)
+    // propagates as itself — misreporting it as a concurrent writer would
+    // page an operator at a phantom discipline violation when the commit
+    // merely needs a retry (review-found)
+    try createExclusive(f, dest, serialize(e).getBytes("UTF-8"))
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        collision(anchor, e.version)
     }
-    // read-your-writes for the TTL cache: this process's own commit must
-    // be visible to its own cached reads immediately (invalidate, don't
-    // refresh — the next cached read re-resolves under ITS clock)
-    invalidateCache(anchor)
   }
 
   /** The shared loud collision (the single-writer discipline's surface). */
@@ -570,79 +387,13 @@ object IndexManifest {
       }
     }
 
-  // tmp-write + single-file rename-without-overwrite (see the Landing doc
-  // for the per-store guarantee scope)
-  private def landByRename(
-      s: SparkSession, f: org.apache.hadoop.fs.FileSystem, d: Path, dest: Path,
-      body: Array[Byte], anchor: String, version: Long): Unit = {
-    // writer-unique tmp name: two racers sharing one tmp path could
-    // otherwise interleave (one overwrites the other's content before
-    // either renames) and land the WRONG epoch body under the version
-    val tmp = new Path(d,
-      s".tmp_${fileName(version)}_${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(body)
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      d.toUri, s.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, dest)
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-          _: org.apache.hadoop.fs.ParentNotDirectoryException =>
-        try f.delete(tmp, false) catch { case _: java.io.IOException => () }
-        collision(anchor, version)
-    }
-  }
-
-  // conditional (if-absent) create straight at the version name: O_EXCL on
-  // the local FS (kernel-atomic — the check-then-create inside Hadoop's
-  // RawLocalFileSystem is NOT), namenode-arbitrated create on HDFS; an
-  // object-store deployment swaps this one method for the store's
-  // conditional put. A crash between create and close leaves a TORN file
-  // the readers skip and [[requireDestFree]] reclaims after the grace.
-  private def landByConditionalCreate(
-      f: org.apache.hadoop.fs.FileSystem, dest: Path, body: Array[Byte],
-      anchor: String, version: Long): Unit = {
-    val isLocal = f.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    if (isLocal) {
-      val nio = java.nio.file.Paths.get(dest.toUri.getPath)
-      val out =
-        try java.nio.file.Files.newOutputStream(nio,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            collision(anchor, version)
-        }
-      try out.write(body)
-      finally out.close()
-    } else {
-      // only the exists-collision maps to the single-writer page; any
-      // other IOException (transient namenode/network, quota, permission)
-      // propagates as itself — misreporting it as a concurrent writer
-      // would page an operator at a phantom discipline violation when the
-      // commit merely needs a retry (review-found)
-      val out =
-        try f.create(dest, false)
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            collision(anchor, version)
-        }
-      try out.write(body)
-      finally out.close()
-    }
-  }
-
   /** The as-of guard: a travel target whose base generation differs from
     * the live one would silently mix standing data from one generation
     * with stats/masks from another — refuse loudly instead.
     */
   def requireSameGeneration(
       s: SparkSession, anchor: String, ep: Option[Epoch], version: Long): Unit = {
-    // uncached on purpose: a ≤-ttl-stale generation would let an as-of
-    // read silently mix standing data across a fresh append/fold boundary
-    val curGen = currentUncached(s, anchor).map(_.baseGen).getOrElse(0L)
+    val curGen = current(s, anchor).map(_.baseGen).getOrElse(0L)
     val epGen = ep.map(_.baseGen).getOrElse(0L)
     require(epGen == curGen,
       s"as-of epoch $version of $anchor is from base generation $epGen but the " +
@@ -656,10 +407,6 @@ object IndexManifest {
   def dataPath(s: SparkSession, anchor: String, default: String): String =
     current(s, anchor).flatMap(_.data).getOrElse(default)
 
-  /** Resolve the index's current stats directory. */
-  def statsPath(s: SparkSession, anchor: String, default: String): String =
-    current(s, anchor).flatMap(_.stats).getOrElse(default)
-
   /** Drop the manifest entirely — builders call this so a rebuild over an
     * anchor that lived a previous life starts from the defaults instead of
     * resolving through a stale epoch.
@@ -667,7 +414,6 @@ object IndexManifest {
   def reset(s: SparkSession, anchor: String): Unit = {
     val d = new Path(dir(anchor))
     fs(s, d).delete(d, true)
-    invalidateCache(anchor) // read-your-writes, like commit
   }
 
   // one `key<TAB>value` line per field; paths are our own (no tabs/newlines)

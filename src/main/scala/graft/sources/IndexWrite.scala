@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *      skipped (returns false), a different lineage throws;
   *   2. unique ids (the batch ids are collected); an empty batch returns
   *      here, committing nothing and advancing no fence;
-  *   3. one uncached manifest resolution, threaded through every later
+  *   3. one manifest resolution, threaded through every later
   *      step;
   *   4. encode: the family's rows, plus optionally its masked ids, its
   *      row-landing ids and replacement stored stats;
@@ -32,12 +32,12 @@ import org.apache.spark.sql.functions._
   *   2. one distributed query for emptiness and duplicate ids (append
   *      batches are data-plane sized, so their ids are never collected);
   *      an empty batch returns here;
-  *   3. one uncached manifest resolution; deleted-id clash;
+  *   3. one manifest resolution; deleted-id clash;
   *   4. ids already visible are refused, or dropped when the family's
   *      append is an idempotent replay (a batch left empty returns);
   *   5. encode, then one [[commitInsertBatch]].
   *
-  * [[delete]] — a takedown: one uncached manifest resolution, the
+  * [[delete]] — a takedown: one manifest resolution, the
   * buffered-update clash guard, then one tombstone commit (with the
   * family's replacement stats, when it keeps any, in the same commit).
   */
@@ -83,7 +83,7 @@ object IndexWrite {
     if (!fenceAdmits(s, t, fence)) return false
     val ids = requireUniqueBatchIds(batch, t)
     if (ids.isEmpty) return true
-    val ep = IndexManifest.currentUncached(s, t.anchor)
+    val ep = IndexManifest.current(s, t.anchor)
     val enc = encode(ep, ids)
     try {
       val mask = enc.mask.getOrElse(ids)
@@ -123,7 +123,7 @@ object IndexWrite {
     require(dups.isEmpty,
       s"${t.what}: ${id}s ${dups.mkString(",")} appear more than once in the " +
         "batch — resolve to one version per id upstream")
-    val ep = IndexManifest.currentUncached(s, t.anchor)
+    val ep = IndexManifest.current(s, t.anchor)
     // distinct once the check above passed
     val batchIds = batch.select(id)
     // a deleted id may not be re-used before a fold: the probe-side
@@ -165,7 +165,7 @@ object IndexWrite {
       s: SparkSession, t: Target, ids: Seq[Long],
       stats: Option[Option[IndexManifest.Epoch] => DataFrame] = None): Unit = {
     if (ids.isEmpty) return
-    val ep = IndexManifest.currentUncached(s, t.anchor)
+    val ep = IndexManifest.current(s, t.anchor)
     requireNoBufferedClashOf(s, ep, t, ids)
     stats match {
       case Some(f) => Tombstones.addWithStats(s, t.anchor, ids, f(ep))
@@ -180,8 +180,8 @@ object IndexWrite {
     * fence semantics): true = no fence, or the batch is new; false = an
     * at-least-once replay within the recorded lineage, skip it; a
     * DIFFERENT lineage throws loudly (its ids restart from 0 — fencing it
-    * would silently drop never-ingested data). Reads the fence uncached
-    * ([[Tombstones.ingestFence]]).
+    * would silently drop never-ingested data). Reads the fence through
+    * [[Tombstones.ingestFence]].
     */
   private def fenceAdmits(
       s: SparkSession, t: Target, fence: Option[(String, Long)]): Boolean =

@@ -176,6 +176,10 @@ object Sink {
       inputPath: String,
       outputDir: String,
       opts: ConvertOptions = ConvertOptions()): ConvertResult = {
+    // before the tag, the interrupt flag and the timer: a negative delay
+    // would throw from Timer.schedule with all three already set
+    require(opts.timeoutSeconds >= 0,
+      s"Sink.convertParquet: timeoutSeconds must be >= 0, got ${opts.timeoutSeconds}")
     val files = listInput(spark, inputPath)
     val sizeBytes = files.map(_.getLen).sum
     if (sizeBytes > (opts.maxInputMb << 20))
@@ -255,22 +259,16 @@ object Sink {
   /** Incremental partitioned load with dynamic partition overwrite: only the
     * partitions present in `df` are replaced; the rest of the table is
     * untouched. This is the idempotent-retry shape of a fleet-scale ETL —
-    * reprocessing one day/status re-writes exactly that directory.
+    * reprocessing one day/status re-writes exactly that directory. The
+    * mode is a per-write option, which Spark's file writer reads before the
+    * session conf, so the session is left as it was.
     */
-  def writePartitioned(df: DataFrame, outputPath: String, partitionCol: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try Convert.pipeline(df).write
+  def writePartitioned(df: DataFrame, outputPath: String, partitionCol: String): Unit =
+    Convert.pipeline(df).write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(outputPath)
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   /** O11: the sink output as one zip of DEFLATEd entries (app.py:54-65),
     * compressed on every driver core. Entry names are paths relative to

@@ -160,20 +160,6 @@ object Tombstones {
       e.copy(stats = Some(statsDir), tombstones = e.tombstones :+ frag))
   }
 
-  /** Swap in replacement stored stats with no new tombstones (the append
-    * path's stats advance) — same prepare-then-commit atom: a crash leaves
-    * the old stats resolved, never a half-written or missing dir. Never
-    * bumps the base generation: a mutation that also touches standing
-    * data commits its bump BEFORE the physical step
-    * ([[bumpBaseGeneration]] — the as-of crash-window ordering), not here.
-    */
-  def advanceStats(
-      s: SparkSession, indexPath: String, newStats: DataFrame): Unit = {
-    val e = IndexManifest.next(s, indexPath)
-    val statsDir = writeEpochStats(indexPath, e.version, newStats)
-    IndexManifest.commit(s, indexPath, e.copy(stats = Some(statsDir)))
-  }
-
   /** Record a base-generation change with no other state change — the
     * marker an append that commits no stats (the IVF ingest path) lands so
     * as-of reads can detect that standing data files were mutated and fail
@@ -183,12 +169,6 @@ object Tombstones {
     val e = IndexManifest.next(s, indexPath)
     IndexManifest.commit(s, indexPath, e.copy(baseGen = e.baseGen + 1))
   }
-
-  /** The resolved stored-stats directory (build default until a lifecycle
-    * commit moved it).
-    */
-  def statsPath(s: SparkSession, indexPath: String, default: String): String =
-    IndexManifest.statsPath(s, indexPath, default)
 
   /** Directory holding an index's buffered-update batches (the
     * LSM-memtable half of the batched update path: tombstones mask the
@@ -208,10 +188,7 @@ object Tombstones {
     * verifying the input is a replay).
     */
   def ingestFence(s: SparkSession, indexPath: String): Option[(String, Long)] = {
-    // uncached on purpose: the exactly-once admission (IndexWrite's fence)
-    // must see the true committed mark — a ≤-ttl-stale fence would
-    // re-admit an already-committed batch as new
-    val cur = IndexManifest.currentUncached(s, indexPath)
+    val cur = IndexManifest.current(s, indexPath)
     for (h <- cur.flatMap(_.ingestHwm))
       yield (cur.flatMap(_.ingestStream).getOrElse("default"), h)
   }
@@ -370,25 +347,7 @@ object Tombstones {
   def vacuum(
       s: SparkSession, anchor: String,
       defaultData: Option[String] = None, keepEpochs: Int = 0): Long = {
-    // uncached on purpose: vacuum DELETES files and never passes through
-    // next()'s cache-flag refusal, so a ttl-stale `cur.version` here
-    // would silently under-enumerate the reclaim candidates (and any
-    // future keep-set read of `cur` would risk worse) — every
-    // store-mutating path resolves uncached (review-found)
-    // [r21, ADVICE] the manifest TTL cache lets an in-flight reader serve
-    // an epoch up to ttl after a writer superseded it; total reclaim
-    // (keepEpochs = 0) inside that window deletes the cached epoch's files
-    // under the reader. In-process we can see the misconfiguration — warn
-    // loudly (cross-process serving tiers must size retention so that
-    // ttl <= inter-commit interval x keepEpochs; see cacheTtlMs' doc).
-    if (keepEpochs == 0 && IndexManifest.cacheTtlMs(s) > 0L)
-      org.slf4j.LoggerFactory.getLogger("graft.Tombstones").warn(
-        s"Tombstones.vacuum($anchor): keepEpochs=0 (total reclaim) while " +
-          "graft.manifest.cacheTtlMs is on — a TTL-cached reader of this " +
-          "anchor can hold the just-reclaimed epoch for up to ttl and fail " +
-          "with missing files; retain >= 1 epoch (ttl <= inter-commit " +
-          "interval x keepEpochs) when serving through the cache")
-    IndexManifest.currentUncached(s, anchor) match {
+    IndexManifest.current(s, anchor) match {
       case None => 0L
       case Some(cur) =>
         val conf = s.sparkContext.hadoopConfiguration
@@ -520,12 +479,10 @@ object Tombstones {
   def migrateIndexLayout(
       s: SparkSession, anchor: String,
       anchorAfter: Option[() => String] = None)(fold: => Unit): Boolean =
-    // uncached: the migrate decision and the post-fold stamp check are
-    // writer-side state reads (the store-mutating-path discipline)
-    IndexManifest.currentUncached(s, anchor) match {
+    IndexManifest.current(s, anchor) match {
       case Some(cur) if cur.layout != IndexManifest.CURRENT_LAYOUT =>
         fold
-        val after = IndexManifest.currentUncached(
+        val after = IndexManifest.current(
           s, anchorAfter.map(_.apply()).getOrElse(anchor))
         require(after.exists(_.layout == IndexManifest.CURRENT_LAYOUT),
           s"migrateIndexLayout: $anchor's fold committed layout " +
@@ -789,8 +746,7 @@ object Tombstones {
     * manifest is gone, vacuum is a no-op).
     */
   def reset(s: SparkSession, indexPath: String): Unit = {
-    // uncached: reset reclaims files (the store-mutating-path discipline)
-    IndexManifest.currentUncached(s, indexPath).foreach { cur =>
+    IndexManifest.current(s, indexPath).foreach { cur =>
       // the epoch-data naming convention is `<default>__e<v>` — recover
       // the default from the current pointer so vacuum can enumerate the
       // superseded data epochs too
@@ -987,10 +943,7 @@ object Tombstones {
     // never-mutated anchor has no epochs to alias and carries nothing.
     if (anchor.isEmpty) {
       reset(s, dest)
-      // uncached: the carry epoch's CONTENT (hwm, generation) derives
-      // from this read and its commit bypasses next()'s template — a
-      // stale read would silently mis-carry the fence
-      val old = IndexManifest.currentUncached(s, cur)
+      val old = IndexManifest.current(s, cur)
       val carry = old match {
         case Some(f) =>
           Some(IndexManifest.Epoch(

@@ -20,10 +20,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Mechanics: one lease file beside the manifest
   * (`<anchor>_manifest/_lease`) holding (holder id, expiry epoch-millis).
-  * Acquisition creates it with `create(overwrite = false)` — the
-  * loudest exists-check primitive the stores offer (HDFS: namenode-
-  * arbitrated; local FS: best-effort, which is fine for an ADVISORY
-  * lock backed by the manifest's own collision check). A claimant that
+  * Acquisition creates it with [[IndexManifest.createExclusive]], the same
+  * exclusive-create primitive that lands a manifest version (local FS:
+  * O_EXCL; HDFS: namenode-arbitrated), so exactly one racing claimant
+  * wins the first claim. A claimant that
   * finds a live lease either returns false (fail-fast policy) or polls
   * until the deadline ([[acquireOrWait]]); one that finds an EXPIRED
   * lease deletes it and retries. Release deletes the file only if the
@@ -43,18 +43,11 @@ object WriterLease {
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Grace before a TORN (zero-byte/unparseable) lease file becomes
-    * breakable, measured from the file's modification time: long enough
-    * that a racer reading mid-initial-write never breaks a LIVE claim,
-    * short enough that a writer dead between create and write stops
-    * paging within a minute.
-    */
-  val TORN_GRACE_MS: Long = 60000L
-
   /** The current lease, if a lease file exists (expired or not). A
     * zero-byte or torn file — a writer that died between creating and
     * writing the lease — parses as a lease under the reserved holder
-    * `<torn>` that EXPIRES [[TORN_GRACE_MS]] after the file's mtime:
+    * `<torn>` that EXPIRES [[IndexManifest.TORN_GRACE_MS]] after the
+    * file's mtime:
     * hard-failing would make the corpse's lease permanently unbreakable
     * (the page the lease exists to bound), while treating it as
     * instantly expired would let a claimant racing the non-atomic
@@ -78,7 +71,8 @@ object WriterLease {
           Lease(body.substring(0, i), body.substring(i + 1).trim.toLong)).toOption
         else None
       Some(parsed.getOrElse(
-        Lease("<torn>", f.getFileStatus(p).getModificationTime + TORN_GRACE_MS)))
+        Lease("<torn>",
+          f.getFileStatus(p).getModificationTime + IndexManifest.TORN_GRACE_MS)))
     }
   }
 
@@ -178,39 +172,15 @@ object WriterLease {
         if (other.isDefined && !breakExpired(s, anchor, other.get)) return false
         val parent = p.getParent
         if (!f.exists(parent)) f.mkdirs(parent)
-        // initial claim via the same conditional-create primitive the
-        // manifest's create landing uses: on the local FS Hadoop's
-        // create(overwrite = false) is a non-atomic check-then-create
-        // (two claimants can both "win"), so take kernel-atomic O_EXCL
-        // there; HDFS arbitrates create(false) at the namenode. The
-        // lease stays advisory either way — the manifest's version
-        // collision remains the correctness guard — but the two
-        // primitives now agree (review-found inconsistency).
-        val isLocal = f.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-          f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-        val body = s"$holder\t${nowMs() + ttlMs}\n".getBytes("UTF-8")
-        if (isLocal) {
-          val nio = java.nio.file.Paths.get(p.toUri.getPath)
-          try {
-            val out = java.nio.file.Files.newOutputStream(nio,
-              java.nio.file.StandardOpenOption.CREATE_NEW,
-              java.nio.file.StandardOpenOption.WRITE)
-            try out.write(body)
-            finally out.close()
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-            case _: java.io.IOException => false // lost the creation race
-          }
-        } else {
-          try {
-            val out = f.create(p, false) // loud if a racer landed first
-            try out.write(body)
-            finally out.close()
-            true
-          } catch {
-            case _: java.io.IOException => false // lost the creation race
-          }
+        // initial claim through the manifest's own landing primitive;
+        // the lease stays advisory — the manifest's version collision
+        // remains the correctness guard
+        try {
+          IndexManifest.createExclusive(
+            f, p, s"$holder\t${nowMs() + ttlMs}\n".getBytes("UTF-8"))
+          true
+        } catch {
+          case _: java.io.IOException => false // lost the creation race
         }
     }
   }

@@ -236,6 +236,8 @@ class SinkSpec extends SparkSpec {
     Sink.writePartitioned(orders, out, "o_orderstatus")
     val full = spark.read.parquet(out).count()
     assert(full == orders.count())
+    // the dynamic mode rides on the write, not on the shared session
+    assert(!spark.conf.getAll.contains("spark.sql.sources.partitionOverwriteMode"))
 
     // re-write ONLY the F partition with a filtered slice; O and P survive
     val fOnly = orders.filter(col("o_orderstatus") === "F").limit(10)
@@ -439,6 +441,46 @@ class SinkSpec extends SparkSpec {
     intercept[Throwable](Sink.parquetSchema(spark, nanos.toString))
   }
 
+  /** The column types a Spark writer produces that the sink must convert. */
+  private val sparkColumn: Gen[DataType] = Gen.oneOf(
+    for { p <- Gen.choose(1, 38); sc <- Gen.choose(0, p) } yield DecimalType(p, sc),
+    Gen.oneOf[DataType](TimestampNTZType, TimestampType, FloatType, BinaryType, StringType,
+      IntegerType, ArrayType(IntegerType), MapType(StringType, LongType),
+      StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))))
+
+  /** A value of `t` as a Row carries it, null one time in five. */
+  private def valueOf(t: DataType): Gen[Any] =
+    Gen.frequency(1 -> Gen.const(null), 4 -> nonNullOf(t))
+
+  private def nonNullOf(t: DataType): Gen[Any] = t match {
+    case d: DecimalType =>
+      val bound = math.pow(10, math.min(d.precision, 18)).toLong - 1
+      Gen.choose(-bound, bound).map(java.math.BigDecimal.valueOf(_, d.scale))
+    case TimestampType | TimestampNTZType =>
+      // 1900 to 2100: no calendar rebase on either side of the write
+      Gen.zip(Gen.choose(-2208988800L, 4102444800L), Gen.choose(0, 999999)).map {
+        case (sec, us) =>
+          if (t == TimestampType) java.time.Instant.ofEpochSecond(sec, us * 1000L)
+          else java.time.LocalDateTime.ofEpochSecond(sec, us * 1000, java.time.ZoneOffset.UTC)
+      }
+    case FloatType => Gen.oneOf(Gen.choose(-1e6f, 1e6f),
+      Gen.oneOf(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0f))
+    case BinaryType => Gen.containerOf[Array, Byte](Gen.choose(Byte.MinValue, Byte.MaxValue))
+    case StringType => Gen.stringOf(Gen.frequency(
+      4 -> Gen.alphaNumChar, 1 -> Gen.oneOf('é', '中', ' ', '\n', '"', ',')))
+    case IntegerType => Gen.choose(Int.MinValue, Int.MaxValue)
+    case LongType => Gen.choose(Long.MinValue, Long.MaxValue)
+    case ArrayType(e, _) => Gen.choose(0, 3).flatMap(Gen.listOfN(_, valueOf(e)))
+    case MapType(k, v, _) =>
+      Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.zip(nonNullOf(k), valueOf(v)))).map(_.toMap)
+    case StructType(fs) => Gen.sequence[Seq[Any], Any](fs.map(f => valueOf(f.dataType)))
+      .map(Row.fromSeq)
+  }
+
+  /** Rows as a multiset: every type `Convert.pipeline` emits compares by value. */
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[Row, Int] =
+    df.collect().toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+
   test("parquetSchema agrees with Spark on generated types, bare and Spark-written") {
     val decimal = for {
       p <- Gen.choose(1, 38)
@@ -461,11 +503,6 @@ class SinkSpec extends SparkSpec {
       n => Types.optionalGroup().optional(INT32).named("a")
         .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("b").named(n),
       n => Types.optionalList().optionalElement(INT32).named(n)))
-    val sparkColumn: Gen[DataType] = Gen.oneOf(
-      for { p <- Gen.choose(1, 38); sc <- Gen.choose(0, p) } yield DecimalType(p, sc),
-      Gen.oneOf[DataType](TimestampNTZType, TimestampType, FloatType, BinaryType, StringType,
-        IntegerType, ArrayType(IntegerType), MapType(StringType, LongType),
-        StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))))
     val bareInput = Gen.zip(Gen.nonEmptyListOf(bareColumn), Gen.choose(0, 2))
     val bare = Prop.forAllNoShrink(bareInput) { case (cols, rows) =>
       val schema = new MessageType("schema",
@@ -532,7 +569,39 @@ class SinkSpec extends SparkSpec {
       assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
       assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "false")
       assert(sc.getJobTags().isEmpty)
+      // a negative timeout is refused before the conversion tags anything
+      intercept[IllegalArgumentException] {
+        Sink.convertParquet(spark, s"$sfDir/region.parquet", out,
+          Sink.ConvertOptions(timeoutSeconds = -1))
+      }
+      assert(sc.getJobTags().isEmpty)
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "false")
     } finally sc.clearJobGroup()
+  }
+
+  test("convertParquet reads back as Convert.pipeline of its input, and the pipeline is idempotent") {
+    import graft.operators.Convert
+    val input = for {
+      types <- Gen.nonEmptyListOf(sparkColumn)
+      n <- Gen.choose(0, 6)
+      rows <- Gen.listOfN(n, Gen.sequence[Seq[Any], Any](types.map(valueOf)))
+    } yield (types, rows)
+    val prop = Prop.forAllNoShrink(input) { case (types, rows) =>
+      val schema = StructType(types.zipWithIndex.map { case (t, i) => StructField(s"c$i", t) })
+      val in = s"${Files.createTempDirectory("graft-prop")}/in"
+      spark.createDataFrame(rows.map(Row.fromSeq).asJava, schema).coalesce(1).write.parquet(in)
+      val once = Convert.pipeline(spark.read.parquet(in))
+      val res = Sink.convertParquet(spark, in, Files.createTempDirectory("graft-prop-out").toString)
+      val back = spark.read.parquet(res.outputPath)
+      val want = bag(once)
+      (Convert.pipeline(once).schema == once.schema && bag(Convert.pipeline(once)) == want &&
+        res.rows == rows.size &&
+        back.schema.map(f => f.name -> f.dataType) == once.schema.map(f => f.name -> f.dataType) &&
+        bag(back) == want) :| s"${schema.catalogString} x ${rows.size}"
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("a timeout fails the conversion as timeout and leaves no zip") {

@@ -1483,21 +1483,6 @@ class StreamingSpec extends SparkSpec {
     assert(got == SparkEntry.queries("search_hybrid_snapshot")(spark, sfDir)
       .collect().toSeq,
       "the consistent hybrid must equal the registered snapshot entry")
-    // the serving-tier deployment shape: under the conf-routed manifest
-    // cache (graft.manifest.cacheTtlMs) the consistent read still serves
-    // the same rows — its correctness-bearing resolutions (the ingest
-    // fences, the as-of epoch reads, the generation guard) are uncached
-    // by design, while ordinary probe-path resolution may hit the cache
-    val priorTtl = spark.conf.getOption("graft.manifest.cacheTtlMs")
-    spark.conf.set("graft.manifest.cacheTtlMs", "600000")
-    try assert(SearchQueries.hybridTopkFromIndexesConsistent(
-        spark, sfDir, "chyb_search", s"$base/sidx", s"$base/ividx")
-      .collect().toSeq == got,
-      "the consistent read must serve identically under the cache flag")
-    finally priorTtl match {
-      case Some(v) => spark.conf.set("graft.manifest.cacheTtlMs", v)
-      case None    => spark.conf.unset("graft.manifest.cacheTtlMs")
-    }
     // refusal 1: a sibling that was never stream-ingested has no fence —
     // no common snapshot exists, say so loudly
     val e1 = intercept[IllegalArgumentException] {

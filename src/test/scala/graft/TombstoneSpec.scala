@@ -1080,42 +1080,20 @@ class TombstoneSpec extends SparkSpec {
   // ONE IndexManifest.commit. These tests kill the writer at exactly that
   // boundary (all prepared files durable, pointer missing) and prove a
   // probe always sees a consistent epoch — the closure of the r14-verdict
-  // stats-swap/tombstone and rename crash windows.
-  //
-  // [r19] Each injection class runs under BOTH selectable landing
-  // primitives (`graft.manifest.landing` = rename | create): the 8-way
-  // race was pinned under `create`, but the rest of the set had only ever
-  // executed under the default `rename` — and `create` is the primitive
-  // an object-store deployment selects. The injected crash fires before
-  // the landing step, so the crashed-mutation half is primitive-
-  // independent by construction; what the second run proves is the whole
-  // RETRY path — requireDestFree, torn-classification, and the landing
-  // itself — under the other primitive.
+  // stats-swap/tombstone and rename crash windows. The injected crash
+  // fires before the exclusive-create landing, so each retry also runs
+  // requireDestFree and the landing itself.
 
-  private def withLanding(mode: String)(body: => Unit): Unit = {
-    // restore the PRIOR value, not a hard-coded "rename": a future
-    // suite-level default of create must not be silently clobbered for
-    // every test that runs after this one (review-found)
-    val prior = spark.conf.getOption("graft.manifest.landing")
-    spark.conf.set("graft.manifest.landing", mode)
-    try body finally prior match {
-      case Some(v) => spark.conf.set("graft.manifest.landing", v)
-      case None    => spark.conf.unset("graft.manifest.landing")
-    }
-  }
-
-  for (mode <- Seq("rename", "create")) {
-
-  test(s"crash injection [$mode landing]: a delete that dies before its commit changes nothing; its retry lands exactly once") { withLanding(mode) {
+  test("crash injection: a delete that dies before its commit changes nothing; its retry lands exactly once") {
     import graft.operators.SearchQueries
-    val path = s"$tmp/search_crash_$mode"
-    val tbl = s"search_crash_${mode}_idx"
+    val path = s"$tmp/search_crash"
+    val tbl = "search_crash_idx"
     SearchQueries.writeSearchIndex(spark, sfDir, tbl, path)
     val before = sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path))
     val deleted = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 7 === 3)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    graft.sources.IndexManifest.failNextCommit = true
+    graft.sources.IndexManifest.failCommitCountdown = 0
     val e = intercept[RuntimeException] {
       SearchQueries.deleteFromSearchIndex(spark, tbl, path, deleted)
     }
@@ -1131,20 +1109,20 @@ class TombstoneSpec extends SparkSpec {
     SearchQueries.deleteFromSearchIndex(spark, tbl, path, deleted)
     val after = sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path))
     assert(after == sorted(SparkEntry.queries("search_bm25_deleted")(spark, sfDir)))
-  }}
+  }
 
-  test(s"crash injection [$mode landing]: a buffered update batch that dies before its commit changes nothing") { withLanding(mode) {
+  test("crash injection: a buffered update batch that dies before its commit changes nothing") {
     // the batched-update atom: tombstone + delta rows + advanced stats
     // land together or not at all — a crashed buffer call leaves probes
     // on the previous epoch, and its retry lands exactly once
     import graft.operators.SearchQueries
-    val path = s"$tmp/search_bufcrash_$mode"
-    val tbl = s"search_bufcrash_${mode}_idx"
+    val path = s"$tmp/search_bufcrash"
+    val tbl = "search_bufcrash_idx"
     SearchQueries.writeSearchIndex(spark, sfDir, tbl, path)
     val before = sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path))
     val upd = Tables.documents(spark, sfDir).filter(col("doc_id") % 13 === 2)
       .select(col("doc_id"), concat(col("text"), lit(" zulu")).as("text"), col("lang"))
-    graft.sources.IndexManifest.failNextCommit = true
+    graft.sources.IndexManifest.failCommitCountdown = 0
     intercept[RuntimeException] {
       SearchQueries.bufferSearchUpdate(spark, tbl, path, upd)
     }
@@ -1156,18 +1134,18 @@ class TombstoneSpec extends SparkSpec {
       .unionByName(upd)
     assert(sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path)) ==
       sorted(SearchQueries.bm25OverDocs(spark, updCorpus)))
-  }}
+  }
 
-  test(s"crash injection [$mode landing]: a compaction that dies before its commit leaves probes on the old (data, tombstones) pair") { withLanding(mode) {
+  test("crash injection: a compaction that dies before its commit leaves probes on the old (data, tombstones) pair") {
     import graft.operators.SimilarityQueries
-    val path = s"$tmp/ivf_crash_$mode"
+    val path = s"$tmp/ivf_crash"
     SimilarityQueries.writeIvfIndex(spark, sfDir, path)
     val deleted = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 13 === 7)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     SimilarityQueries.deleteFromIvfIndex(spark, path, deleted)
     val probed = sorted(SimilarityQueries.ivfTopkFromIndex(spark, sfDir, path))
-    graft.sources.IndexManifest.failNextCommit = true
+    graft.sources.IndexManifest.failCommitCountdown = 0
     intercept[RuntimeException] { SimilarityQueries.compactIvfIndex(spark, path) }
     // the compacted epoch dir exists but is unreferenced: the probe still
     // resolves the old data dir AND the live tombstones — consistent, and
@@ -1180,12 +1158,12 @@ class TombstoneSpec extends SparkSpec {
     SimilarityQueries.compactIvfIndex(spark, path)
     assert(graft.sources.Tombstones.idSet(spark, path).isEmpty)
     assert(sorted(SimilarityQueries.ivfTopkFromIndex(spark, sfDir, path)) == probed)
-  }}
+  }
 
-  test(s"crash injection [$mode landing]: a search compaction dying at either commit stays consistent, as-of never silently wrong") { withLanding(mode) {
+  test("crash injection: a search compaction dying at either commit stays consistent, as-of never silently wrong") {
     import graft.operators.SearchQueries
-    val path = s"$tmp/search_crash2_$mode"
-    val tbl = s"search_crash2_${mode}_idx"
+    val path = s"$tmp/search_crash2"
+    val tbl = "search_crash2_idx"
     SearchQueries.writeSearchIndex(spark, sfDir, tbl, path)
     val deleted = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 7 === 3)
@@ -1228,9 +1206,7 @@ class TombstoneSpec extends SparkSpec {
     graft.sources.Tombstones.clear(spark, path, bump = false)
     assert(graft.sources.Tombstones.idSet(spark, path).isEmpty)
     assert(sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path)) == probed)
-  }}
-
-  } // for mode
+  }
 
   test("vacuum called with a differently-spelled anchor never false-deletes live artifacts") {
     // the review-found corruption path, pinned shut: the manifest stores
@@ -1464,7 +1440,7 @@ class TombstoneSpec extends SparkSpec {
     // lands at the DESTINATION before the swap) — the old location is
     // still what readers resolve, its fence still stands, and the
     // retried fold goes through
-    graft.sources.IndexManifest.failNextCommit = true
+    graft.sources.IndexManifest.failCommitCountdown = 0
     intercept[RuntimeException] {
       DedupQueries.compactWinnowIndex(spark, "winnow_ing_a")
     }
@@ -1527,16 +1503,15 @@ class TombstoneSpec extends SparkSpec {
     assert(ilog.map(_.getString(1)).toSeq == Seq("append", "fold"), ilog.toSeq)
   }
 
-  for (mode <- Seq("rename", "create"))
-  test(s"crash injection [$mode landing]: an append dying before its one commit changes nothing") { withLanding(mode) {
+  test("crash injection: an append dying before its one commit changes nothing") {
     // the append is ONE commit now (rows + stats land together), so the
     // old postings-landed/stats-old window cannot exist: a crash at the
     // atomicity boundary leaves the prepared delta and stats dirs
     // unreferenced, live probes on the previous epoch, and as-of reads
     // serving — and the RETRY succeeds cleanly over the old state
     import graft.operators.SearchQueries
-    val path = s"$tmp/search_crash3_$mode"
-    val tbl = s"search_crash3_${mode}_idx"
+    val path = s"$tmp/search_crash3"
+    val tbl = "search_crash3_idx"
     SearchQueries.writeSearchIndex(spark, sfDir, tbl, path)
     val asof0 = sorted(SearchQueries.bm25TopkFromIndexAsOf(
       spark, tbl, path, 0L))
@@ -1544,7 +1519,7 @@ class TombstoneSpec extends SparkSpec {
     val live0 = sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path))
     val batch = Tables.documents(spark, sfDir).limit(3)
       .select(col("doc_id") + 7000000L as "doc_id", col("text"), col("lang"))
-    graft.sources.IndexManifest.failNextCommit = true
+    graft.sources.IndexManifest.failCommitCountdown = 0
     intercept[RuntimeException] {
       SearchQueries.appendSearchIndex(spark, tbl, path, batch)
     }
@@ -1559,7 +1534,7 @@ class TombstoneSpec extends SparkSpec {
     // and as-of travel below the landed append still reproduces the build
     assert(sorted(SearchQueries.bm25TopkFromIndexAsOf(
       spark, tbl, path, 0L)) == asof0)
-  }}
+  }
 
   test("band-index buffered ingest: base∪delta probes equal a rebuilt index; the fold retires the window") {
     import graft.operators.DedupQueries
@@ -1589,7 +1564,7 @@ class TombstoneSpec extends SparkSpec {
     val after1 = probe()
     assert(after1 == inline(d.filter(col("doc_id") < thr).unionByName(b1)))
     // a crashed buffer changes nothing — the prepared delta is never named
-    graft.sources.IndexManifest.failNextCommit = true
+    graft.sources.IndexManifest.failCommitCountdown = 0
     intercept[RuntimeException] { DedupQueries.bufferBandUpdate(b2, "band_ing_idx") }
     assert(probe() == after1)
     DedupQueries.bufferBandUpdate(b2, "band_ing_idx")
@@ -1784,7 +1759,7 @@ class TombstoneSpec extends SparkSpec {
       after1 == reb(col("vec_id") < 400 ||
         (col("vec_id") >= 400 && col("vec_id") % 2 === 0)))
     // a crashed insert changes nothing
-    graft.sources.IndexManifest.failNextCommit = true
+    graft.sources.IndexManifest.failCommitCountdown = 0
     intercept[RuntimeException] {
       SimilarityQueries.bufferGraphInsert(spark, sfDir, path, b2)
     }
@@ -2283,7 +2258,7 @@ class TombstoneSpec extends SparkSpec {
     assert(!wl.acquire(spark, anchor, "writer-f", ttlMs = 60000),
       "a fresh torn lease (possible mid-write racer) must not break")
     assert(leaseFile.setLastModified(
-      System.currentTimeMillis() - wl.TORN_GRACE_MS - 5000))
+      System.currentTimeMillis() - graft.sources.IndexManifest.TORN_GRACE_MS - 5000))
     assert(wl.acquire(spark, anchor, "writer-f", ttlMs = 60000),
       "an aged torn lease (dead creator) must break")
     wl.release(spark, anchor, "writer-f")
@@ -2574,128 +2549,111 @@ class TombstoneSpec extends SparkSpec {
     ()
   }
 
-  test("landing primitives: rename and conditional-create both land atomically, collide loudly, and reclaim torn landings") {
-    // the r17-verdict seam: every atomicity claim bottoms out in how the
-    // version pointer lands; both selectable primitives must satisfy the
-    // same contract — exactly one racer wins, losers fail loudly, a torn
-    // landing never serves and is reclaimable after the grace
+  test("exclusive-create landing: one racer wins, losers collide loudly, torn landings never serve and are set aside after the grace") {
+    // every atomicity claim bottoms out in how the version pointer lands:
+    // exactly one racer wins, losers fail loudly, a torn landing never
+    // serves and is reclaimable after the grace
     val m = graft.sources.IndexManifest
-    for (mode <- Seq("rename", "create")) {
-      spark.conf.set("graft.manifest.landing", mode)
-      try {
-        val anchor = s"$tmp/land_$mode"
-        // basic commit → read round-trip
-        val e1 = m.next(spark, anchor)
-        m.commit(spark, anchor, e1.copy(stats = Some(s"$anchor/s1")))
-        assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/s1"))
-        // sequential collision: the same version cannot land twice
-        val err = intercept[IllegalArgumentException] {
-          m.commit(spark, anchor, e1.copy(stats = Some(s"$anchor/loser")))
-        }
-        assert(err.getMessage.contains("single-writer"), err.getMessage)
-        // RACING writers: 8 threads template the same next version and
-        // commit simultaneously. Run against the ARBITRATED primitive only
-        // (O_EXCL local create here; HDFS arbitrates both): exactly one
-        // winner, every loser loud, deterministically. The local-FS rename
-        // TOCTOU is real — an early version of this test drove 8
-        // simultaneous renames through it and produced two "winners" with
-        // crossed content — which is precisely why rename-on-local is
-        // documented single-writer-discipline-only and why the
-        // conditional-create landing exists.
-        val cur =
-          if (mode == "rename") m.current(spark, anchor).get
-          else {
-            val eRace = m.next(spark, anchor)
-            val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-            val start = new java.util.concurrent.CountDownLatch(1)
-            val threads = (1 to 8).map { i =>
-              new Thread(() => {
-                start.await()
-                try {
-                  m.commit(spark, anchor,
-                    eRace.copy(stats = Some(s"$anchor/racer$i")))
-                  results.add(s"win:$i")
-                } catch {
-                  case ex: IllegalArgumentException
-                      if ex.getMessage.contains("single-writer") ||
-                        ex.getMessage.contains("TORN") => results.add(s"lose:$i")
-                }
-              })
-            }
-            threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
-            import scala.jdk.CollectionConverters._
-            val wins = results.asScala.count(_.startsWith("win"))
-            assert(wins == 1 && results.size == 8,
-              s"create landing must have ONE winner: ${results.asScala.mkString(",")}")
-            // the committed state is the one winner's complete epoch
-            val c = m.current(spark, anchor).get
-            assert(c.version == eRace.version && c.stats.exists(_.contains("racer")))
-            c
-          }
-        // TORN landing: a version file without the eot marker (a writer
-        // dead between create and close). Under the CREATE landing this
-        // is the documented crash shape — it never serves, readers
-        // resolve the previous epoch, as-of refuses loudly. Under the
-        // RENAME landing a torn file cannot occur (the rename is
-        // all-or-nothing), so a marker-less file is a legacy pre-marker
-        // manifest or a foreign file — every read pages LOUDLY instead
-        // of silently skipping, because a skip would let a later commit
-        // set the legacy pointer aside and restart the lineage at v1,
-        // dropping its tombstones/hwm (the r18 ADVICE finding).
-        val tornName = f"v${cur.version + 1}%012d"
-        val tornFile = new java.io.File(
-          m.dir(anchor).stripPrefix("file:"), tornName)
-        val w = new java.io.FileWriter(tornFile)
-        w.write(s"version\t${cur.version + 1}\nlayout\t1\nstats\t$anchor/torn\n")
-        w.close()
-        if (mode == "create") {
-          assert(m.current(spark, anchor).contains(cur),
-            "a torn landing must never resolve as the current epoch")
-          assert(m.history(spark, anchor).forall(_.version <= cur.version))
-          val tornErr = intercept[IllegalArgumentException] {
-            m.at(spark, anchor, cur.version + 1)
-          }
-          assert(tornErr.getMessage.contains("TORN"), tornErr.getMessage)
-        } else {
-          val le = intercept[IllegalStateException] { m.current(spark, anchor) }
-          assert(le.getMessage.contains("marker"), le.getMessage)
-          intercept[IllegalStateException] { m.history(spark, anchor) }
-          intercept[IllegalStateException] { m.at(spark, anchor, cur.version + 1) }
-        }
-        // a FRESH torn landing blocks its version loudly (may be a racer
-        // mid-write)...
-        val freshErr = intercept[IllegalArgumentException] {
-          m.commit(spark, anchor, cur.copy(version = cur.version + 1))
-        }
-        assert(freshErr.getMessage.contains("TORN"), freshErr.getMessage)
-        // ...and past the grace the retry sets it ASIDE (renamed, never
-        // deleted — forensic evidence survives a misclassification) and
-        // lands
-        assert(tornFile.setLastModified(
-          System.currentTimeMillis() - m.TORN_GRACE_MS - 5000))
-        m.commit(spark, anchor,
-          cur.copy(version = cur.version + 1, stats = Some(s"$anchor/retry")))
-        assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/retry"))
-        assert(new java.io.File(m.dir(anchor).stripPrefix("file:")).listFiles()
-          .exists(_.getName.startsWith(s".torn_$tornName")),
-          "the torn landing must be set aside, not destroyed")
-      } finally spark.conf.set("graft.manifest.landing", "rename")
+    val anchor = s"$tmp/land"
+    // basic commit → read round-trip
+    val e1 = m.next(spark, anchor)
+    m.commit(spark, anchor, e1.copy(stats = Some(s"$anchor/s1")))
+    assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/s1"))
+    // sequential collision: the same version cannot land twice
+    val err = intercept[IllegalArgumentException] {
+      m.commit(spark, anchor, e1.copy(stats = Some(s"$anchor/loser")))
     }
-    // crash injection holds under BOTH landings (the injection fires
-    // before the landing step, so a crashed mutation changes nothing)
-    for (mode <- Seq("rename", "create")) {
-      spark.conf.set("graft.manifest.landing", mode)
-      try {
-        val anchor = s"$tmp/land_crash_$mode"
-        val e1 = m.next(spark, anchor)
-        m.commit(spark, anchor, e1.copy(stats = Some(s"$anchor/base")))
-        graft.sources.IndexManifest.failNextCommit = true
-        intercept[RuntimeException] {
-          m.commit(spark, anchor, m.next(spark, anchor))
+    assert(err.getMessage.contains("single-writer"), err.getMessage)
+    // RACING writers: 8 threads template the same next version and commit
+    // simultaneously — exactly one winner, every loser loud,
+    // deterministically (O_EXCL on the local FS). An earlier rename
+    // landing drove 8 simultaneous renames through the local FS's
+    // check-then-rename and produced two "winners" with crossed content.
+    val eRace = m.next(spark, anchor)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 8).map { i =>
+      new Thread(() => {
+        start.await()
+        try {
+          m.commit(spark, anchor, eRace.copy(stats = Some(s"$anchor/racer$i")))
+          results.add(s"win:$i")
+        } catch {
+          case ex: IllegalArgumentException
+              if ex.getMessage.contains("single-writer") ||
+                ex.getMessage.contains("TORN") => results.add(s"lose:$i")
         }
-        assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/base"))
-      } finally spark.conf.set("graft.manifest.landing", "rename")
+      })
     }
+    threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    val wins = results.asScala.count(_.startsWith("win"))
+    assert(wins == 1 && results.size == 8,
+      s"the landing must have ONE winner: ${results.asScala.mkString(",")}")
+    // the committed state is the one winner's complete epoch
+    val cur = m.current(spark, anchor).get
+    assert(cur.version == eRace.version && cur.stats.exists(_.contains("racer")))
+    // TORN landing: a version file without the eot marker (a writer dead
+    // between create and close) never serves — readers resolve the
+    // previous epoch, as-of refuses loudly
+    val tornName = f"v${cur.version + 1}%012d"
+    val tornFile = new java.io.File(m.dir(anchor).stripPrefix("file:"), tornName)
+    val w = new java.io.FileWriter(tornFile)
+    w.write(s"version\t${cur.version + 1}\nlayout\t1\nstats\t$anchor/torn\n")
+    w.close()
+    assert(m.current(spark, anchor).contains(cur),
+      "a torn landing must never resolve as the current epoch")
+    assert(m.history(spark, anchor).forall(_.version <= cur.version))
+    val tornErr = intercept[IllegalArgumentException] {
+      m.at(spark, anchor, cur.version + 1)
+    }
+    assert(tornErr.getMessage.contains("TORN"), tornErr.getMessage)
+    // a FRESH torn landing blocks its version loudly (may be a racer
+    // mid-write)...
+    val freshErr = intercept[IllegalArgumentException] {
+      m.commit(spark, anchor, cur.copy(version = cur.version + 1))
+    }
+    assert(freshErr.getMessage.contains("TORN"), freshErr.getMessage)
+    // ...and past the grace the retry sets it ASIDE (renamed, never
+    // deleted — forensic evidence survives a misclassification) and lands
+    assert(tornFile.setLastModified(
+      System.currentTimeMillis() - m.TORN_GRACE_MS - 5000))
+    m.commit(spark, anchor,
+      cur.copy(version = cur.version + 1, stats = Some(s"$anchor/retry")))
+    assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/retry"))
+    assert(new java.io.File(m.dir(anchor).stripPrefix("file:")).listFiles()
+      .exists(_.getName.startsWith(s".torn_$tornName")),
+      "the torn landing must be set aside, not destroyed")
+    // crash injection: the injected crash fires before the landing, so a
+    // crashed commit changes nothing
+    val crashAnchor = s"$tmp/land_crash"
+    m.commit(spark, crashAnchor,
+      m.next(spark, crashAnchor).copy(stats = Some(s"$crashAnchor/base")))
+    m.failCommitCountdown = 0
+    intercept[RuntimeException] {
+      m.commit(spark, crashAnchor, m.next(spark, crashAnchor))
+    }
+    assert(m.current(spark, crashAnchor).flatMap(_.stats).contains(s"$crashAnchor/base"))
+  }
+
+  test("writer lease: 8 racing first claims on a fresh anchor, exactly one wins and the lease names it") {
+    // the lease's first claim lands through the manifest's exclusive
+    // create, so racing claimants cannot both "win"
+    val wl = graft.sources.WriterLease
+    val anchor = s"$tmp/lease_race"
+    val won = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 8).map { i =>
+      new Thread(() => {
+        start.await()
+        if (wl.acquire(spark, anchor, s"claimant-$i", ttlMs = 60000)) won.add(s"claimant-$i")
+      })
+    }
+    threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    assert(won.size == 1, s"exactly one claimant must win: ${won.asScala.mkString(",")}")
+    assert(wl.current(spark, anchor).map(_.holder).contains(won.peek()))
+    wl.release(spark, anchor, won.peek())
   }
 
   test("fold-deferred reclaim: a probe planned pre-fold executes post-fold; vacuum reclaims retired state; eager stays available") {
@@ -2785,7 +2743,8 @@ class TombstoneSpec extends SparkSpec {
     val path = s"$tmp/search_statsfloor"
     SearchQueries.writeSearchIndex(spark, sfDir, "search_statsfloor", path)
     def stats() = spark.read.parquet(
-      graft.sources.Tombstones.statsPath(spark, path, s"${path}_stats"))
+      graft.sources.IndexManifest.current(spark, path).flatMap(_.stats)
+        .getOrElse(s"${path}_stats"))
       .select("n_docs", "tt").head
     val docs = Tables.documents(spark, sfDir)
     val x = docs.filter(col("doc_id") % 23 === 5).select("doc_id", "text")
@@ -2853,110 +2812,6 @@ class TombstoneSpec extends SparkSpec {
     // and the write side refuses a future layout too
     intercept[m.UnsupportedIndexLayoutException] {
       m.commit(spark, anchor, m.next(spark, anchor).copy(layout = 99))
-    }
-  }
-
-  test("TTL manifest cache: a hit within ttl serves a foreign-superseded epoch; post-expiry re-resolves; own commits invalidate") {
-    val m = graft.sources.IndexManifest
-    val anchor = s"$tmp/cache_idx"
-    m.commit(spark, anchor, m.next(spark, anchor).copy(stats = Some(s"$anchor/s1")))
-    var now = 1000L
-    val clock = () => now
-    // prime the cache
-    assert(m.cachedCurrent(spark, anchor, 500L, clock)
-      .flatMap(_.stats).contains(s"$anchor/s1"))
-    // a FOREIGN writer supersedes the epoch — hand-land a complete
-    // version file, exactly what a cross-process commit looks like to
-    // this JVM's cache (this process's OWN commit path invalidates the
-    // entry — read-your-writes, pinned below — so the genuine staleness
-    // window only ever spans writers the map cannot see)
-    val f2 = new java.io.File(m.dir(anchor).stripPrefix("file:"), "v000000000002")
-    val w = new java.io.FileWriter(f2)
-    w.write(s"version\t2\nlayout\t1\nstats\t$anchor/s2\nbasegen\t0\neot\t1\n")
-    w.close()
-    // the DEFAULT path is unchanged: current() sees the new epoch now
-    assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/s2"))
-    // a hit within ttl serves the SUPERSEDED epoch — the documented
-    // staleness bound, visible and chosen, never an accident
-    now = 1400L
-    assert(m.cachedCurrent(spark, anchor, 500L, clock)
-      .flatMap(_.stats).contains(s"$anchor/s1"))
-    // the first post-expiry read re-resolves and refreshes the window
-    now = 1600L
-    assert(m.cachedCurrent(spark, anchor, 500L, clock)
-      .flatMap(_.stats).contains(s"$anchor/s2"))
-    // this process's OWN commit invalidates the entry: the very next
-    // cached read re-resolves to it, ttl notwithstanding
-    // (read-your-writes — without it a writer flipping the cache flag
-    // could stale itself against its own mutations)
-    m.commit(spark, anchor, m.next(spark, anchor).copy(stats = Some(s"$anchor/s3")))
-    now = 1900L
-    assert(m.cachedCurrent(spark, anchor, 500L, clock)
-      .flatMap(_.stats).contains(s"$anchor/s3"))
-  }
-
-  test("conf-routed manifest cache: one flag serves probes from the cache, writer-critical sites stay uncached, mutations refuse") {
-    val m = graft.sources.IndexManifest
-    val anchor = s"$tmp/confcache_idx"
-    m.commit(spark, anchor, m.next(spark, anchor).copy(stats = Some(s"$anchor/s1")))
-    val prior = spark.conf.getOption("graft.manifest.cacheTtlMs")
-    spark.conf.set("graft.manifest.cacheTtlMs", "600000")
-    try {
-      // prime through the routed path
-      assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/s1"))
-      // destroy the manifest OUT-OF-BAND (raw FS — simulating what only a
-      // foreign process could do): the cached probe path never touches the
-      // store, so current() still serves the epoch...
-      val d = new java.io.File(m.dir(anchor).stripPrefix("file:"))
-      d.listFiles().foreach(_.delete()); assert(d.delete())
-      assert(m.current(spark, anchor).flatMap(_.stats).contains(s"$anchor/s1"),
-        "a cache hit within ttl must not touch the store")
-      // ...while the writer-critical resolution (fence admission, epoch
-      // templating, the as-of generation guard) resolves UNCACHED and
-      // sees the truth
-      assert(graft.sources.Tombstones.ingestFence(spark, anchor).isEmpty,
-        "the ingest fence must resolve uncached")
-      // a MUTATION under the flag refuses loudly at the one choke point
-      // every commit passes through — the flag is for serving sessions,
-      // and a cached resolution must never feed a commit's content
-      val e = intercept[IllegalStateException] { m.next(spark, anchor) }
-      assert(e.getMessage.contains("cacheTtlMs"), e.getMessage)
-    } finally prior match {
-      case Some(v) => spark.conf.set("graft.manifest.cacheTtlMs", v)
-      case None    => spark.conf.unset("graft.manifest.cacheTtlMs")
-    }
-    // flag off: the default path is byte-identical to r19 — the store is
-    // gone and current() says so
-    assert(m.current(spark, anchor).isEmpty)
-  }
-
-  test("conf-routed manifest cache on a PROBE path: the index probe resolves its epoch from the cache, not the store") {
-    import graft.operators.SearchQueries
-    val m = graft.sources.IndexManifest
-    val path = s"$tmp/confcache_probe"
-    val tbl = "confcache_probe_idx"
-    SearchQueries.writeSearchIndex(spark, sfDir, tbl, path)
-    // a mutation, so the manifest is LOAD-BEARING for the probe (its
-    // tombstone masks rows a manifest-less resolution would serve)
-    val del = Tables.documents(spark, sfDir).filter(col("doc_id") % 7 === 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    SearchQueries.deleteFromSearchIndex(spark, tbl, path, del)
-    val masked = sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path))
-    val prior = spark.conf.getOption("graft.manifest.cacheTtlMs")
-    spark.conf.set("graft.manifest.cacheTtlMs", "600000")
-    try {
-      // first probe under the flag resolves from the store and caches
-      assert(sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path)) == masked)
-      // destroy the manifest out-of-band: if the next probe touched the
-      // store it would resolve NO manifest — no tombstones — and serve
-      // the deleted rows; the cache hit keeps serving the masked state
-      val d = new java.io.File(m.dir(path).stripPrefix("file:"))
-      d.listFiles().foreach(_.delete()); assert(d.delete())
-      assert(sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path)) == masked,
-        "the probe's epoch resolution must come from the cache, not the store")
-    } finally prior match {
-      case Some(v) => spark.conf.set("graft.manifest.cacheTtlMs", v)
-      case None    => spark.conf.unset("graft.manifest.cacheTtlMs")
     }
   }
 
