@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.{DedupQueries, SearchQueries, SimilarityQueries}
+import graft.sources.{IndexFamily, Tombstones, WriterLease}
+
 /** Lifecycle benchmark main — the measured cost basis the fold-cadence
   * policy tunes against (r17 verdict: probe costs were benched and
   * manifest resolution priced, but build/ingest/fold/vacuum appeared
@@ -11,18 +14,19 @@ import org.apache.spark.sql.functions._
   *
   * For one representative family per lifecycle shape — search (bucketed
   * catalog table with stored stats), IVF (flat epoch-dir), band
-  * (location-anchored bucketed) — it times, at `SPARK_GRAFT_SF_DIR`:
+  * (location-anchored bucketed) — it times, at `SPARK_GRAFT_SF_DIR`, in
+  * one loop that drives each family through its [[IndexFamily]] (the
+  * ingest, fold and vacuum the streaming runners and maintenance use):
   *   - the one-shot BUILD;
   *   - one streaming-shaped INGEST batch (1/32 of the corpus, new ids,
-  *     through the same exactly-once `ingest*Batch` one-commit path the
-  *     runners use);
+  *     through the family's exactly-once one-commit ingest);
   *   - the PROBE at open windows of 0 / 1 / 4 / 16 batches (min-of-2 —
   *     the curve that justifies the fold cadence: every open batch adds
   *     one union arm and one id-set broadcast to every probe);
   *   - the FOLD with the 16-batch window open (the realistic fold);
   *   - the probe again post-fold (the cost the fold buys back);
   *   - VACUUM of the deferred-reclaim leavings;
-  *   - the writer-lease acquire+release pair (per-op milliseconds);
+  *   - the writer-lease acquire+release pair (per-op seconds);
   *   - [r20] the serving-under-mutation section drains a HYBRID group
   *     (search + IVF under one lineage) and prices the consistent
   *     cross-index snapshot probe (`serve_probe_consistent` — two
@@ -69,114 +73,47 @@ object LifecycleBench {
     val base = java.nio.file.Files.createTempDirectory("graft-lifebench").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text", "lang")
     val em = Tables.embeddings(spark, sfDir)
+    // batch i: 1/32 of the corpus under fresh ids
+    def docBatch(src: DataFrame)(i: Int): DataFrame = src.filter(col("doc_id") % 32 === i)
+      .withColumn("doc_id", col("doc_id") + (i + 1) * 10000000L)
+    def vecBatch(i: Int): DataFrame = em.filter(col("vec_id") % 32 === i)
+      .select((col("vec_id") + (i + 1) * 10000000L).as("vec_id"),
+        col("label"), col("embedding"))
 
-    // ---- search: bucketed catalog table + stored stats ---------------------
-    {
-      import graft.operators.SearchQueries
-      val path = s"$base/search_idx"
-      time("search_build") {
-        SearchQueries.writeSearchIndex(spark, sfDir, "lb_search", path)
-      }
-      timeProbe("search_probe_w0") {
-        SearchQueries.bm25TopkFromIndex(spark, "lb_search", path)
-      }
-      def batch(i: Int): DataFrame = docs.filter(col("doc_id") % 32 === i)
-        .select((col("doc_id") + (i + 1) * 10000000L).as("doc_id"),
-          col("text"), col("lang"))
-      time("search_ingest_batch") {
-        SearchQueries.ingestSearchBatch(spark, "lb_search", path, batch(0), 0L, "lb")
-      }
-      timeProbe("search_probe_w1") {
-        SearchQueries.bm25TopkFromIndex(spark, "lb_search", path)
-      }
-      (1 until 4).foreach(i =>
-        SearchQueries.ingestSearchBatch(spark, "lb_search", path, batch(i), i.toLong, "lb"))
-      timeProbe("search_probe_w4") {
-        SearchQueries.bm25TopkFromIndex(spark, "lb_search", path)
-      }
-      (4 until 16).foreach(i =>
-        SearchQueries.ingestSearchBatch(spark, "lb_search", path, batch(i), i.toLong, "lb"))
-      timeProbe("search_probe_w16") {
-        SearchQueries.bm25TopkFromIndex(spark, "lb_search", path)
-      }
-      time("search_fold") { SearchQueries.compactSearchIndex(spark, "lb_search", path) }
-      timeProbe("search_probe_postfold") {
-        SearchQueries.bm25TopkFromIndex(spark, "lb_search", path)
-      }
-      time("search_vacuum") {
-        graft.sources.Tombstones.vacuum(spark, path)
-        ()
-      }
-    }
-
-    // ---- IVF: flat epoch-dir index ------------------------------------------
-    {
-      import graft.operators.SimilarityQueries
-      val path = s"$base/ivf_idx"
-      time("ivf_build") { SimilarityQueries.writeIvfIndex(spark, sfDir, path) }
-      timeProbe("ivf_probe_w0") {
-        SimilarityQueries.ivfTopkFromIndex(spark, sfDir, path)
-      }
-      def vbatch(i: Int): DataFrame = em.filter(col("vec_id") % 32 === i)
-        .select((col("vec_id") + (i + 1) * 10000000L).as("vec_id"),
-          col("label"), col("embedding"))
-      time("ivf_ingest_batch") {
-        SimilarityQueries.ingestIvfBatch(spark, sfDir, path, vbatch(0), 0L, "lb")
-        ()
-      }
-      timeProbe("ivf_probe_w1") {
-        SimilarityQueries.ivfTopkFromIndex(spark, sfDir, path)
-      }
-      (1 until 4).foreach(i =>
-        SimilarityQueries.ingestIvfBatch(spark, sfDir, path, vbatch(i), i.toLong, "lb"))
-      timeProbe("ivf_probe_w4") {
-        SimilarityQueries.ivfTopkFromIndex(spark, sfDir, path)
-      }
-      (4 until 16).foreach(i =>
-        SimilarityQueries.ingestIvfBatch(spark, sfDir, path, vbatch(i), i.toLong, "lb"))
-      timeProbe("ivf_probe_w16") {
-        SimilarityQueries.ivfTopkFromIndex(spark, sfDir, path)
-      }
-      time("ivf_fold") { SimilarityQueries.compactIvfIndex(spark, path) }
-      timeProbe("ivf_probe_postfold") {
-        SimilarityQueries.ivfTopkFromIndex(spark, sfDir, path)
-      }
-      time("ivf_vacuum") {
-        graft.sources.Tombstones.vacuum(spark, path, Some(path))
-        ()
-      }
-    }
-
-    // ---- band: location-anchored bucketed index -----------------------------
-    {
-      import graft.operators.DedupQueries
-      var thr = 0L
-      time("band_build") {
-        thr = DedupQueries.writeBandIndex(spark, sfDir, "lb_band", s"$base/band_idx")
-      }
-      val below = docs.filter(col("doc_id") < thr)
-      def probeFrame(): DataFrame = DedupQueries.bandIndexFrame(spark, "lb_band")
-      timeProbe("band_probe_w0")(probeFrame())
-      def bbatch(i: Int): DataFrame = below.filter(col("doc_id") % 32 === i)
-        .select((col("doc_id") + (i + 1) * 10000000L).as("doc_id"), col("text"))
-      time("band_ingest_batch") {
-        DedupQueries.ingestBandBatch(bbatch(0), "lb_band", 0L, "lb")
-        ()
-      }
-      timeProbe("band_probe_w1")(probeFrame())
-      (1 until 4).foreach(i =>
-        DedupQueries.ingestBandBatch(bbatch(i), "lb_band", i.toLong, "lb"))
-      timeProbe("band_probe_w4")(probeFrame())
-      (4 until 16).foreach(i =>
-        DedupQueries.ingestBandBatch(bbatch(i), "lb_band", i.toLong, "lb"))
-      timeProbe("band_probe_w16")(probeFrame())
-      time("band_fold") { DedupQueries.compactBandIndex(spark, "lb_band") }
-      timeProbe("band_probe_postfold")(probeFrame())
-      time("band_vacuum") {
-        graft.sources.Tombstones.vacuum(
-          spark, graft.sources.Tombstones.tableLocation(spark, "lb_band"))
-        ()
-      }
+    // one family per lifecycle shape, each driven through its IndexFamily:
+    // search (bucketed catalog table with stored stats), IVF (flat
+    // epoch-dir), band (location-anchored bucketed); the steps are keyed
+    // by the family's name
+    final case class Section(
+        family: IndexFamily, build: () => Unit, probe: () => DataFrame,
+        batch: Int => DataFrame)
+    val searchIdx = s"$base/search_idx"
+    val ivfIdx = s"$base/ivf_idx"
+    var bandThr = 0L
+    Seq(
+      Section(IndexFamily.search(spark, "lb_search", searchIdx),
+        () => SearchQueries.writeSearchIndex(spark, sfDir, "lb_search", searchIdx),
+        () => SearchQueries.bm25TopkFromIndex(spark, "lb_search", searchIdx), docBatch(docs)),
+      Section(IndexFamily.ivf(spark, ivfIdx, Some(sfDir)),
+        () => SimilarityQueries.writeIvfIndex(spark, sfDir, ivfIdx),
+        () => SimilarityQueries.ivfTopkFromIndex(spark, sfDir, ivfIdx), vecBatch),
+      Section(IndexFamily.band(spark, "lb_band"),
+        () => bandThr = DedupQueries.writeBandIndex(spark, sfDir, "lb_band", s"$base/band_idx"),
+        () => DedupQueries.bandIndexFrame(spark, "lb_band"),
+        i => docBatch(docs.filter(col("doc_id") < bandThr))(i))
+    ).foreach { case Section(f, build, probe, batch) =>
+      val n = f.name
+      time(s"${n}_build")(build())
+      timeProbe(s"${n}_probe_w0")(probe())
+      time(s"${n}_ingest_batch")(f.ingest(batch(0), 0L, "lb"))
+      timeProbe(s"${n}_probe_w1")(probe())
+      (1 until 4).foreach(i => f.ingest(batch(i), i.toLong, "lb"))
+      timeProbe(s"${n}_probe_w4")(probe())
+      (4 until 16).foreach(i => f.ingest(batch(i), i.toLong, "lb"))
+      timeProbe(s"${n}_probe_w16")(probe())
+      time(s"${n}_fold")(f.compact())
+      timeProbe(s"${n}_probe_postfold")(probe())
+      time(s"${n}_vacuum") { Tombstones.vacuum(spark, f.anchor(), f.vacuumData); () }
     }
 
     // ---- serving under mutation: K probe threads vs a live ingest+fold drain
@@ -188,24 +125,22 @@ object LifecycleBench {
     // the drain fails the whole run: a fold or vacuum must never be
     // observable as an error by an in-flight reader.
     {
-      import graft.operators.{SearchQueries, SimilarityQueries}
       val path = s"$base/serve_idx"
       val ivfPath = s"$base/serve_ivf"
       time("serve_build") {
         SearchQueries.writeSearchIndex(spark, sfDir, "lb_serve", path)
       }
       SimilarityQueries.writeIvfIndex(spark, sfDir, ivfPath)
-      def sbatch(i: Int): DataFrame = docs.filter(col("doc_id") % 32 === i)
-        .select((col("doc_id") + (i + 1) * 10000000L).as("doc_id"),
-          col("text"), col("lang"))
-      def vbatch(i: Int): DataFrame = em.filter(col("vec_id") % 32 === i)
-        .select((col("vec_id") + (i + 1) * 10000000L).as("vec_id"),
-          col("label"), col("embedding"))
+      // the hybrid group, in its commit order, each with its batch source
+      val group = Seq(
+        IndexFamily.search(spark, "lb_serve", path) -> docBatch(docs) _,
+        IndexFamily.ivf(spark, ivfPath, Some(sfDir)) -> vecBatch _)
+      def ingestGroup(i: Int): Unit =
+        group.foreach { case (f, batch) => f.ingest(batch(i), i.toLong, "lbserve") }
       // batch 0 lands in BOTH siblings before any probe starts: the
       // consistent read's common (lineage, batch-id) fence exists from
       // the first sample on
-      SearchQueries.ingestSearchBatch(spark, "lb_serve", path, sbatch(0), 0L, "lbserve")
-      SimilarityQueries.ingestIvfBatch(spark, sfDir, ivfPath, vbatch(0), 0L, "lbserve")
+      ingestGroup(0)
       val phase = new java.util.concurrent.atomic.AtomicReference[String]("w0")
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val failures = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -261,18 +196,15 @@ object LifecycleBench {
       time("serve_drain") {
         for (i <- 1 until 12) {
           phase.set("ingest")
-          SearchQueries.ingestSearchBatch(
-            spark, "lb_serve", path, sbatch(i), i.toLong, "lbserve")
-          SimilarityQueries.ingestIvfBatch(
-            spark, sfDir, ivfPath, vbatch(i), i.toLong, "lbserve")
+          ingestGroup(i)
           if (i % 4 == 3) { // the production foldEvery=4 cadence
             phase.set("fold")
-            SearchQueries.compactSearchIndex(spark, "lb_serve", path)
-            SimilarityQueries.compactIvfIndex(spark, ivfPath)
+            group.foreach(_._1.compact())
             // keepEpochs=2 keeps the retired pre-fold epochs alive for
             // exactly the in-flight plans these probe threads hold
-            graft.sources.Tombstones.vacuum(spark, path, keepEpochs = 2)
-            graft.sources.Tombstones.vacuum(spark, ivfPath, Some(ivfPath), keepEpochs = 2)
+            group.foreach { case (f, _) =>
+              Tombstones.vacuum(spark, f.anchor(), f.vacuumData, keepEpochs = 2)
+            }
           }
         }
       }
@@ -310,7 +242,7 @@ object LifecycleBench {
     // ---- the writer lease: per-op cost of acquire+release -------------------
     {
       val anchor = s"$base/lease_anchor"
-      val wl = graft.sources.WriterLease
+      val wl = WriterLease
       (1 to 10).foreach { _ =>
         wl.acquire(spark, anchor, "lb", 60000); wl.release(spark, anchor, "lb")
       }

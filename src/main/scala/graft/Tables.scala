@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -31,51 +32,61 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
   /** Schema-adaptive events loader — the parquet footer is authoritative
-    * (SURVEY §1.2; the reference reads whatever the footer says,
-    * /root/reference/app.py:93). Driver testdata has shipped `ts` as both
-    * TIMESTAMP(NANOS) (rounds 1-9) and timestamp[us] (round 10+), so we
-    * branch on the resolved type instead of assuming either:
-    *   - nanos (surfaces as LongType under the legacy conf, since Spark's
-    *     reader rejects TIMESTAMP(NANOS) outright, [PARQUET_TYPE_ILLEGAL]):
-    *     integer-div truncate to µs, exactly what the DuckDB oracle does via
-    *     `make_timestamp(epoch_ns(ts) // 1000)`;
-    *   - µs TIMESTAMP_NTZ: cast to session-UTC TimestampType — value-identity
-    *     because every entry point pins spark.sql.session.timeZone=UTC;
-    *   - µs TIMESTAMP_LTZ: already the output type, pass through.
-    * All three branches yield the same output schema (TimestampType) the
-    * oracle has hash-matched since round 1.
+    * (SURVEY §1.2; the reference reads whatever the footer says, its
+    * `app.py:93`). The footer is resolved under
+    * [[withNanosLongConf]] and `ts` normalized by [[normalizeEventsTs]],
+    * the rule the streaming reader shares.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    // Scope the legacy conf to schema resolution: parquet schema conversion
-    // consults it eagerly inside spark.read.parquet(), and the physical scan
-    // captures its own SQLConf snapshot at planning, so restoring the prior
-    // value here cannot flip an events frame already built — and later reads
-    // of OTHER nanos-typed parquet in the same session fail loudly again.
-    // The conf only affects TIMESTAMP(NANOS) columns; µs footers ignore it.
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeEventsTs(withNanosLongConf(spark)(spark.read.parquet(s"$dir/events.parquet")))
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** Run `f` with `spark.sql.legacy.parquet.nanosAsLong` set, then restore
+    * the prior setting — the one scope for that conf. A key that was not
+    * set is unset again (`getOption` would report the default and leave it
+    * explicitly set). Spark's reader rejects TIMESTAMP(NANOS) outright
+    * ([PARQUET_TYPE_ILLEGAL]) unless it is set; µs footers ignore it.
+    * Parquet schema conversion consults it eagerly (inside
+    * `spark.read.parquet()`, or when a streaming query starts, which
+    * clones the session conf), and a built frame keeps the schema it
+    * resolved, so scoping it around resolution is enough — and later reads
+    * of OTHER nanos-typed parquet in the session fail loudly again instead
+    * of silently yielding longs.
+    */
+  def withNanosLongConf[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(key)
+    val prior = spark.conf.getAll.get(key)
     spark.conf.set(key, "true")
-    try {
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      val ts = raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          timestamp_micros(expr("ts div 1000")) // nanos footer, legacy long
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          col("ts").cast("timestamp") // µs NTZ → session-UTC, same micros
-        case org.apache.spark.sql.types.TimestampType =>
-          col("ts")
-        case other =>
-          throw new IllegalStateException(
-            s"events.ts: unsupported parquet-resolved type $other")
-      }
-      raw
-        .withColumn("ts", ts)
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    } finally prior match {
+    try f
+    finally prior match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
     }
   }
+
+  /** `raw` events with `ts` normalized to session-UTC TimestampType, by
+    * its footer-resolved type. The test data has shipped `ts` as both
+    * TIMESTAMP(NANOS) (rounds 1-9) and timestamp[us] (round 10+), so the
+    * rule branches on the resolved type instead of assuming either:
+    *   - nanos (LongType under [[withNanosLongConf]]): integer-div
+    *     truncate to µs, exactly what the DuckDB oracle does via
+    *     `make_timestamp(epoch_ns(ts) // 1000)`;
+    *   - µs TIMESTAMP_NTZ: cast to session-UTC TimestampType —
+    *     value-identity because every entry point pins
+    *     spark.sql.session.timeZone=UTC;
+    *   - µs TIMESTAMP_LTZ: already the output type, pass through.
+    * All three branches yield the output schema (TimestampType) the
+    * oracle has hash-matched since round 1. Shared by [[events]] (batch)
+    * and `EventsStream.readEvents` (streaming).
+    */
+  private[graft] def normalizeEventsTs(raw: DataFrame): DataFrame =
+    raw.schema("ts").dataType match {
+      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
+      case TimestampType    => raw
+      case other =>
+        throw new IllegalStateException(s"events.ts: unsupported parquet-resolved type $other")
+    }
 
   /** Oracle-side (DuckDB) equivalent of [[events]]: a derived-table SQL
     * fragment producing the same µs-truncated `ts`. Splice as `FROM ($sql) e`.

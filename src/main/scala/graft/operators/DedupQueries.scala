@@ -466,10 +466,8 @@ object DedupQueries {
     * update window's delta batches in, and restore one file per bucket
     * (the shared bucketed-index compaction over the probe-visible view).
     */
-  def compactBandIndex(
-      s: SparkSession, table: String, reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactBucketedIndex(s, table, "doc_id",
-      sourceOverride = Some(bandIndexFrame(s, table)), reclaim = reclaim)
+  def compactBandIndex(s: SparkSession, table: String): Unit =
+    graft.sources.Tombstones.compactBucketedIndex(s, table, bandIndexFrame(s, table))
 
   /** Min-label propagation over an undirected pair list, with PLUGGABLE
     * per-round materialization — the knob that makes the iterative loop
@@ -956,13 +954,10 @@ object DedupQueries {
     * both folds over the exact visible rows — no duplication in any crash
     * state (crash-injection pinned in TombstoneSpec).
     */
-  def compactPrefixIndex(
-      s: SparkSession, table: String, reclaim: Boolean = false): Unit = {
+  def compactPrefixIndex(s: SparkSession, table: String): Unit = {
     val (inv, fwd) = prefixIndexFrames(s, table)
-    graft.sources.Tombstones.compactBucketedIndex(s, s"${table}_fwd", "doc_id",
-      sourceOverride = Some(fwd), reclaim = reclaim)
-    graft.sources.Tombstones.compactBucketedIndex(s, table, "doc_id",
-      sourceOverride = Some(inv), reclaim = reclaim)
+    graft.sources.Tombstones.compactBucketedIndex(s, s"${table}_fwd", fwd)
+    graft.sources.Tombstones.compactBucketedIndex(s, table, inv)
   }
 
   /** Batch-vs-corpus PPJoin probe with the family's EXACT-recall
@@ -1197,10 +1192,8 @@ object DedupQueries {
     * update window's delta batches in, and restore one file per bucket
     * (the shared bucketed-index compaction over the probe-visible view).
     */
-  def compactWinnowIndex(
-      s: SparkSession, table: String, reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactBucketedIndex(s, table, "doc_id",
-      sourceOverride = Some(winnowIndexFrame(s, table)), reclaim = reclaim)
+  def compactWinnowIndex(s: SparkSession, table: String): Unit =
+    graft.sources.Tombstones.compactBucketedIndex(s, table, winnowIndexFrame(s, table))
 
   /** Append a document batch's winnowed fingerprints to an existing
     * [[writeWinnowIndex]] table — the daily-ingest lifecycle, now ATOMIC:

@@ -562,11 +562,8 @@ object MultimodalQueries {
     * window's delta batches in, and restore one file per bucket (the
     * shared bucketed-index compaction over the probe-visible view).
     */
-  def compactPhashIndex(
-      s: org.apache.spark.sql.SparkSession, table: String,
-      reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactBucketedIndex(s, table, "asset_id",
-      sourceOverride = Some(phashIndexFrame(s, table)), reclaim = reclaim)
+  def compactPhashIndex(s: org.apache.spark.sql.SparkSession, table: String): Unit =
+    graft.sources.Tombstones.compactBucketedIndex(s, table, phashIndexFrame(s, table))
 
   private def phashPairs(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {

@@ -774,17 +774,16 @@ object SearchQueries {
         catch { case _: java.io.IOException => () }
       }
     }
+    // repartitioned on the derived bucket id, so each bucket lands in one
+    // task (one file per bucket) — adaptive coalescing merges only whole
+    // partitions and cannot split one
     val nb = bucketCountOf(s, table)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prior = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, "false") // keep one-file-per-bucket task alignment
-    try visiblePostingsOf(s, table, ep)
+    visiblePostingsOf(s, table, ep)
       .repartition(nb, expr(s"pmod(hash(term), $nb)"))
       .write.mode("overwrite")
       .bucketBy(nb, "term").sortBy("term")
       .option("path", destPath)
       .saveAsTable(destTable)
-    finally s.conf.set(aqeKey, prior)
     epochStats(s, path, ep).write.mode("overwrite").parquet(s"${destPath}_stats")
   }
 
@@ -1074,32 +1073,27 @@ object SearchQueries {
   /** Compact the inverted index after many appends — the small-file
     * maintenance step mirroring `compactIvfIndex`: every append adds one
     * file per touched bucket, and a year of micro-batches turns the term
-    * probe into thousands-of-tiny-files IO. Rewrite repartitions on the
-    * bucket column (aligning with the bucket spec, so each bucket's rows
-    * land in ONE task ⇒ one file) into a fresh bucketed table at a new
-    * path, then swaps it in via catalog rename. Content — postings rows and
-    * stats — is unchanged, so every probe result is preserved (pinned in
-    * PartitionBucketSpec). The rename window is not concurrent-safe for
-    * in-flight probes (same caveat as the IVF swap's FS rename). [r14]
-    * Delegates to the shared bucketed-index compaction
-    * ([[graft.sources.Tombstones.compactBucketedIndex]] — the mechanics
-    * moved there verbatim when the winnow/band/phash families gained the
-    * same rewrite), which also folds outstanding TOMBSTONES in physically:
-    * stats were already decremented at delete time, so the compaction
-    * changes no probe result either way. [r16] The search index anchors
-    * its manifest (stats pointer + tombstones) at the immutable build
-    * `path`, so the compaction passes that anchor explicitly: the
-    * tombstone-clearing epoch keeps the stats pointer alive across the
-    * location move.
+    * probe into thousands-of-tiny-files IO. Delegates to the shared
+    * bucketed-index compaction
+    * ([[graft.sources.Tombstones.compactBucketedIndex]]): the probe-visible
+    * postings (base minus tombstones plus any open update window's delta
+    * batches) are rewritten one file per bucket to a fresh location, and
+    * the serving table moves there with one `ALTER TABLE .. SET LOCATION`
+    * statement, so every crash point leaves one location serving. Content
+    * — postings rows and stats — is unchanged, so every probe result is
+    * preserved (pinned in PartitionBucketSpec); stats were already
+    * decremented at delete time, so folding the tombstones in changes no
+    * probe result either. The search index anchors its manifest (stats
+    * pointer + tombstones) at the immutable build `path`, so the
+    * compaction passes that anchor: the tombstone-clearing epoch keeps the
+    * stats pointer alive across the location move and records the old
+    * location as retired. Reclaim is deferred — the old location stays on
+    * disk, so a probe planned before the fold still executes after it, and
+    * [[graft.sources.Tombstones.vacuum]] reclaims it later.
     */
-  def compactSearchIndex(
-      s: SparkSession, table: String, path: String,
-      reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactBucketedIndex(s, table, "doc_id", Some(path),
-      // the rewrite source is the probe-visible base-minus-tombstones
-      // PLUS any open update window's delta batches — the fold that
-      // retires buffered updates with one physical rewrite
-      Some(visiblePostings(s, table, path)), reclaim = reclaim)
+  def compactSearchIndex(s: SparkSession, table: String, path: String): Unit =
+    graft.sources.Tombstones.compactBucketedIndex(
+      s, table, visiblePostings(s, table, path), Some(path))
 
   /** The WAND seed-pool pricing curve: per pool multiple, exact candidate
     * count, fully-scored count (survivors ∪ pool), and realized skip ppm —

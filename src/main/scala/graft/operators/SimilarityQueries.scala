@@ -803,9 +803,8 @@ object SimilarityQueries {
       IndexWrite.Target(path, "vec_id", "deleteFromRpSketch", "compactRpSketch"), vecIds)
 
   /** Fold an RP sketch's tombstones in (flat rewrite + swap + clear). */
-  def compactRpSketch(
-      s: SparkSession, path: String, reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactFlat(s, path, path, "vec_id", reclaim)
+  def compactRpSketch(s: SparkSession, path: String): Unit =
+    graft.sources.Tombstones.compactFlat(s, path, path, "vec_id")
 
   /** RP top-k served from the PERSISTED sketch: screen over the sketch
     * scan (16-dim rows only), then fetch ONLY the surviving candidates'
@@ -1668,9 +1667,8 @@ object SimilarityQueries {
     * compaction the index equals a fresh build over the surviving vectors
     * (pinned in TombstoneSpec).
     */
-  def compactIvfIndex(
-      s: SparkSession, path: String, reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactToEpochDir(s, path, path, reclaim) { (_, dest, ep) =>
+  def compactIvfIndex(s: SparkSession, path: String): Unit =
+    graft.sources.Tombstones.compactToEpochDir(s, path, path) { (_, dest, ep) =>
       // the rewrite source is the probe-visible view AT THE FOLD'S OWN
       // epoch: base minus tombstones PLUS any open update window's delta
       // batches — the fold that retires buffered updates with one
@@ -1990,10 +1988,9 @@ object SimilarityQueries {
     * mechanics — data pointer, fragment drop, and window retirement in
     * one atom, no directory renames).
     */
-  def compactKnnGraph(
-      s: SparkSession, path: String, reclaim: Boolean = false): Unit = {
+  def compactKnnGraph(s: SparkSession, path: String): Unit = {
     val t = graft.sources.Tombstones
-    t.compactToEpochDir(s, path, path, reclaim) { (cur, dest, ep) =>
+    t.compactToEpochDir(s, path, path) { (cur, dest, ep) =>
       t.filterOf(t.filterOf(graphRowsVisibleOf(s, ep, cur), ep, "vec_id"), ep, "nbr_id")
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(dest)
@@ -2834,9 +2831,8 @@ object SimilarityQueries {
   /** Fold a PQ index's tombstones in: rewrite codes minus deleted rows,
     * atomic swap, clear the sidecar (codebook untouched).
     */
-  def compactPqIndex(
-      s: SparkSession, path: String, reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactFlat(s, s"$path/codes", path, "vec_id", reclaim)
+  def compactPqIndex(s: SparkSession, path: String): Unit =
+    graft.sources.Tombstones.compactFlat(s, s"$path/codes", path, "vec_id")
 
   private def pqAdcExpr: String =
     (0 until 8).map(j => adcCase(j, PQ_C)).mkString(" + ")
@@ -3223,9 +3219,8 @@ object SimilarityQueries {
   /** Fold an SQ index's tombstones in: rewrite codes minus deleted rows,
     * atomic swap, clear the sidecar (stats/grid untouched).
     */
-  def compactSqIndex(
-      s: SparkSession, path: String, reclaim: Boolean = false): Unit =
-    graft.sources.Tombstones.compactFlat(s, s"$path/codes", path, "vec_id", reclaim)
+  def compactSqIndex(s: SparkSession, path: String): Unit =
+    graft.sources.Tombstones.compactFlat(s, s"$path/codes", path, "vec_id")
 
   /** IVF-SQ: the other index family every production store ships beside
     * IVF-PQ (FAISS `IVF,SQ8`) — IVF's coarse quantizer prunes the corpus

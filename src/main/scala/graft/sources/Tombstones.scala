@@ -67,8 +67,9 @@ object Tombstones {
     * indexes (IVF, k-NN graph, flat codes) and the search index anchor on
     * their immutable build path; the other catalog-table indexes anchor on
     * the table's CURRENT location ([[tableLocation]]) — coherent across
-    * compactions because their compaction both moves the location and
-    * resets the old anchor (tombstones never outlive the files they mask).
+    * compactions because their compaction moves the location and retires
+    * the old anchor whole ([[vacuum]] reclaims its sidecar together with
+    * the files it masks).
     */
   def sidecar(indexPath: String): String =
     indexPath.stripSuffix("/") + "_tombstones"
@@ -294,6 +295,27 @@ object Tombstones {
       d.join(broadcast(latest), Seq(idCol, "batch_seq")).drop("batch_seq")
     }
 
+  /** FS-qualify a path string for set comparison (the manifest stores
+    * paths as the writers spelled them; `file:/x` and `/x` must compare
+    * equal). Shared by [[vacuum]] and [[reclaimRetiredLocation]].
+    */
+  private def canonPath(
+      conf: org.apache.hadoop.conf.Configuration, p: String): String = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    path.getFileSystem(conf).makeQualified(path).toString
+  }
+
+  /** Recursive best-effort delete: Some(existed-and-deleted) on success,
+    * None on IOException (the caller decides whether the failure blocks
+    * anything — vacuum retries at its next run).
+    */
+  private def quietDelete(
+      conf: org.apache.hadoop.conf.Configuration, d: String): Option[Boolean] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(d)
+      Some(p.getFileSystem(conf).delete(p, true))
+    } catch { case _: java.io.IOException => None }
+
   /** Reclaim unreferenced lifecycle artifacts — the GC half of the
     * prepare-then-commit discipline: every mutation prepares files under
     * version-derived names (`_stats_e<v>`, `_tombstones/f<v>`,
@@ -323,27 +345,6 @@ object Tombstones {
     * mid-plan on the reclaimed path — never silently wrong. The default
     * (0) keeps only the current epoch: maximal reclaim, no travel.
     */
-  /** FS-qualify a path string for set comparison (the manifest stores
-    * paths as the writers spelled them; `file:/x` and `/x` must compare
-    * equal). Shared by [[vacuum]] and [[reclaimRetiredLocation]].
-    */
-  private def canonPath(
-      conf: org.apache.hadoop.conf.Configuration, p: String): String = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(conf).makeQualified(path).toString
-  }
-
-  /** Recursive best-effort delete: Some(existed-and-deleted) on success,
-    * None on IOException (the caller decides whether the failure blocks
-    * anything — vacuum retries at its next run).
-    */
-  private def quietDelete(
-      conf: org.apache.hadoop.conf.Configuration, d: String): Option[Boolean] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(d)
-      Some(p.getFileSystem(conf).delete(p, true))
-    } catch { case _: java.io.IOException => None }
-
   def vacuum(
       s: SparkSession, anchor: String,
       defaultData: Option[String] = None, keepEpochs: Int = 0): Long = {
@@ -692,70 +693,50 @@ object Tombstones {
       case None => df
     }
 
-  /** Mark all tombstones folded (called by compaction after the physical
-    * rewrite no longer contains the masked rows): commit an epoch with no
-    * live fragments — stats and data pointers ride along unchanged — then
-    * best-effort reclaim the now-unreferenced fragment files. A crash
-    * between the rewrite and this commit is harmless: the still-listed
-    * tombstones anti-join against rows that no longer exist. `bump` = false
-    * when the caller already committed the base-generation bump BEFORE its
-    * physical mutation ([[compactBucketedIndex]] — bumping here instead
-    * would leave a crash window in which as-of reads silently return the
-    * compacted table as an older epoch's state). `retired` records the
-    * location(s) the fold superseded for deferred reclaim; `reclaim` =
-    * false (the deferred default) leaves the folded fragment/delta files
-    * on disk for in-flight pre-fold plans — vacuum enumerates them by
-    * version and reclaims them honoring its retention window.
+  /** Mark all tombstones folded (called by [[compactBucketedIndex]] for
+    * an immutable anchor, after the physical rewrite no longer contains
+    * the masked rows): commit an epoch with no live fragments or deltas —
+    * stats and data pointers ride along unchanged. A crash between the
+    * rewrite and this commit is harmless: the still-listed tombstones
+    * anti-join against rows that no longer exist. The base generation is
+    * NOT bumped here: the compactor commits that bump BEFORE its physical
+    * mutation (bumping here instead would leave a crash window in which
+    * as-of reads silently return the compacted table as an older epoch's
+    * state). `retired` records the location(s) the fold superseded; the
+    * folded fragment/delta files stay on disk for in-flight pre-fold
+    * plans, and [[vacuum]] enumerates them by version and reclaims them
+    * honoring its retention window.
     */
   def clear(
-      s: SparkSession, indexPath: String, bump: Boolean = true,
-      retired: Vector[String] = Vector.empty, reclaim: Boolean = true): Unit = {
+      s: SparkSession, indexPath: String, retired: Vector[String] = Vector.empty): Unit = {
     val e = IndexManifest.next(s, indexPath)
     if (e.version > 1 || e.tombstones.nonEmpty || e.deltas.nonEmpty ||
         retired.nonEmpty)
       IndexManifest.commit(s, indexPath,
-        e.copy(tombstones = Vector.empty, deltas = Vector.empty,
-          baseGen = if (bump) e.baseGen + 1 else e.baseGen,
-          retired = retired))
-    if (reclaim)
-      bestEffortDelete(s, Seq(sidecar(indexPath), deltaDir(indexPath)))
-  }
-
-  // post-commit reclaim must never make a COMMITTED mutation surface as
-  // failed: garbage is acceptable (vacuum's job), a spurious retry of a
-  // full physical rewrite is not
-  private def bestEffortDelete(s: SparkSession, dirs: Seq[String]): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    dirs.foreach { d =>
-      try {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).delete(p, true)
-        ()
-      } catch { case _: java.io.IOException => () }
-    }
+        e.copy(tombstones = Vector.empty, deltas = Vector.empty, retired = retired))
   }
 
   /** Erase an anchor's lifecycle state entirely — builders call this so a
     * rebuild starts from the defaults, and the location-anchored
-    * compaction calls it on the superseded location (a dead anchor needs
-    * no tombstone-clearing epoch). Before the manifest drops, the epochs'
-    * artifacts are reclaimed — [[vacuum]] for superseded versions, then
-    * the CURRENT epoch's redirected data/stats dirs (the rebuild writes
-    * the defaults, so an epoch-named `_stats_eN`/`__eN` dir the manifest
-    * no longer exists to name would otherwise leak forever: once the
-    * manifest is gone, vacuum is a no-op).
+    * compaction calls it on its destination (so a retried fold does not
+    * collide with its previous attempt's carry commit). Before the
+    * manifest drops, the epochs' artifacts are reclaimed — [[vacuum]] for
+    * superseded versions, then the CURRENT epoch's redirected data/stats
+    * dirs (the rebuild writes the defaults, so an epoch-named
+    * `_stats_eN`/`__eN` dir the manifest no longer exists to name would
+    * otherwise leak forever: once the manifest is gone, vacuum is a no-op).
     */
   def reset(s: SparkSession, indexPath: String): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
     IndexManifest.current(s, indexPath).foreach { cur =>
       // the epoch-data naming convention is `<default>__e<v>` — recover
       // the default from the current pointer so vacuum can enumerate the
       // superseded data epochs too
       val defaultData = cur.data.map(_.replaceAll("__e\\d+$", ""))
       vacuum(s, indexPath, defaultData)
-      bestEffortDelete(s, cur.data.toSeq ++ cur.stats.toSeq)
+      (cur.data.toSeq ++ cur.stats.toSeq).foreach(quietDelete(conf, _))
     }
     IndexManifest.reset(s, indexPath)
-    val conf = s.sparkContext.hadoopConfiguration
     Seq(sidecar(indexPath), deltaDir(indexPath)).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       p.getFileSystem(conf).delete(p, true)
@@ -777,9 +758,8 @@ object Tombstones {
     * folded.
     */
   def compactFlat(
-      s: SparkSession, defaultData: String, anchorPath: String, idCol: String,
-      reclaim: Boolean = false): Unit =
-    compactToEpochDir(s, defaultData, anchorPath, reclaim) { (_, dest, ep) =>
+      s: SparkSession, defaultData: String, anchorPath: String, idCol: String): Unit =
+    compactToEpochDir(s, defaultData, anchorPath) { (_, dest, ep) =>
       visibleFlatOf(s, ep, defaultData, idCol)
         .write.mode("overwrite").parquet(dest)
     }
@@ -809,21 +789,19 @@ object Tombstones {
 
   /** The shared prepare-then-commit skeleton of the path-based compactors:
     * resolve the current data dir, let `rewrite` materialize the
-    * compacted form under the next epoch's name, commit (new data pointer,
-    * zero live fragments) as the single atom, then best-effort reclaim the
-    * superseded data dir and fragment files. The rewrite receives the
-    * RESOLVED epoch (the one-manifest-read-per-operation discipline — its
-    * tombstone/delta/data state is what the commit will retire, so the
-    * fold source and the committed epoch can never describe different
-    * states). `reclaim` = false (the default) DEFERS the superseded data
-    * dir, folded fragments, and delta batches to [[vacuum]] — a probe
-    * planned pre-fold keeps executing against files that still exist,
-    * the Delta/Iceberg discipline; `reclaim` = true restores the eager
-    * r17 behavior (reclaim at the fold, in-flight readers die loudly).
+    * compacted form under the next epoch's name, and commit (new data
+    * pointer, zero live fragments) as the single atom. The rewrite
+    * receives the RESOLVED epoch (the one-manifest-read-per-operation
+    * discipline — its tombstone/delta/data state is what the commit will
+    * retire, so the fold source and the committed epoch can never describe
+    * different states). The superseded data dir, folded fragments and
+    * delta batches stay on disk for [[vacuum]]: they are all
+    * version-enumerable, so no `retired` record is needed, and a probe
+    * planned pre-fold keeps executing against files that still exist (the
+    * Delta/Iceberg discipline).
     */
   private[graft] def compactToEpochDir(
-      s: SparkSession, defaultData: String, anchorPath: String,
-      reclaim: Boolean = false)(
+      s: SparkSession, defaultData: String, anchorPath: String)(
       rewrite: (String, String, Option[IndexManifest.Epoch]) => Unit): Unit = {
     val e = IndexManifest.next(s, anchorPath)
     val cur = e.data.getOrElse(defaultData)
@@ -834,59 +812,56 @@ object Tombstones {
     IndexManifest.commit(s, anchorPath,
       e.copy(data = Some(dest), tombstones = Vector.empty, deltas = Vector.empty,
         baseGen = e.baseGen + 1))
-    // deferred (default): the superseded dir/fragments/deltas are all
-    // version-enumerable, so vacuum reclaims them with its retention
-    // window — no retired record needed for the epoch-named families
-    if (reclaim)
-      bestEffortDelete(s, Seq(cur, sidecar(anchorPath), deltaDir(anchorPath)))
   }
 
   /** Compact a bucketed catalog-table index, folding tombstones and any
     * open update window in — the one rewrite all five bucketed families
     * (postings/term, winnow/fp, MinHash band/bk, phash band/bk,
-    * prefix/x) share. Mechanics mirror the original postings compaction:
-    * repartition on the DERIVED bucket id (hash pmod n — repartitioning
-    * on the bucket column itself pattern-matches the bucket spec and the
-    * planner elides the shuffle, leaving one file per task per bucket),
-    * AQE scoped off so its partition merging can't re-break the
-    * alignment, write the rewrite to a fresh location under a staging
-    * table (which validates the bucket layout), then swap the SERVING
-    * table to the new location with ONE metastore statement — `ALTER
-    * TABLE .. SET LOCATION` — and reclaim the superseded directory. The
-    * single-statement swap is the point: the previous DROP TABLE +
-    * RENAME pair had a crash window with NO serving table at all, while
-    * here every crash point resolves — before the statement the old
-    * location serves (the staged rewrite is reclaimable garbage a retry
-    * overwrites), after it the new one does (crash-injection pinned in
-    * TombstoneSpec via [[failBeforeTableSwap]]/[[failAfterTableSwap]]).
-    * The table's bucket spec lives on the SERVING entry and never
-    * changes; the staged files carry their bucket-id file names, so the
-    * relocated read keeps the exchange-free bucketed plan. (A
-    * manifest-pointer resolution was considered instead — but bucketed
-    * reads need the catalog's bucket spec, so the catalog entry IS this
-    * family's pointer; SET LOCATION is its one-statement commit.)
-    * After this, the table is byte-equivalent to a fresh build over the
-    * surviving rows: one file per bucket, no tombstones outstanding.
+    * prefix/x) share. `source` is the family's probe-visible view (base
+    * minus tombstones, superseded by the open window's latest rows), so
+    * the rewrite holds exactly what probes serve. Mechanics: repartition
+    * on the DERIVED bucket id (hash pmod n — repartitioning on the bucket
+    * column itself pattern-matches the bucket spec and the planner elides
+    * the shuffle, leaving one file per task per bucket), so each bucket's
+    * rows sit in exactly one shuffle partition. Adaptive execution may
+    * coalesce those partitions, but it only merges whole partitions, so a
+    * bucket never spans two tasks and the write still leaves one file per
+    * bucket; the session conf is left alone (probes on other threads plan
+    * against the same session). The rewrite goes to a fresh location
+    * under a staging table (which validates the bucket layout), then the
+    * SERVING table swaps to the new location with ONE metastore statement
+    * — `ALTER TABLE .. SET LOCATION`. The single-statement swap is the
+    * point: the previous DROP TABLE + RENAME pair had a crash window with
+    * NO serving table at all, while here every crash point resolves —
+    * before the statement the old location serves (the staged rewrite is
+    * reclaimable garbage a retry overwrites), after it the new one does
+    * (crash-injection pinned in TombstoneSpec via
+    * [[failBeforeTableSwap]]/[[failAfterTableSwap]]). The table's bucket
+    * spec lives on the SERVING entry and never changes; the staged files
+    * carry their bucket-id file names, so the relocated read keeps the
+    * exchange-free bucketed plan. (A manifest-pointer resolution was
+    * considered instead — but bucketed reads need the catalog's bucket
+    * spec, so the catalog entry IS this family's pointer; SET LOCATION is
+    * its one-statement commit.) After this, the table is
+    * byte-equivalent to a fresh build over the surviving rows: one file
+    * per bucket, no tombstones outstanding.
     *
     * `anchor`: the tombstone/manifest anchor. None (the location-anchored
-    * families) uses the table's current location and — in eager mode —
-    * RESETS that dead anchor after the swap; Some(path) (the search
-    * index, whose manifest also carries the stats pointer) keeps the
-    * anchor alive and commits a fragment-clearing epoch instead.
+    * families) uses the table's current location, which the fold moves:
+    * the carry epoch at the destination takes over the lineage. Some(path)
+    * (the search index, whose manifest also carries the stats pointer)
+    * keeps the anchor alive and commits a fragment-clearing epoch instead.
     *
-    * `reclaim` = false (the default) DEFERS reclaiming the superseded
-    * location: the old directory, its manifest, sidecar, and delta dirs
-    * stay on disk, recorded as `retired` in the carried/clearing epoch,
-    * so a probe DataFrame planned pre-fold executes successfully
-    * post-fold (the Delta/Iceberg discipline — the fold is invisible to
-    * in-flight readers); [[vacuum]] reclaims them honoring `keepEpochs`.
-    * `reclaim` = true restores the eager r17 behavior.
+    * Reclaim is deferred: the superseded location, its manifest, sidecar
+    * and delta dirs stay on disk, recorded as `retired` in the carry or
+    * clearing epoch, so a probe DataFrame planned pre-fold executes
+    * successfully post-fold (the Delta/Iceberg discipline — the fold is
+    * invisible to in-flight readers); [[vacuum]] reclaims them honoring
+    * `keepEpochs`.
     */
   def compactBucketedIndex(
-      s: SparkSession, table: String, idCol: String,
-      anchor: Option[String] = None,
-      sourceOverride: Option[DataFrame] = None,
-      reclaim: Boolean = false): Unit = {
+      s: SparkSession, table: String, source: DataFrame,
+      anchor: Option[String] = None): Unit = {
     val ident = s.sessionState.sqlParser.parseTableIdentifier(table)
     val meta = s.sessionState.catalog.getTableMetadata(ident)
     val spec = meta.bucketSpec.getOrElse(
@@ -895,24 +870,14 @@ object Tombstones {
     val nb = spec.numBuckets
     val bcol = spec.bucketColumnNames.head
     val cur = meta.location.toString
-    val anch = anchor.getOrElse(cur)
     val dest = cur.stripSuffix("/") + "__c"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prior = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, "false")
-    try {
-      // `sourceOverride` lets a family with richer visible-row semantics
-      // (the search index's base∪delta window) supply the rewrite source;
-      // the default is the tombstone-filtered base scan
-      val compacted = sourceOverride.getOrElse(filter(s.table(table), anch, idCol))
-        .repartition(nb, expr(s"pmod(hash($bcol), $nb)"))
-      s.sql(s"DROP TABLE IF EXISTS ${table}__c")
-      val w = compacted.write.mode("overwrite").bucketBy(nb, bcol)
-      spec.sortColumnNames.headOption
-        .fold(w)(sc => w.sortBy(sc, spec.sortColumnNames.tail: _*))
-        .option("path", dest)
-        .saveAsTable(s"${table}__c")
-    } finally s.conf.set(aqeKey, prior)
+    s.sql(s"DROP TABLE IF EXISTS ${table}__c")
+    val w = source.repartition(nb, expr(s"pmod(hash($bcol), $nb)"))
+      .write.mode("overwrite").bucketBy(nb, bcol)
+    spec.sortColumnNames.headOption
+      .fold(w)(sc => w.sortBy(sc, spec.sortColumnNames.tail: _*))
+      .option("path", dest)
+      .saveAsTable(s"${table}__c")
     // the base-generation bump must land BEFORE the catalog swap mutates
     // what old-epoch readers resolve: a crash between the swap and the
     // tombstone-clearing commit then leaves as-of reads REFUSING loudly
@@ -921,7 +886,7 @@ object Tombstones {
     // merely conservative — the table is unchanged, live probes are
     // exact, and as-of refuses an epoch it could still have served.
     // (Location anchors skip it: the anchor dies with the location.)
-    if (anchor.isDefined) bumpBaseGeneration(s, anch)
+    anchor.foreach(bumpBaseGeneration(s, _))
     // the ingest fence is LOGICAL index state, not location state: the
     // location-anchored fold must carry it to the new location or a
     // post-fold replay of an already-folded batch would re-ingest. It
@@ -936,33 +901,19 @@ object Tombstones {
     // as-of read of pre-fold "epoch 1" silently resolve a post-fold state
     // as an older epoch's — version continuation keeps every pre-fold
     // version a loud missing-epoch failure, and the bump records that the
-    // fold rewrote the base. The carry lands UNCONDITIONALLY whenever the
-    // old anchor lived (not only when a fence exists — review-found: an
-    // unfenced delete-maintained index would otherwise restart at v1/gen0
-    // on its next mutation and alias pre-fold version numbers); a
-    // never-mutated anchor has no epochs to alias and carries nothing.
+    // fold rewrote the base. The carry always lands: it also records the
+    // retirement, without which the superseded location would leak forever
+    // (vacuum only reclaims what an epoch names); a never-mutated old
+    // anchor has no epochs to alias and starts the destination at v1.
     if (anchor.isEmpty) {
       reset(s, dest)
       val old = IndexManifest.current(s, cur)
-      val carry = old match {
-        case Some(f) =>
-          Some(IndexManifest.Epoch(
-            version = f.version + 1, data = None, stats = None,
-            tombstones = Vector.empty, deltas = Vector.empty,
-            baseGen = f.baseGen + 1,
-            ingestHwm = f.ingestHwm, ingestStream = f.ingestStream,
-            retired = if (reclaim) Vector.empty else Vector(cur)))
-        case None if !reclaim =>
-          // never-mutated old anchor: nothing to carry, but the deferred
-          // retirement must still be RECORDED or the superseded location
-          // would leak forever (vacuum only reclaims what an epoch names)
-          Some(IndexManifest.Epoch(
-            version = 1L, data = None, stats = None,
-            tombstones = Vector.empty, deltas = Vector.empty,
-            baseGen = 1L, retired = Vector(cur)))
-        case None => None
-      }
-      carry.foreach(IndexManifest.commit(s, dest, _))
+      IndexManifest.commit(s, dest, IndexManifest.Epoch(
+        version = old.fold(1L)(_.version + 1), data = None, stats = None,
+        tombstones = Vector.empty, deltas = Vector.empty,
+        baseGen = old.fold(1L)(_.baseGen + 1),
+        ingestHwm = old.flatMap(_.ingestHwm), ingestStream = old.flatMap(_.ingestStream),
+        retired = Vector(cur)))
     }
     if (failBeforeTableSwap) {
       failBeforeTableSwap = false
@@ -983,22 +934,11 @@ object Tombstones {
     // retire the staging entry (external table: metadata-only, the files
     // it named are now the SERVING files)
     s.sql(s"DROP TABLE IF EXISTS ${table}__c")
-    if (reclaim) {
-      // eager mode: reclaim the superseded dir at the fold (in-flight
-      // pre-fold plans die loudly on the deleted path)
-      val oldLoc = new org.apache.hadoop.fs.Path(cur)
-      oldLoc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(oldLoc, true)
-    }
-    // the rewrite no longer contains the tombstoned rows: retire them — a
-    // location anchor dies with its location (its fence already carried
-    // to the destination above, pre-swap); an immutable anchor commits a
-    // clearing epoch (stats pointer rides along unchanged; the gen bump
-    // already landed above, pre-swap). Deferred mode leaves the old
-    // location, manifest, sidecar, and delta dirs for in-flight pre-fold
-    // plans — the `retired` record hands them to vacuum.
-    if (anchor.isEmpty) { if (reclaim) reset(s, cur) }
-    else clear(s, anch, bump = false,
-      retired = if (reclaim) Vector.empty else Vector(cur),
-      reclaim = reclaim)
+    // the rewrite no longer contains the tombstoned rows: a location
+    // anchor dies with its location (its fence and retirement already
+    // carried to the destination above, pre-swap); an immutable anchor
+    // commits a clearing epoch that records the retirement (stats pointer
+    // rides along unchanged; the gen bump already landed above, pre-swap)
+    anchor.foreach(clear(s, _, retired = Vector(cur)))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Tables
 import Runner.{drain, readFiles}
 
 /** Structured Streaming over the `events` table (SURVEY.md §2.9 build-out).
@@ -29,9 +30,9 @@ object EventsStream {
     * and pinning `ts` wrong silently corrupts values: an explicit LongType
     * over a µs-TIMESTAMP column hands back raw micros as longs, which the
     * old unconditional `ts div 1000` then shredded into 1970-range instants
-    * (round-10 testdata regeneration). So the schema is parameterized by a
-    * one-time batch footer probe, the same source of truth Tables.events
-    * branches on.
+    * (round-10 testdata regeneration). So the schema is parameterized by
+    * the footer probe ([[probeTsType]]), the same source of truth
+    * Tables.events branches on.
     */
   private def rawSchema(tsType: DataType): StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -41,83 +42,52 @@ object EventsStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Footer-resolved type of `ts`, via one batch metadata read under the
-    * nanos-as-long conf (schema resolution only — no data is scanned).
-    * LongType ⇔ the file carries TIMESTAMP(NANOS); µs files resolve to
-    * TimestampNTZ/Timestamp and ignore the conf entirely.
-    *
-    * Cached per directory for the JVM's lifetime: the footer is immutable
-    * for a given generated dataset, and re-probing on every
-    * [[readEvents]] call would pay a filesystem round trip per stream
-    * construction. The probe is EAGER by design — it runs at
-    * plan-construction time, so the input must exist before the stream is
-    * constructed. That is deliberate: the alternative (guessing a schema
-    * for a not-yet-written path) is exactly the silent-timestamp-corruption
-    * class the probe exists to prevent, so a missing path fails loudly here
-    * instead.
+  /** Footer-resolved type of `ts`, read on the driver through
+    * [[graft.sources.Sink.parquetSchema]] under [[Tables.withNanosLongConf]]
+    * (no Spark job, so nothing is cached: a rewritten input is re-resolved
+    * on the next call). LongType ⇔ the file carries TIMESTAMP(NANOS); µs
+    * files resolve to TimestampNTZ/Timestamp and ignore the conf. The probe
+    * is EAGER by design — it runs at plan-construction time, so the input
+    * must exist before the stream is constructed. That is deliberate: the
+    * alternative (guessing a schema for a not-yet-written path) is exactly
+    * the silent-timestamp-corruption class the probe exists to prevent, so
+    * a missing path fails loudly here instead.
     */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataType]()
-
   private def probeTsType(spark: SparkSession, dir: String): DataType =
-    tsTypeCache.computeIfAbsent(dir, _ =>
-      try withNanosLongConf(spark) {
-        spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-      } catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"EventsStream.readEvents: cannot probe $dir/events.parquet's " +
-            "footer — the source resolves events.ts's physical type at " +
-            "STREAM-CONSTRUCTION time (guessing would silently corrupt " +
-            "timestamps if wrong), so the input file must exist before the " +
-            s"stream is constructed. Underlying error: ${e.getMessage}", e)
-      })
+    try Tables.withNanosLongConf(spark) {
+      graft.sources.Sink.parquetSchema(spark, s"$dir/events.parquet")("ts").dataType
+    } catch { case e @ (_: java.io.IOException | _: IllegalArgumentException) =>
+      throw new IllegalStateException(
+        s"EventsStream.readEvents: cannot probe $dir/events.parquet's " +
+          "footer — the source resolves events.ts's physical type at " +
+          "STREAM-CONSTRUCTION time (guessing would silently corrupt " +
+          "timestamps if wrong), so the input file must exist before the " +
+          s"stream is constructed. Underlying error: ${e.getMessage}", e)
+    }
 
-  /** Unbounded view of the events table: readStream + schema-adaptive `ts`
-    * normalization to session-UTC TimestampType (identical branching to
-    * Tables.events — SchemaCanarySpec pins the batch side, StreamingSpec's
-    * stream==batch equalities pin this one). No conf mutation at plan time —
-    * the explicit schema defers resolution to the scan, which happens when
-    * the query STARTS; callers on nanos-era data wrap start()/
-    * awaitTermination() in [[withNanosLongConf]] (harmless on µs data).
-    * NOTE the construction-time footer probe (cached — [[probeTsType]]):
-    * the input path must be readable when this is called, not merely when
-    * the query starts.
+  /** Unbounded view of the events table: readStream + the `ts`
+    * normalization Tables.events applies ([[Tables.normalizeEventsTs]] —
+    * SchemaCanarySpec pins the batch side, StreamingSpec's stream==batch
+    * equalities pin this one). No conf mutation at plan time — the explicit
+    * schema defers resolution to the scan, which happens when the query
+    * STARTS; callers on nanos-era data wrap start()/awaitTermination() in
+    * [[withNanosLongConf]] (harmless on µs data). NOTE the
+    * construction-time footer probe ([[probeTsType]]): the input path must
+    * be readable when this is called, not merely when the query starts.
     */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = probeTsType(spark, dir)
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
     // glob rather than literal file path: the streaming file source derives
     // its basePath from the non-glob prefix, and basePath must be a directory
-    val raw = spark.readStream
-      .schema(rawSchema(tsType))
-      .parquet(s"$dir/events.parque[t]")
-    tsType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case TimestampType    => raw
-      case other =>
-        throw new IllegalStateException(
-          s"events.ts: unsupported parquet-resolved type $other")
-    }
-  }
+    Tables.normalizeEventsTs(spark.readStream
+      .schema(rawSchema(probeTsType(spark, dir)))
+      .parquet(s"$dir/events.parque[t]"))
 
-  /** Run `f` (which must start AND await the streaming query) with the
-    * nanos-as-long legacy conf set, restoring the prior value afterwards —
-    * the same set/restore discipline as Tables.events. A streaming query
-    * clones the session conf when it starts, so scoping around
-    * start()/awaitTermination() is sufficient, and any later nanos-typed
-    * parquet read in this session fails loudly again instead of silently
-    * yielding longs.
+  /** [[Tables.withNanosLongConf]], for stream callers: wrap the query's
+    * start() AND awaitTermination() in it (a streaming query clones the
+    * session conf when it starts).
     */
-  def withNanosLongConf[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try f
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  def withNanosLongConf[T](spark: SparkSession)(f: => T): T =
+    Tables.withNanosLongConf(spark)(f)
 
   /** The streaming transform: watermarked hourly tumbling counts per type. */
   def tumblingCounts(events: DataFrame): DataFrame =
@@ -302,21 +272,16 @@ object EventsStream {
     * escape hatch for JDBC/MERGE-style destinations at fleet scale.
     */
   def runForeachBatchPartitioned(
-      spark: SparkSession, dir: String, outPath: String, checkpoint: String): Unit = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try withNanosLongConf(spark) {
+      spark: SparkSession, dir: String, outPath: String, checkpoint: String): Unit =
+    withNanosLongConf(spark) {
       drain(readEvents(spark, dir), checkpoint) { (batch, _) =>
+        // the dynamic mode rides on the write, not on the shared session
         batch
           .withColumn("day", date_trunc("day", col("ts")))
-          .write.mode("overwrite").partitionBy("day").parquet(outPath)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("day").parquet(outPath)
       }
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
-  }
 
   /** Streaming as-of enrichment — the standard production shape for
     * "attach the dimension version that was current AT THE EVENT'S TIME":

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Sink
+import graft.streaming.EventsStream
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -439,6 +440,63 @@ class SinkSpec extends SparkSpec {
     // without it, Spark and the resolver both refuse the nanos footer
     intercept[Throwable](spark.read.parquet(nanos.toString))
     intercept[Throwable](Sink.parquetSchema(spark, nanos.toString))
+  }
+
+  test("Tables.events and EventsStream.readEvents agree on both ts encodings, and a rewritten input is re-resolved") {
+    // an events file with ts as TIMESTAMP(MICROS) or TIMESTAMP(NANOS); the
+    // nanos values carry a sub-µs part that both readers truncate away
+    def writeEvents(dir: Path, unit: TimeUnit): Unit = {
+      val nanos = unit == TimeUnit.NANOS
+      val schema = Types.buildMessage()
+        .required(INT64).named("event_id")
+        .optional(INT64).as(LogicalTypeAnnotation.timestampType(nanos, unit)).named("ts")
+        .optional(INT64).named("user_id")
+        .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type")
+        .optional(DOUBLE).named("value")
+        .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+        .named("schema")
+      var id = 0L
+      writeBare(dir.resolve("events.parquet"), schema, 3) { g =>
+        id += 1
+        val us = 1600000000000000L + id * 3600000000L
+        g.add("event_id", id); g.add("ts", if (nanos) us * 1000L + 789L else us)
+        g.add("user_id", id % 2); g.add("event_type", "view")
+        g.add("value", id * 1.5); g.add("props", "{}")
+      }
+    }
+    def batch(dir: Path): Seq[Row] =
+      Tables.events(spark, dir.toString).orderBy("event_id").collect().toSeq
+    var runs = 0
+    def streamed(dir: Path): Seq[Row] = {
+      runs += 1
+      EventsStream.runOnce(EventsStream.readEvents(spark, dir.toString),
+        s"events_ts_agree_$runs", "append").orderBy("event_id").collect().toSeq
+    }
+    def sourceTsType(dir: Path): DataType =
+      EventsStream.readEvents(spark, dir.toString).queryExecution.analyzed
+        .collectLeaves().head.output.find(_.name == "ts").get.dataType
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(nanosKey)
+    val us = Files.createTempDirectory("graft-events-us")
+    val ns = Files.createTempDirectory("graft-events-ns")
+    writeEvents(us, TimeUnit.MICROS)
+    writeEvents(ns, TimeUnit.NANOS)
+    assert(batch(us).size == 3 && batch(ns) == batch(us))
+    assert(Tables.events(spark, ns.toString).schema("ts").dataType == TimestampType)
+    Seq(us, ns).foreach(d => assert(streamed(d) == batch(d), d))
+    assert(sourceTsType(us) != LongType)
+    // the same directory rewritten from µs to nanos: the next stream
+    // resolves the new footer, not a remembered type
+    Files.list(us).iterator().asScala.toList.foreach(Files.delete)
+    writeEvents(us, TimeUnit.NANOS)
+    assert(sourceTsType(us) == LongType)
+    assert(streamed(us) == batch(ns))
+    // a missing input fails loudly at stream construction
+    val err = intercept[IllegalStateException](
+      EventsStream.readEvents(spark, us.resolve("missing").toString))
+    assert(err.getMessage.contains("cannot probe"), err.getMessage)
+    // both readers leave the nanos conf as they found it: not set
+    assert(!spark.conf.getAll.contains(nanosKey))
   }
 
   /** The column types a Spark writer produces that the sink must convert. */

@@ -99,6 +99,9 @@ class StreamingSpec extends SparkSpec {
     val days = new java.io.File(s"$base/out").listFiles()
       .count(_.getName.startsWith("day="))
     assert(days >= 1)
+    // the dynamic overwrite mode rides on the write, not on the shared
+    // session (getOption would report the default of a never-set key)
+    assert(!spark.conf.getAll.contains("spark.sql.sources.partitionOverwriteMode"))
   }
 
   test("mapGroupsWithState running counts equal batch per-user counts; state bounded") {

@@ -1203,7 +1203,7 @@ class TombstoneSpec extends SparkSpec {
     assert(err.getMessage.contains("generation"), err.getMessage)
     // finishing the interrupted step (the clearing commit — the gen bump
     // already landed pre-swap) changes nothing
-    graft.sources.Tombstones.clear(spark, path, bump = false)
+    graft.sources.Tombstones.clear(spark, path)
     assert(graft.sources.Tombstones.idSet(spark, path).isEmpty)
     assert(sorted(SearchQueries.bm25TopkFromIndex(spark, tbl, path)) == probed)
   }
@@ -2656,7 +2656,7 @@ class TombstoneSpec extends SparkSpec {
     wl.release(spark, anchor, won.peek())
   }
 
-  test("fold-deferred reclaim: a probe planned pre-fold executes post-fold; vacuum reclaims retired state; eager stays available") {
+  test("fold-deferred reclaim: a probe planned pre-fold executes post-fold; vacuum reclaims retired state") {
     import graft.operators.{DedupQueries, SimilarityQueries}
     val t = graft.sources.Tombstones
     def dirExists(p: String) =
@@ -2722,14 +2722,6 @@ class TombstoneSpec extends SparkSpec {
     assert(dirExists(loc2))
     assert(t.vacuum(spark, loc3) >= 1L)
     assert(!dirExists(loc2) && dirExists(loc3))
-    // ---- eager mode stays available: reclaim = true restores the r17
-    // fold-time delete
-    val ip2 = s"$tmp/ivf_eager"
-    SimilarityQueries.writeIvfIndex(spark, sfDir, ip2)
-    SimilarityQueries.deleteFromIvfIndex(spark, ip2, deleted.take(1))
-    SimilarityQueries.compactIvfIndex(spark, ip2, reclaim = true)
-    assert(!dirExists(ip2), "eager fold must reclaim at the fold")
-    ()
   }
 
   test("search stats track the SERVE set: sub-floor updates and removed-id redeliveries never inflate n_docs") {
